@@ -86,7 +86,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * find `events.*.*` over the derived index, then the full render
-    * pipeline (semi-join → dedup → rollup → gap-fill).
+    * pipeline (path filter → dedup → rollup → gap-fill).
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compiler.Tagged
-import graft.engine.{Autocomplete, FindCache, Finder, Guards, Limiter, Render, SeriesAssembly}
+import graft.engine.{Autocomplete, FindCache, Finder, Guards, Limiter, Render, SeriesAssembly, Store}
 import graft.metrics.{SparkReadStats, Telemetry}
 import graft.model.{FeatureFlags, TimeFrame}
 import graft.rollup.Rules
@@ -346,9 +346,11 @@ final class HttpApi(
     case None => HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
 
-  private def points: DataFrame = spark.read.parquet(s"$tablesDir/points")
-  private def index: DataFrame = spark.read.parquet(s"$tablesDir/index")
-  private def tagsTable: DataFrame = spark.read.parquet(s"$tablesDir/tags")
+  // opened per use with the fixed schemas (no inference job), so each
+  // request lists the store afresh and sees the latest micro-batch
+  private def points: DataFrame = Store.points(spark, tablesDir)
+  private def index: DataFrame = Store.index(spark, tablesDir)
+  private def tagsTable: DataFrame = Store.tags(spark, tablesDir)
 
   def address: String = {
     val scheme = if (cfg.tls.isDefined) "https" else "http"
@@ -639,9 +641,11 @@ final class HttpApi(
       reply(ex, 400, "text/plain", "invalid time range\n".getBytes); return
     }
 
-    val pts = points
-    val idx = index
-    val tags = tagsTable
+    // opened on first use: a plain render never opens tags, a cached
+    // find never opens index
+    lazy val pts = points
+    lazy val idx = index
+    lazy val tags = tagsTable
     val useCache = !truthy(q.first("noCache"))
     var anyCacheHit = false
     var maxTtl = 0
@@ -1018,8 +1022,9 @@ final class HttpApi(
       // evalMatrixGraphite: the plain-from-tagged escape hatch
       // (graphite{target="…"} matcher sets route to the PLAIN index;
       // the store's one points table holds both path forms)
+      val pts = points
       graft.prom.PromQL.evalMatrixGraphite(
-          points, index, points, tagsTable, expr, start, end, step)
+          pts, index, pts, tagsTable, expr, start, end, step)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     }
     reply(ex, 200, "application/json",
@@ -1045,8 +1050,9 @@ final class HttpApi(
       e => throw new IllegalArgumentException(e), identity)
     // render/query limiter, no user override — see promQueryRange
     val rows = cfg.limits.render.withSlot(cfg.limits.waitMs) {
+      val pts = points
       graft.prom.PromQL.evalMatrixGraphite(
-          points, index, points, tagsTable, expr, time, time, 1L)
+          pts, index, pts, tagsTable, expr, time, time, 1L)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     }
     // sort()/sort_desc()/sort_by_label(_desc) order the instant
@@ -1224,12 +1230,14 @@ final class HttpApi(
     // remote read is a data read: render/query limiter, like the
     // reference's RemoteReadConcurrencyLimit seam
     val out = new Wire.Buf
+    lazy val stored = points
+    lazy val tags = tagsTable
     cfg.limits.render.withSlot(cfg.limits.waitMs) {
       queries.result().foreach { q =>
         val startS = Math.floorDiv(q.startMs, 1000L)
         val endS = Math.floorDiv(q.endMs + 999L, 1000L)
         val pts = graft.prom.Prom.remoteReadSelect(
-          points, tagsTable, q.matchers, startS, endS)
+          stored, tags, q.matchers, startS, endS)
         val rows = pts.collect()
           .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         // QueryResult{timeseries=1}; TimeSeries{labels=1, samples=2};

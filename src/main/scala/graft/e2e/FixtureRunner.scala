@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compiler.Tagged
-import graft.engine.{Autocomplete, Finder, Guards, Limiter, Render}
+import graft.engine.{Autocomplete, Finder, Guards, Limiter, Render, Store}
 import graft.model.TimeFrame
 import graft.rollup.Rules
 import graft.streaming.Ingest
@@ -104,9 +104,9 @@ object FixtureRunner {
       s"$dir/t"
     }
 
-    def points: DataFrame = spark.read.parquet(s"$tablesDir/points")
-    def index: DataFrame = spark.read.parquet(s"$tablesDir/index")
-    def tagsTable: DataFrame = spark.read.parquet(s"$tablesDir/tags")
+    def points: DataFrame = Store.points(spark, tablesDir)
+    def index: DataFrame = Store.index(spark, tablesDir)
+    def tagsTable: DataFrame = Store.tags(spark, tablesDir)
 
     /** Run every check under one config variant; returns mismatches.
       * When the variant configures `[common.find-cache]`, one cache

@@ -96,13 +96,15 @@ object GraphiteTables {
       // 4–7× — caught by the untouched-median control). One partition
       // per advisory chunk of the SOURCE dir, clamped to
       // [1, parallelism]; coalesce never widens, so a genuinely large
-      // store keeps its parallel layout.
-      val memoParts = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        graft.Tuning.dirBytes(dir, spark) / graft.Tuning.AdvisoryPartitionBytes))
-        .toInt
-      val out = derived.computeIfAbsent(
-        key, _ => graft.Lineage.truncate(build.coalesce(memoParts), eager = false))
+      // store keeps its parallel layout. Sized on a miss only: the dir
+      // walk is a recursive FS listing that a memo hit must not pay.
+      val out = derived.computeIfAbsent(key, _ => {
+        val memoParts = math.max(1L, math.min(
+          spark.sparkContext.defaultParallelism.toLong,
+          graft.Tuning.dirBytes(dir, spark) / graft.Tuning.AdvisoryPartitionBytes))
+          .toInt
+        graft.Lineage.truncate(build.coalesce(memoParts), eager = false)
+      })
       // close the insert-after-bump window: a bump whose invalidator
       // ran between this thread's key computation and the insert
       // completing would otherwise leave this old-epoch entry

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.TimeFrame
@@ -12,19 +13,19 @@ import graft.time.StepMath
   * `render/data/query.go:141-282` + `helper/rollup/rules.go:370-502` +
   * `helper/point/func.go:29-118`.
   *
-  * Pipeline: points ⋉ broadcast(found paths)  →  version dedup
-  * (max version wins per (path, time))  →  time-bucket rollup
-  * (`t' = t - t % step`, per-metric aggregation)  →  gap-fill onto the
-  * regular `[start, stop)` grid  →  alias fan-out.
+  * Pipeline: points filtered to the found paths (`path IN (…)`)  →
+  * version dedup (max version wins per (path, time))  →  time-bucket
+  * rollup (`t' = t - t % step`, per-metric aggregation)  →  gap-fill
+  * onto the regular `[start, stop)` grid  →  alias fan-out.
   *
   * Scale notes (100 TB): the found-path set is bounded by admission
-  * control (`max-metrics-per-target`), so the semi-join and the alias
-  * join broadcast; the only wide shuffle is the (path, bucket)
-  * aggregation, which Catalyst executes as partial+final
-  * HashAggregate — the distributed property the reference bought with
-  * its `-Resample` ClickHouse pushdown (`doc/aggregation.md:96-140`).
-  * The gap-fill grid is bounded by `maxDataPoints` per series, never a
-  * global cross product.
+  * control (`max-metrics-per-target`), so the path filter is a literal
+  * IN list and the alias join broadcasts; the only data-sized shuffle
+  * is the (path, bucket) aggregation, which Catalyst executes as
+  * partial+final HashAggregate — the distributed property the
+  * reference bought with its `-Resample` ClickHouse pushdown
+  * (`doc/aggregation.md:96-140`). The gap-fill grid is bounded by
+  * `maxDataPoints` per series, never a global cross product.
   */
 object Render {
 
@@ -170,12 +171,18 @@ object Render {
     collected.select(col("path"), col("cell").as("time"), agged.as("value"))
   }
 
-  /** Fetch one function group: broadcast semi-join (J1,
+  /** Fetch one function group: found-path filter (J1,
     * `render/data/query.go:428-433`) + window filter + version
     * resolution (per `versionMode`) + rollup, with from/until
     * alignment (W2, `query.go:417-420`). `cellPrecision` is the
     * storage rule precision (pre-maxDataPoints inflation) that
     * [[VersionMode.MergedCells]] merges on.
+    *
+    * The group's paths are already a driver-side list, so the filter
+    * is a `path IN (…)` predicate (an InSet past ten paths) — the
+    * reference's `Path IN (…)` WHERE clause. Parquet gets it pushed
+    * down, and it costs no query stage, where a semi-join against the
+    * same list as a relation costs a broadcast stage per request.
     */
   def fetchGroup(
       points: DataFrame,
@@ -184,12 +191,8 @@ object Render {
       versionMode: VersionMode = VersionMode.DedupExact,
       cellPrecision: Long = 0L): DataFrame = {
     val (from, until) = StepMath.alignFromUntil(tf.from, tf.until, group.step)
-    val spark = points.sparkSession
-    import spark.implicits._
-    val paths = spark.createDataset(group.paths).toDF("path")
     val filtered = points
-      .where(col("time").between(from, until))
-      .join(broadcast(paths), Seq("path"), "left_semi")
+      .where(col("time").between(from, until) && col("path").isin(group.paths: _*))
     versionMode match {
       case VersionMode.DedupExact => dedupAndRollup(filtered, group.step, group.func)
       case VersionMode.Raw        => rollup(filtered, group.step, group.func)
@@ -239,23 +242,22 @@ object Render {
     * set. Implemented as the gap-fill grid left-join itself — paths
     * with no data fall out with null values — so the anti-join is
     * implicit; this helper filters either behavior.
+    *
+    * Without append, a series whose grid is all null is dropped; a
+    * stored NaN is a point (`count` skips only nulls), so an all-NaN
+    * series stays. The per-path count is a window over the input, not
+    * an aggregate joined back to it, so the render subtree appears in
+    * the plan once and costs one shuffle.
     */
   def withEmptySeries(
       gapFilled: DataFrame,
       appendEmpty: Boolean): DataFrame =
     if (appendEmpty) gapFilled
-    else {
-      // drop series that are entirely null (had no points at all);
-      // no broadcast hint — the path set is find-result-sized in the
-      // collected variant but unbounded in renderScalable, so AQE
-      // picks broadcast vs shuffle by actual size
-      val counts = gapFilled
-        .groupBy("path")
-        .agg(count(col("value")).as("n"))
-        .where(col("n") > 0)
-        .select("path")
-      gapFilled.join(counts, Seq("path"), "left_semi")
-    }
+    else
+      gapFilled
+        .withColumn("n_present", count(col("value")).over(Window.partitionBy("path")))
+        .where(col("n_present") > 0)
+        .drop("n_present")
 
   /** Hot ∪ cold union (S5/J3, `render/data/data.go:94-130`): recent
     * not-yet-compacted points (the carbonlink replacement — in Spark,

@@ -1104,11 +1104,13 @@ object PromQL {
     * to match exactly that marker — then the ordinary [[evalMatrix]]
     * runs. Mixed expressions (a plain-from-tagged operand joined
     * against a native tagged selector) work unchanged; expressions
-    * with no detected route take the exact [[evalMatrix]] path.
+    * with no detected route take the exact [[evalMatrix]] path — and
+    * never evaluate `plainIndex`, so a caller that opens it per
+    * request pays for the open only when a route is detected.
     */
   def evalMatrixGraphite(
       plainPoints: DataFrame,
-      plainIndex: DataFrame,
+      plainIndex: => DataFrame,
       points: DataFrame,
       tags: DataFrame,
       expr: Expr,
@@ -1120,11 +1122,12 @@ object PromQL {
       .flatMap(s => PlainFromTagged.detect(s.matchers).map(s -> _))
     if (routed.isEmpty)
       return evalMatrix(points, tags, expr, start, end, step0, lookbackSec)
+    val index = plainIndex
     var pts = points.select("path", "value", "time", "date", "version")
     var tg = tags
     val rewrite = routed.zipWithIndex.map { case ((sel, route), i) =>
       val marker = s"__pft_$i=1"
-      val found = graft.engine.Finder.find(plainIndex, route.target)
+      val found = graft.engine.Finder.find(index, route.target)
         .where(col("is_leaf")).select("path")
       val synth = found.select(
         col("path").as("__plain"),

@@ -1,0 +1,89 @@
+package graft.engine
+
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
+import graft.model.TimeFrame
+import graft.rollup.{AggFunc, Rules}
+import graft.sinks.Series
+
+/** Empty-series rule (W4, `render/data/ch_response.go:98-107,203`) on
+  * hand-computed rows, through both render shapes and their response
+  * assembly:
+  *   - a found path with no point in the window is dropped unless
+  *     `append-empty-series` is set, and then emits the all-NaN grid
+  *     under the literal function `any`;
+  *   - a stored NaN is a point: a path whose values are all NaN is
+  *     kept either way (only all-null, i.e. absent, series drop).
+  */
+class EmptySeriesSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+
+  private val t0 = 1704067200L // 10 s aligned
+  private val rules = Rules(Nil, defaultPrecision = 10L, defaultFunction = Some(AggFunc.Avg))
+  // [t0, t0+20] at step 10: grid t0, t0+10, t0+20
+  private val tf = TimeFrame(t0, t0 + 20)
+  private val found = Seq("es.gone", "es.live", "es.nan")
+
+  private lazy val points: DataFrame = {
+    import spark.implicits._
+    Seq(
+      ("es.live", 1.0, t0, 1L),
+      ("es.live", 2.0, t0 + 10, 1L),
+      ("es.nan", Double.NaN, t0, 1L),
+      ("es.nan", Double.NaN, t0 + 10, 1L),
+      // outside the window: found by the index, absent from the render
+      ("es.gone", 5.0, t0 - 100, 1L)
+    ).toDF("path", "value", "time", "version")
+  }
+
+  private def classic(appendEmpty: Boolean): Seq[Series] = {
+    val targets = Seq("es.*" -> found.map(p => (p, p)))
+    val out = Render.renderMulti(points, targets, tf, rules, now = t0 + 20,
+      appendEmpty = appendEmpty)
+    SeriesAssembly.collect(out, targets, tf, rules, now = t0 + 20, consolidateBy = None)
+  }
+
+  private def scalable(appendEmpty: Boolean): Seq[Series] = {
+    import spark.implicits._
+    val meta = Render.scalableMeta(found.toDF("path"), tf, rules, now = t0 + 20)
+    val filled = Render.renderScalableWithMeta(points, meta, tf, rules, now = t0 + 20,
+      appendEmpty = appendEmpty)
+    SeriesAssembly.assembleScalable(filled, meta, "es.*", tagged = false)
+  }
+
+  private def shape(s: Seq[Series]): Seq[(String, String, Long, Long, Seq[String])] =
+    s.map(x => (x.name, x.function, x.start, x.step, x.values.toSeq.map(_.toString)))
+
+  private val nan3 = Seq("NaN", "NaN", "NaN")
+  private val live = ("es.live", "avg", t0, 10L, Seq("1.0", "2.0", "NaN"))
+  private val allNan = ("es.nan", "any", t0, 10L, nan3)
+
+  for ((name, run) <- Seq("renderMulti" -> classic _, "renderScalable" -> scalable _)) {
+    test(s"$name: a found path with no point in the window is dropped without append") {
+      assert(shape(run(false)) == Seq(live, allNan))
+    }
+
+    test(s"$name: append-empty-series emits it as the all-NaN grid under `any`") {
+      assert(shape(run(true)) == Seq(("es.gone", "any", t0, 10L, nan3), live, allNan))
+    }
+  }
+
+  test("withEmptySeries keeps NaN-valued paths and drops only all-null ones") {
+    import spark.implicits._
+    val filled = Seq[(String, Long, Option[Double])](
+      ("a", t0, None), ("a", t0 + 10, None),
+      ("b", t0, Some(Double.NaN)), ("b", t0 + 10, None),
+      ("c", t0, None), ("c", t0 + 10, Some(3.0))
+    ).toDF("path", "time", "value")
+    def rows(appendEmpty: Boolean): Seq[String] =
+      Render.withEmptySeries(filled, appendEmpty).collect()
+        .map(r => s"${r.getString(0)}@${r.getLong(1) - t0}=${Option(r.get(2)).getOrElse("null")}")
+        .sorted.toSeq
+    assert(rows(appendEmpty = false) ==
+      Seq("b@0=NaN", "b@10=null", "c@0=null", "c@10=3.0"))
+    assert(rows(appendEmpty = true) ==
+      Seq("a@0=null", "a@10=null", "b@0=NaN", "b@10=null", "c@0=null", "c@10=3.0"))
+  }
+}
