@@ -294,7 +294,7 @@ object Bench {
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"BENCH ${i + 1}/${chunks.size} {$c}")
     }
-    val headline = Seq("g_render_headline", "g_render_headline_scalable", "q1_agg")
+    val headline = Seq("g_render_headline", "q1_agg")
     val slowest = timings.toSeq.sortBy(-_._2).take(8).map(_._1)
     val sel = (headline ++ slowest).distinct.filter(timings.contains)
     val hq = sel.map(k => s"${jstr(k)}:${num(timings(k))}").mkString("{", ",", "}")

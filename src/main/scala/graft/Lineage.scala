@@ -41,11 +41,6 @@ object Lineage {
     */
   val RequireDurableKey = "graft.checkpoint.requireDurable"
 
-  /** Cut `df`'s lineage. Reliable (`checkpoint`) when
-    * [[ConfKey]] is set on the session, local otherwise. With
-    * `eager = false` the cut is planned but materialization happens
-    * on the first action, so plan-builder APIs stay lazy.
-    */
   /** The root we last passed to `setCheckpointDir`, PER SparkContext —
     * compared against the raw conf value, NOT
     * `SparkContext.getCheckpointDir` (which returns the
@@ -87,13 +82,29 @@ object Lineage {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
 
+  /** Cut `df`'s lineage. Reliable (`checkpoint`) when
+    * [[ConfKey]] is set on the session, local otherwise. With
+    * `eager = false` the cut is planned but materialization happens
+    * on the first action, so plan-builder APIs stay lazy.
+    *
+    * A deferred reliable cut persists `df` first. The checkpoint RDD
+    * itself is not persisted, so without it every branch of the first
+    * action that reads the cut recomputes `df`, and the checkpoint
+    * write after that action computes it once more. The local cut
+    * needs no such step: `localCheckpoint` persists its blocks. The
+    * persisted copy stays cached for the session, like the local
+    * cut's blocks do.
+    */
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         if (appliedRoot.put(sc, dir) != dir) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
+        if (eager) df.checkpoint(eager = true)
+        // a fresh Dataset over the same plan, so its physical plan
+        // reads the persisted copy even if `df`'s was built already
+        else df.persist().toDF(df.columns: _*).checkpoint(eager = false)
       case None =>
         val sc = spark.sparkContext
         val requireDurable = spark.conf
@@ -106,28 +117,20 @@ object Lineage {
     }
   }
 
-  /** Session-conf key: set `"true"` to restore materialize-NOW
-    * semantics at the [[truncateDeferred]] call sites (the round-17
-    * A/B handle; the cut itself is identical either way).
+  /** [[truncate]] with DEFERRED materialization: the cut is planned
+    * at construction and materializes inside the first consuming
+    * action instead of as its own job. Round-17 job-count measurement
+    * (PhaseProbe, sf0.1): the multi-cut operators spend most of their
+    * wall time in per-job scheduling barriers (d_curate 17 jobs /
+    * 1.76 s, d_simhash_recall_banded 21 / 3.06 s, ~80–150 ms floor per
+    * job locally), and every eager cut is one extra job; the r17 A/B
+    * against eager cuts measured 0.78–0.94× wall time. Deferral is
+    * safe wherever the consumers are a DAG: both cut kinds persist
+    * their relation, so branches inside one action compute it once.
+    * Sites where a driver-side loop or collect depends on
+    * materialize-NOW keep the explicit eager call.
     */
-  val EagerKey = "graft.lineage.eager"
-
-  /** [[truncate]] with DEFERRED materialization by default: the cut is
-    * planned at construction and materializes inside the first
-    * consuming action instead of as its own job. Round-17 job-count
-    * measurement (PhaseProbe, sf0.1): the multi-cut operators spend
-    * most of their wall time in per-job scheduling barriers
-    * (d_curate 17 jobs / 1.76 s, d_simhash_recall_banded 21 / 3.06 s,
-    * ~80–150 ms floor per job locally), and every eager cut is one
-    * extra job. Deferral is safe wherever the consumers are a DAG —
-    * the checkpoint RDD is persisted on first compute, so multiple
-    * branches inside one action still compute it once. Sites where a
-    * driver-side loop or collect depends on materialize-NOW keep the
-    * explicit eager call.
-    */
-  def truncateDeferred(df: DataFrame): DataFrame =
-    truncate(df, eager = df.sparkSession.conf
-      .getOption(EagerKey).exists(_.equalsIgnoreCase("true")))
+  def truncateDeferred(df: DataFrame): DataFrame = truncate(df, eager = false)
 
   /** Chained form: `df.truncateLineage()` ≡ `Lineage.truncate(df)`. */
   implicit class TruncateOps(private val df: DataFrame) extends AnyVal {

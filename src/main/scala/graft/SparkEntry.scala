@@ -206,34 +206,12 @@ object SparkEntry {
         .select(col("path"), col("time"), round(col("value"), 4).as("value"))
     }),
 
-    // The distributed render at the headline shape (same oracle).
-    "g_render_headline_scalable" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .where(col("is_leaf")).select("path")
-      Render.renderScalable(points, found, TimeFrame(MFrom, MUntil, maxDataPoints = 100),
-        uniformRules, now = MUntil, appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
-
     "g_render_rules" -> ((s, dir) => {
       val points = GraphiteTables.points(s, dir)
       val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
         .select("path").collect().map(_.getString(0)).toSeq
       Render.render(points, found, TimeFrame(WFrom, WUntil), testRules, now = WUntil,
         appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
-
-    // Fully-distributed render: found paths stay a DataFrame (no
-    // driver collect, single plan for heterogeneous steps/functions).
-    // Same oracle as g_render_rules — semantics must be identical.
-    "g_render_scalable" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .where(col("is_leaf")).select("path")
-      Render.renderScalable(points, found, TimeFrame(WFrom, WUntil), testRules,
-        now = WUntil, appendEmpty = true)
         .select(col("path"), col("time"), round(col("value"), 4).as("value"))
     }),
 
@@ -3948,16 +3926,6 @@ object SparkEntry {
         renderGroupSql("avg(value)", step, MFrom, MUntil, "")
       },
 
-      "g_render_scalable" ->
-        (renderGroupSql("sum(value)", 120, WFrom, WUntil,
-          "WHERE path LIKE 'events.purchase.%'") +
-          " UNION ALL " +
-          renderGroupSql("max(value)", 60, WFrom, WUntil,
-            "WHERE path LIKE 'events.error.%'") +
-          " UNION ALL " +
-          renderGroupSql("avg(value)", 60, WFrom, WUntil,
-            "WHERE path NOT LIKE 'events.purchase.%' AND path NOT LIKE 'events.error.%'")),
-
       "g_render_rules" ->
         (renderGroupSql("sum(value)", 120, WFrom, WUntil,
           "WHERE path LIKE 'events.purchase.%'") +
@@ -4052,11 +4020,6 @@ object SparkEntry {
       "g_seriesbytag_costed" ->
         ("SELECT DISTINCT 'events?type=click&user=' || user_id AS path " +
           "FROM events WHERE event_type = 'click' AND regexp_matches(CAST(user_id AS VARCHAR), '1')"),
-
-      "g_render_headline_scalable" -> {
-        val step = graft.time.StepMath.aggregatedStep(60, MFrom, MUntil, 100)
-        renderGroupSql("avg(value)", step, MFrom, MUntil, "")
-      },
 
       "g_seriesbytag" ->
         ("""SELECT DISTINCT 'events?type=click&user=' || user_id AS path,

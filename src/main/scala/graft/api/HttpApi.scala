@@ -128,10 +128,6 @@ object HttpApi {
       httpWorkers: Int = 8,
       limits: Limits = Limits(),
       tls: Option[Tls] = None,
-      // found-path count above which /render switches to the
-      // fully-distributed plan (no driver-side path list — SURVEY §7.4
-      // risk 6); 0 disables the fallback (classic collected path only)
-      renderScalableThreshold: Int = 0,
       // minimum seconds between store-size re-stats for the serving
       // session's shuffle-ceiling re-derivation (graft.Tuning.Retuner)
       retuneIntervalSec: Long = 60L,
@@ -649,7 +645,6 @@ final class HttpApi(
     val useCache = !truthy(q.first("noCache"))
     var anyCacheHit = false
     var maxTtl = 0
-    var anyScalable = false
     // accumulated find-phase wall time, the `requests_finder` split
     // (`metrics.go:464-474`: start→fetch is finder, fetch→end is fetch)
     var finderNanos = 0L
@@ -679,13 +674,9 @@ final class HttpApi(
 
       reqs.groupBy(r => consolidateOf(r._5)).toSeq.sortBy(_._1).flatMap {
         case (consolidate, subReqs) =>
-          // Per target: EITHER the collected (path, display) pairs —
-          // the reference-faithful path (`render/handler.go` collects
-          // found metrics on the coordinator too) — OR, when the found
-          // set exceeds `renderScalableThreshold`, the found-path
-          // DataFrame itself for the fully-distributed plan (SURVEY
-          // §7.4 risk 6: no driver-side path materialization).
-          val thr = cfg.renderScalableThreshold
+          // Per target: the found (path, display) pairs, collected on
+          // the driver like the reference (`render/handler.go`), then
+          // one render over every target of the group.
           val findT0 = System.nanoTime()
           // render-find cache attribution: short pair for small recent
           // windows, default otherwise (`render/handler.go:45-56`)
@@ -699,101 +690,45 @@ final class HttpApi(
               case (false, false) => tmm.defaultCacheMisses.inc()
             }
           }
-          val resolved: Seq[(String, Either[Seq[(String, String)], DataFrame])] =
+          val targets: Seq[(String, Seq[(String, String)])] =
             subReqs.map(_._1).distinct.map { t =>
-              val isTagged = t.startsWith("seriesByTag(")
-              def foundDf: DataFrame =
-                if (isTagged)
+              def compute: Seq[(String, String)] =
+                if (t.startsWith("seriesByTag("))
                   Finder.findTagged(tags, t, cfg.flags, tagsMinInQuery = cfg.tagsMinInQuery)
-                    .select("path")
+                    .select("path").collect().toSeq
+                    .map { r => val p = r.getString(0); (p, Tagged.decodePath(p)) }
                 else
                   Finder.find(idx, t, from, until,
                     wildcardMinDistance = cfg.wildcardMinDistance)
-                    .where(col("is_leaf")).select("path")
-              def toPair(p: String): (String, String) =
-                if (isTagged) (p, Tagged.decodePath(p)) else (p, p)
-              def compute: Seq[(String, String)] =
-                foundDf.collect().map(_.getString(0)).toSeq.map(toPair)
+                    .where(col("is_leaf")).select("path").collect().toSeq
+                    .map { r => val p = r.getString(0); (p, p) }
               val ttl = cfg.findCache match {
                 case Some(fc) if useCache =>
                   FindCache.renderTimeout(fc, now.getEpochSecond, from, until)
                 case _ => 0
               }
-              val key = FindCache.targetKey(from, until, t, ttl)
-              if (thr > 0) {
-                // probe: collect at most thr+1 paths. Below the
-                // threshold this IS the classic find collect (no
-                // second job); above it the list never reaches the
-                // driver. Overflow is never cached (a truncated find
-                // result must not serve later classic requests).
-                val cached: Option[Seq[(String, String)]] =
-                  if (ttl > 0)
-                    cache.get(key, now.getEpochSecond)
-                      .map(_.asInstanceOf[Seq[(String, String)]])
-                  else None
-                cached match {
-                  case Some(pairs) =>
-                    anyCacheHit = true; maxTtl = math.max(maxTtl, ttl)
-                    cacheCounters(hit = true)
-                    t -> Left(pairs)
-                  case None =>
-                    if (ttl > 0) cacheCounters(hit = false)
-                    val probe = foundDf.limit(thr + 1).collect()
-                      .map(_.getString(0)).toSeq
-                    if (probe.length > thr) t -> Right(foundDf)
-                    else {
-                      val pairs = probe.map(toPair)
-                      if (ttl > 0) cache.put(key, pairs, ttl, now.getEpochSecond)
-                      t -> Left(pairs)
-                    }
-                }
-              } else {
-                val pairs =
-                  if (ttl > 0) {
-                    val (v, h) = FindCache.through(cache, key, ttl, now.getEpochSecond)(compute: Any)
-                    if (h) { anyCacheHit = true; maxTtl = math.max(maxTtl, ttl) }
-                    cacheCounters(hit = h)
-                    v.asInstanceOf[Seq[(String, String)]]
-                  } else compute
-                t -> Left(pairs)
-              }
+              val pairs =
+                if (ttl > 0) {
+                  val key = FindCache.targetKey(from, until, t, ttl)
+                  val (v, h) = FindCache.through(cache, key, ttl, now.getEpochSecond)(compute: Any)
+                  if (h) { anyCacheHit = true; maxTtl = math.max(maxTtl, ttl) }
+                  cacheCounters(hit = h)
+                  v.asInstanceOf[Seq[(String, String)]]
+                } else compute
+              t -> pairs
             }
           finderNanos += System.nanoTime() - findT0
 
-          val smalls = resolved.collect { case (t, Left(pairs)) => t -> pairs }
-          val bigs = resolved.collect { case (t, Right(df)) => t -> df }
-
-          val classicSeries: Seq[graft.sinks.Series] =
-            if (smalls.isEmpty) Nil
-            else {
-              val out = Render.renderMulti(pts, smalls, tf, cfg.rules,
-                now = now.getEpochSecond,
-                consolidateBy = consolidate,
-                appendEmpty = cfg.appendEmptySeries,
-                versionMode = versionMode)
-              SeriesAssembly.collect(out, smalls, tf, cfg.rules,
-                now = now.getEpochSecond, consolidateBy = consolidate)
-            }
-          val scalableSeries: Seq[graft.sinks.Series] = bigs.flatMap { case (t, df) =>
-            anyScalable = true
-            val meta = Render.scalableMeta(df, tf, cfg.rules,
-              now = now.getEpochSecond, consolidateBy = consolidate)
-            val filled = Render.renderScalableWithMeta(pts, meta, tf, cfg.rules,
-              now = now.getEpochSecond,
-              appendEmpty = cfg.appendEmptySeries,
-              versionMode = versionMode)
-            SeriesAssembly.assembleScalable(filled, meta, t, tagged = t.startsWith("seriesByTag("))
-          }
-          // stable sort by (name, target): each branch is already
-          // (display, target, path)-sorted and a target lives in
-          // exactly one branch, so this reproduces the classic path's
-          // full ordering byte-for-byte
-          (classicSeries ++ scalableSeries)
-            .sortBy(s => (s.name, s.pathExpression))
+          val out = Render.renderMulti(pts, targets, tf, cfg.rules,
+            now = now.getEpochSecond,
+            consolidateBy = consolidate,
+            appendEmpty = cfg.appendEmptySeries,
+            versionMode = versionMode)
+          SeriesAssembly.collect(out, targets, tf, cfg.rules,
+            now = now.getEpochSecond, consolidateBy = consolidate)
             .map(s => (s, from, until))
       }
     } }
-    if (anyScalable) ex.getResponseHeaders.set("X-Graft-Render", "scalable")
 
     if (anyCacheHit) ex.getResponseHeaders.set("X-Cached-Find", maxTtl.toString)
 
@@ -1148,7 +1083,6 @@ final class HttpApi(
       "wildcardMinDistance" -> cfg.wildcardMinDistance.toString,
       "tagsMinInQuery" -> cfg.tagsMinInQuery.toString,
       "taggedAutocompleteDays" -> cfg.taggedAutocompleteDays.toString,
-      "renderScalableThreshold" -> cfg.renderScalableThreshold.toString,
       "httpWorkers" -> cfg.httpWorkers.toString,
       "findCache" -> cfg.findCache.map(c => jstr(c.toString)).getOrElse("null"),
       "metrics" -> cfg.metrics.map(m => js(

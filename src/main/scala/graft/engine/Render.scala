@@ -18,16 +18,25 @@ import graft.time.StepMath
   * rollup (`t' = t - t % step`, per-metric aggregation)  →  gap-fill
   * onto the regular `[start, stop)` grid  →  alias fan-out.
   *
-  * Scale notes (100 TB): the found-path set is bounded by admission
-  * control (`max-metrics-per-target`), so the path filter is a literal
-  * IN list and the alias join broadcasts; the only data-sized shuffle
-  * is the (path, bucket) aggregation, which Catalyst executes as
-  * partial+final HashAggregate — the distributed property the
-  * reference bought with its `-Resample` ClickHouse pushdown
-  * (`doc/aggregation.md:96-140`). The gap-fill grid is bounded by
-  * `maxDataPoints` per series, never a global cross product.
+  * Scale notes: like the reference (`render/handler.go` collects the
+  * found metrics on the coordinator), the found-path set is a
+  * driver-side list, so the path filter is a literal IN list and the
+  * alias join broadcasts. Nothing bounds that list today: the
+  * `max-metrics-per-target` guard (`Routing.checkMetricsPerTarget`)
+  * has no caller. The only data-sized shuffle is the (path, bucket)
+  * aggregation, which Catalyst executes as partial+final
+  * HashAggregate — the distributed property the reference bought with
+  * its `-Resample` ClickHouse pushdown (`doc/aggregation.md:96-140`).
+  * The gap-fill grid is bounded by `maxDataPoints` per series, never
+  * a global cross product.
   */
 object Render {
+
+  /** Plan-explosion cap (SURVEY §7.4 risk 1): past this many distinct
+    * (step, function) groups, [[render]] coalesces each function's
+    * groups onto the LCM of their steps.
+    */
+  private val MaxGroups = 32
 
   /** One (step, function) execution group (`render/data/query.go:318-378`):
     * metrics sharing rollup step and aggregation run in one plan.
@@ -208,8 +217,8 @@ object Render {
     * (the engine's absent-point sentinel; NaN at the wire layer).
     *
     * `seriesPaths` bounds the output: grid length ≤ maxDataPoints and
-    * |paths| ≤ max-metrics-per-target, so the paths × grid frame is a
-    * small broadcast-side relation, never a data-sized cross join.
+    * |paths| is the driver-side found list, so the paths × grid frame
+    * is found-list-sized, never a data-sized cross join.
     */
   def gapFill(
       rolled: DataFrame,
@@ -305,178 +314,6 @@ object Render {
     aliasJoin(rendered, aliases)
   }
 
-  /** Fully-distributed render — the 100 TB shape (SURVEY §7.4 risk 6):
-    * the found-path set stays a DataFrame end to end. Rule lookup is a
-    * broadcast-sized CASE chain (`Rules.lookupColumns`), the
-    * heterogeneous per-path (step, function) run in ONE plan (all six
-    * aggregates computed per bucket, the per-path function selected
-    * with a CASE), and the gap-fill grid is generated per path from
-    * its own step column. No driver-side path list, no per-group plan
-    * fan-out; Catalyst/AQE pick broadcast vs shuffle for the metadata
-    * join by size.
-    *
-    * Semantically identical to `render` (oracle-checked against the
-    * same SQL); use it when the found set may exceed
-    * `max-metrics-per-target`-scale driver materialization.
-    */
-  def renderScalable(
-      points: DataFrame,
-      foundPaths: DataFrame,
-      tf: TimeFrame,
-      rules: Rules,
-      now: Long,
-      consolidateBy: Option[String] = None,
-      appendEmpty: Boolean = false,
-      versionMode: VersionMode = VersionMode.DedupExact): DataFrame = {
-    val meta = scalableMeta(foundPaths, tf, rules, now, consolidateBy)
-    renderScalableWithMeta(points, meta, tf, rules, now, appendEmpty, versionMode)
-  }
-
-  /** Per-path (rule precision, effective step, function) as a PLAN —
-    * the distributed twin of [[functionGroups]] +
-    * [[SeriesAssembly.perPathMeta]]: rule lookup is a broadcast-sized
-    * CASE chain over the path column, the A7 maxDataPoints inflation
-    * is column arithmetic. Callers that need the meta alongside the
-    * rendered rows (response assembly) compute it once and pass it to
-    * [[renderScalableWithMeta]].
-    */
-  def scalableMeta(
-      foundPaths: DataFrame,
-      tf: TimeFrame,
-      rules: Rules,
-      now: Long,
-      consolidateBy: Option[String] = None): DataFrame = {
-    val age = math.max(0L, now - tf.from)
-    val overrideFunc = consolidateBy.map(n =>
-      AggFunc.fromName(n).getOrElse(throw new IllegalArgumentException(
-        s"failed to choose appropriate aggregation function: $n")))
-    val (precCol, fnCol) = rules.lookupColumns(col("path"), age)
-
-    // per-path step: A7 maxDataPoints inflation as column arithmetic
-    val mdpFloor = StepMath.ceilDiv(tf.until - tf.from, tf.maxDataPoints)
-    val base = greatest(precCol, lit(mdpFloor))
-    val stepCol = (floor((base + precCol - lit(1)) / precCol) * precCol).cast("long")
-    foundPaths.select(
-      col("path"),
-      precCol.cast("long").as("prec"),
-      stepCol.as("step"),
-      overrideFunc.map(f => lit(f.name)).getOrElse(fnCol).as("func"))
-  }
-
-  /** [[renderScalable]] body over a precomputed [[scalableMeta]]
-    * frame. Version resolution follows `versionMode` like
-    * [[fetchGroup]], but with the per-path precision/step/function as
-    * COLUMNS, so heterogeneous rule groups still run in one plan.
-    *
-    * One deliberate divergence from [[render]]: there is no
-    * `maxGroups` coarsening here. The collected path coalesces
-    * per-(step, func) groups onto LCM steps past 32 groups because
-    * each group is a separate plan subtree (SURVEY §7.4 risk 1); this
-    * path has exactly ONE subtree regardless of group count, so every
-    * path keeps its own exact step. Responses are byte-identical to
-    * the collected path whenever it did not coarsen (fixture-pinned);
-    * past 32 distinct rule groups the scalable grid is the FINER,
-    * semantically-valid one.
-    */
-  def renderScalableWithMeta(
-      points: DataFrame,
-      meta: DataFrame,
-      tf: TimeFrame,
-      rules: Rules,
-      now: Long,
-      appendEmpty: Boolean = false,
-      versionMode: VersionMode = VersionMode.DedupExact): DataFrame = {
-    val age = math.max(0L, now - tf.from)
-
-    // per-path aligned fetch window (W2)
-    val fromC = lit(tf.from); val untilC = lit(tf.until)
-    val alignedFrom = (floor((fromC + col("step") - 1) / col("step")) * col("step")).cast("long")
-    val alignedUntil = (floor(untilC / col("step")) * col("step") + col("step") - 1).cast("long")
-
-    // coarse global time filter (steps vary per path; exact per-path
-    // filter applied after the metadata join). The slack bound is the
-    // largest step any rule can yield at this age.
-    val maxStep = (rules.patterns.flatMap(_.precisionFor(age)) :+ 60L)
-      .map(p => StepMath.aggregatedStep(p, tf.from, tf.until, tf.maxDataPoints))
-      .max
-    val maxSlack = tf.until + maxStep
-    val joined = points
-      .where(col("time").between(tf.from, maxSlack))
-      .join(meta, Seq("path"))
-      .where(col("time").between(alignedFrom, alignedUntil))
-
-    // version resolution per `versionMode` (the column-wise twin of
-    // fetchGroup's dispatch), then bucket rollup (A2) in one aggregate
-    // chain; the function varies per path, so compute every aggregate
-    // and select
-    val deduped = versionMode match {
-      case VersionMode.DedupExact =>
-        joined
-          .groupBy(col("path"), col("step"), col("func"), col("time"))
-          .agg(max_by(col("value"), struct(col("version"), col("value"))).as("value"))
-      case VersionMode.Raw =>
-        joined.select(col("path"), col("step"), col("func"), col("time"), col("value"))
-      case VersionMode.MergedCells =>
-        // mergeCells with the precision as a COLUMN: one row per
-        // (path, rule-precision cell), max-version write batch wins,
-        // cell rows aggregated by the path's own rule function
-        val cell = (col("time") - pmod(col("time"), col("prec"))).as("cell")
-        val collected = joined
-          .groupBy(col("path"), col("prec"), col("step"), col("func"), cell)
-          .agg(
-            max(col("version")).as("vmax"),
-            collect_list(struct(col("version"), col("time"), col("value"))).as("arr"))
-        val maxed = array_distinct(filter(col("arr"), x =>
-          x.getField("version") === col("vmax")))
-        val winners = array_sort(filter(maxed, x =>
-          !exists(maxed, y =>
-            y.getField("time") === x.getField("time") &&
-              y.getField("value") > x.getField("value"))))
-        val values = transform(winners, _.getField("value"))
-        val n = size(values)
-        val agged = when(col("func") === "avg", aggregate(values, lit(0.0), _ + _) / n)
-          .when(col("func") === "sum", aggregate(values, lit(0.0), _ + _))
-          .when(col("func") === "min", array_min(values))
-          .when(col("func") === "max", array_max(values))
-          .when(col("func") === "any", element_at(values, 1))
-          .when(col("func") === "anyLast", element_at(values, -1))
-        collected.select(col("path"), col("step"), col("func"),
-          col("cell").as("time"), agged.as("value"))
-    }
-    val bucket = (col("time") - pmod(col("time"), col("step"))).as("time")
-    val rolled = deduped
-      .groupBy(col("path"), col("step"), col("func"), bucket)
-      .agg(
-        avg(col("value")).as("v_avg"),
-        sum(col("value")).as("v_sum"),
-        min(col("value")).as("v_min"),
-        max(col("value")).as("v_max"),
-        min_by(col("value"), struct(col("time"), lit(0L))).as("v_any"),
-        max_by(col("value"), struct(col("time"), lit(0L))).as("v_anylast"))
-      .select(col("path"), col("time"),
-        when(col("func") === "avg", col("v_avg"))
-          .when(col("func") === "sum", col("v_sum"))
-          .when(col("func") === "min", col("v_min"))
-          .when(col("func") === "max", col("v_max"))
-          .when(col("func") === "any", col("v_any"))
-          .when(col("func") === "anyLast", col("v_anylast"))
-          .as("value"))
-
-    // per-path gap-fill grid from the step column (W1)
-    val gridStart0 = (fromC - pmod(fromC, col("step"))).cast("long")
-    val gridStart = when(gridStart0 < fromC, gridStart0 + col("step")).otherwise(gridStart0)
-    val gridStop = (untilC - pmod(untilC, col("step")) + col("step")).cast("long")
-    // per-path guard: zero-bucket windows explode an empty array (a
-    // positive-step sequence with start > stop throws)
-    val gridSeq = when(gridStart <= gridStop - col("step"),
-      sequence(gridStart, gridStop - col("step"), col("step")))
-      .otherwise(array().cast("array<long>"))
-    val grid = meta.select(col("path"), explode(gridSeq).as("time"))
-    val filled = grid.join(rolled, Seq("path", "time"), "left_outer")
-      .select(col("path"), col("time"), col("value"))
-    withEmptySeries(filled, appendEmpty)
-  }
-
   /** Multi-timeframe render — the full `MultiTarget` request shape
     * (`render/data/multi_target.go:21-28,153-248`): independent
     * timeframes (e.g. carbonapi v3 batches with different windows)
@@ -519,7 +356,6 @@ object Render {
       consolidateBy: Option[String] = None,
       appendEmpty: Boolean = false,
       commonStep: Boolean = false,
-      maxGroups: Int = 32,
       versionMode: VersionMode = VersionMode.DedupExact): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -535,11 +371,11 @@ object Render {
           FuncGroup(lcm, fn, gs.flatMap(_.paths))
         }.toSeq.sortBy(_.func.name)
       } else groups0
-    // plan-explosion cap (SURVEY §7.4 risk 1): beyond `maxGroups`
-    // distinct (step, func) plans, coalesce per function onto the LCM
-    // step — same results on a coarser-but-valid grid.
+    // plan-explosion cap: beyond `MaxGroups` distinct (step, func)
+    // plans, coalesce per function onto the LCM step — same results
+    // on a coarser-but-valid grid.
     val groups =
-      if (groups1.length <= maxGroups) groups1
+      if (groups1.length <= MaxGroups) groups1
       else groups1.groupBy(_.func).map { case (fn, gs) =>
         FuncGroup(gs.map(_.step).reduce(StepMath.combineSteps), fn, gs.flatMap(_.paths))
       }.toSeq.sortBy(_.func.name)

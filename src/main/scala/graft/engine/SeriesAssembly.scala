@@ -77,51 +77,6 @@ object SeriesAssembly {
       }
   }
 
-  /** Distributed assembly for the scalable render path: ONE aggregate
-    * produces one row PER SERIES (value array pre-sorted in-plan), so
-    * the driver materializes only the response itself — never an
-    * intermediate path list and never per-point rows. Display-name
-    * decode for tagged paths runs on the collected series rows (one
-    * per response series — the same cost class as serializing the
-    * body). Output order matches [[assemble]]'s (display, target,
-    * path) sort.
-    */
-  def assembleScalable(
-      filled: DataFrame,
-      meta: DataFrame,
-      target: String,
-      tagged: Boolean): Seq[Series] = {
-    import org.apache.spark.sql.functions._
-    val rows = filled
-      .join(meta.select("path", "step", "func"), Seq("path"))
-      .groupBy(col("path"), col("step"), col("func"))
-      .agg(
-        sort_array(collect_list(struct(col("time"),
-          coalesce(col("value"), lit(Double.NaN)).as("value")))).as("pts"),
-        // "present" must exclude stored NaNs too: the classic
-        // assemble's all-NaN → "any" check treats them as gaps
-        count(when(col("value").isNotNull && !isnan(col("value")), lit(1)))
-          .as("n_present"))
-      .collect()
-    rows.toSeq.map { r =>
-      val path = r.getString(0)
-      val step = r.getLong(1)
-      val pts = r.getSeq[org.apache.spark.sql.Row](3)
-      val display = if (tagged) graft.compiler.Tagged.decodePath(path) else path
-      // all-gap series are the appended-empty synthesis → literal "any"
-      val fn = if (r.getLong(4) == 0L) "any" else whisperName(r.getString(2))
-      val series = Series(
-        name = display,
-        pathExpression = target,
-        function = fn,
-        start = pts.head.getLong(0),
-        stop = pts.last.getLong(0) + step,
-        step = step,
-        values = pts.map(p => p.getDouble(1)).toArray)
-      ((display, target, path), series)
-    }.sortBy(_._1).map(_._2)
-  }
-
   /** Convenience: meta + assemble in one call with a single `now`. */
   def collect(
       out: DataFrame,

@@ -163,41 +163,14 @@ final class Rules private (
   /** Aggregation function only. */
   def function(metric: String, age: Long): AggFunc = lookup(metric, age)._2
 
-  /** `lookup` as Catalyst Column expressions for a fixed age:
-    * (precision, function-name) per path — the 100 TB-safe variant
-    * where rule assignment happens inside the plan (a broadcast-sized
-    * CASE WHEN chain of regexes) instead of per-path driver calls.
-    * First-match-wins per the same semantics as `lookup`; age (a
-    * plan-time scalar) resolves each pattern's retention up front.
-    */
-  def lookupColumns(path: org.apache.spark.sql.Column, age: Long)
-      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.functions._
-    def matchCol(p: Pattern) = p.normalizedRegexp match {
-      case ".*" => lit(true)
-      case rx   => regexp_like(path, lit(rx))
-    }
-    def chain(pats: List[Pattern]) = {
-      val prec = pats.flatMap(p => p.precisionFor(age).map(v => when(matchCol(p), lit(v))))
-      val fn = pats.collect {
-        case p if p.function.isDefined => when(matchCol(p), lit(p.function.get.name))
-      }
-      (coalesce((prec :+ lit(superDefaultPrecision)): _*),
-        coalesce((fn :+ lit(superDefaultFunction.name)): _*))
-    }
-    if (separated) {
-      val (pp, pf) = chain(plain)
-      val (tp, tf) = chain(tagged)
-      val isTagged = path.contains("?")
-      (when(isTagged, tp).otherwise(pp), when(isTagged, tf).otherwise(pf))
-    } else chain(patterns)
-  }
-
-  /** Per-ROW age variant of `lookupColumns` for the compaction job:
-    * age is a Column (now − point time), so each row resolves its own
-    * retention band. A pattern whose first retention window starts
-    * after the row's age contributes nothing for precision (falls
-    * through to later patterns), exactly like `lookup`.
+  /** `lookup` as Catalyst Column expressions for the compaction job:
+    * (precision, function-name) per row, with rule assignment inside
+    * the plan (a CASE WHEN chain of regexes) instead of per-path
+    * driver calls. Age is a Column (now − point time), so each row
+    * resolves its own retention band. A pattern whose first retention
+    * window starts after the row's age contributes nothing for
+    * precision (falls through to later patterns), exactly like
+    * `lookup`.
     */
   def lookupColumnsByAge(path: org.apache.spark.sql.Column, age: org.apache.spark.sql.Column)
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {

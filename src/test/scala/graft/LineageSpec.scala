@@ -93,6 +93,28 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
+  test("deferred reliable cut computes its input once when two branches of one action read it") {
+    val s = spark.newSession()
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-ckpt-once")
+    try {
+      s.conf.set(Lineage.ConfKey, dir.toString)
+      val computed = s.sparkContext.longAccumulator("lineage-input-rows")
+      val input = s.range(0, 100, 1, 2).map { i => computed.add(1L); i }.toDF("x")
+      val cut = Lineage.truncateDeferred(input)
+      assert(computed.value == 0L, "a deferred cut must not run a job at construction")
+      // one action, two branches over the cut, then the checkpoint write
+      assert(cut.union(cut).count() == 200L)
+      assert(computed.value == 100L, s"input rows computed ${computed.value} times, not once each")
+      // the reliable files were written, and later reads come from them
+      assert(Files.walk(dir).filter(_.getFileName.toString.startsWith("rdd-")).count() > 0)
+      assert(cut.count() == 100L && computed.value == 100L)
+    } finally {
+      s.conf.unset(Lineage.ConfKey)
+      deleteRecursively(dir)
+    }
+  }
+
   test("graft.memo.disable bypasses the table memo: raw derivation plan, parquet scan visible") {
     val s = spark.newSession()
     val sfDir = "/root/testdata/sf0.001"

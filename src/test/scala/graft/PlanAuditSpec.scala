@@ -22,8 +22,7 @@ class PlanAuditSpec extends AnyFunSuite {
   private val audited = Seq(
     "d_decontaminate", "d_minhash_pairs", "d_jaccard_pairs",
     "d_simhash_pairs", "e_lsh_knn", "e_lsh_knn_multi",
-    "e_neardup", "g_render_headline",
-    "g_render_headline_scalable", "p_query_range", "p_query_topk",
+    "e_neardup", "g_render_headline", "p_query_range", "p_query_topk",
     "q_semijoin", "g_hotcold",
     // PromQL binary/set/matching evaluator: every vector-vector
     // combinator must stay an equi-join on (match key, slot) —

@@ -11,7 +11,7 @@ import graft.SparkTestBase
 import graft.engine.FindCache
 import graft.model.FeatureFlags
 import graft.rollup.{AggFunc, Rules}
-import graft.sinks.{FindSink, Wire}
+import graft.sinks.{FindSink, JsonSink, PickleSink, ProtobufSink, Series, Wire}
 import graft.streaming.Ingest
 
 /** Socket round-trips for every HTTP route over the `one_table`
@@ -147,9 +147,9 @@ class HttpApiSpec extends AnyFunSuite {
     assert(new String(tagged.body()).contains("metric1;tag1=value1;tag2=value21;tag3=value3"))
   }
 
-  test("/render above renderScalableThreshold: distributed plan, byte-identical") {
+  test("/render MergedCells and Raw: hand-computed series, 4 formats, plain+tagged") {
     // dedicated fixture so the shared one's expectations stay intact
-    val dir = Files.createTempDirectory("graft-http-scal").toFile.getAbsolutePath
+    val dir = Files.createTempDirectory("graft-http-modes").toFile.getAbsolutePath
     import spark.implicits._
     def pts(name: String, vs: Seq[Double]): Seq[String] =
       vs.zipWithIndex.map { case (v, i) => s"$name $v ${rnow - 30 + i * 10}" }
@@ -161,63 +161,68 @@ class HttpApiSpec extends AnyFunSuite {
       pts("m1;dc=west;host=b", Seq(1.0, 0.5, 4.0, 2.0))
     Ingest.processBatch(Ingest.parseLines(lines.toDF("value")), s"$dir/t")
 
-    def mk(thr: Int, internalAgg: Boolean) = new HttpApi(
-      spark, s"$dir/t",
-      HttpApi.Config(rules = rules, flags = FeatureFlags(),
-        internalAggregation = internalAgg,
-        renderScalableThreshold = thr),
-      clock = () => now).start()
-    def g(a: HttpApi, path: String) = client.send(
-      HttpRequest.newBuilder(URI.create(a.address + path)).GET().build(),
-      HttpResponse.BodyHandlers.ofByteArray())
+    // Window [rnow-60, rnow+60] at the 10 s rule step: the grid is
+    // rnow-60 … rnow+60 (13 buckets, stop = rnow+70); the four stored
+    // points land on rnow-30 … rnow and every other bucket is absent.
+    // Each (path, time) holds one write, so MergedCells and Raw must
+    // both serve the stored values unchanged under `avg`.
+    val (from, until) = (rnow - 60, rnow + 60)
+    def series(name: String, target: String, vs: Double*): Series =
+      Series(name, target, "avg", from, until + 10, 10,
+        (Seq.fill(3)(Double.NaN) ++ vs ++ Seq.fill(6)(Double.NaN)).toArray)
+    val plain = Seq(
+      series("scal.a1", "scal.*", 3.0, 0.0, 1.0, 2.0),
+      series("scal.a2", "scal.*", 2.0, 1.0, 1.5, 2.5),
+      series("scal.a3", "scal.*", 1.0, 2.0, 2.5, 3.5))
+    val taggedTarget = "seriesByTag('name=m1')"
+    val tagged = Seq(
+      series("m1;dc=east;host=a", taggedTarget, 2.0, 2.5, 2.0, 3.0),
+      series("m1;dc=west;host=b", taggedTarget, 1.0, 0.5, 4.0, 2.0))
+    val encoders: Seq[(String, Seq[Series] => Array[Byte])] = Seq(
+      "json" -> (s => JsonSink.render(s, from, until).getBytes),
+      "pickle" -> (s => PickleSink.encode(s)),
+      "protobuf" -> (s => graft.sinks.ProtobufSink.encodeV2(s)))
 
-    // MergedCells (default) AND Raw (internal-aggregation) version modes
+    // carbonapi_v3_pb carries its request in a POST body
+    val fr = new Wire.Buf
+    fr.string(1, "scal.*")
+    fr.tag(2, 0).varint(from)
+    fr.tag(3, 0).varint(until)
+    fr.string(5, "scal.*")
+    val v3req = new Wire.Buf
+    v3req.tag(1, Wire.LengthDelimited).varint(fr.size.toLong).raw(fr.bytes)
+
     for (internalAgg <- Seq(false, true)) {
-      val classic = mk(0, internalAgg)
-      val scalable = mk(1, internalAgg) // every multi-path find overflows
+      val mode = if (internalAgg) "Raw" else "MergedCells"
+      val a = new HttpApi(
+        spark, s"$dir/t",
+        HttpApi.Config(rules = rules, flags = FeatureFlags(), internalAggregation = internalAgg),
+        clock = () => now).start()
       try {
-        val window = s"from=${rnow - 60}&until=${rnow + 60}"
-        val taggedTarget =
-          java.net.URLEncoder.encode("seriesByTag('name=m1')", "UTF-8")
-        // carbonapi_v3_pb carries its request in a POST body
-        val fr = new Wire.Buf
-        fr.string(1, "scal.*")
-        fr.tag(2, 0).varint(rnow - 60)
-        fr.tag(3, 0).varint(rnow + 60)
-        fr.string(5, "scal.*")
-        val v3req = new Wire.Buf
-        v3req.tag(1, Wire.LengthDelimited).varint(fr.size.toLong).raw(fr.bytes)
-        def p3(a: HttpApi) = client.send(
+        val v3 = client.send(
           HttpRequest.newBuilder(URI.create(a.address + "/render/?format=carbonapi_v3_pb"))
             .POST(HttpRequest.BodyPublishers.ofByteArray(v3req.bytes)).build(),
           HttpResponse.BodyHandlers.ofByteArray())
-        val (c3, s3) = (p3(classic), p3(scalable))
-        assert(c3.statusCode() == 200 && s3.statusCode() == 200)
-        assert(s3.headers().firstValue("X-Graft-Render").orElse("") == "scalable")
-        assert(java.util.Arrays.equals(c3.body(), s3.body()), "v3 bytes")
-        for (fmt <- Seq("protobuf", "pickle", "json");
-             target <- Seq("scal.*", taggedTarget)) {
-          val q = s"/render/?target=$target&$window&format=$fmt"
-          val c = g(classic, q)
-          val s2 = g(scalable, q)
-          assert(c.statusCode() == 200 && s2.statusCode() == 200, s"$fmt/$target")
-          // the scalable branch engaged (found 2-3 paths > threshold 1)...
-          assert(s2.headers().firstValue("X-Graft-Render").orElse("") == "scalable",
-            s"$fmt/$target")
-          // ...the classic one did not...
-          assert(!c.headers().firstValue("X-Graft-Render").isPresent)
-          // ...and the bytes are identical
-          assert(java.util.Arrays.equals(c.body(), s2.body()),
-            s"byte mismatch $fmt/$target internalAgg=$internalAgg:\n" +
-              s" classic=${new String(c.body()).take(400)}\n" +
-              s" scalable=${new String(s2.body()).take(400)}")
+        assert(v3.statusCode() == 200, s"$mode v3")
+        val got = V3Codec.decodeResponse(v3.body())
+        assert(got.map(f => (f.name, f.pathExpression, f.consolidationFunc, f.start, f.stop, f.step)) ==
+          plain.map(s => (s.name, s.pathExpression, s.function, s.start, s.stop, s.step)), s"$mode v3")
+        assert(got.map(_.values.map(_.toString)) == plain.map(_.values.toSeq.map(_.toString)),
+          s"$mode v3 values")
+        assert(v3.body().sameElements(ProtobufSink.encodeV3(plain, from, until)), s"$mode v3 bytes")
+
+        for ((fmt, encode) <- encoders; (target, want) <- Seq("scal.*" -> plain, taggedTarget -> tagged)) {
+          val r = client.send(
+            HttpRequest.newBuilder(URI.create(a.address +
+              s"/render/?target=${java.net.URLEncoder.encode(target, "UTF-8")}" +
+              s"&from=$from&until=$until&format=$fmt")).GET().build(),
+            HttpResponse.BodyHandlers.ofByteArray())
+          assert(r.statusCode() == 200, s"$mode $fmt $target")
+          assert(r.body().sameElements(encode(want)),
+            s"$mode $fmt $target:\n got=${new String(r.body()).take(400)}\n" +
+              s" want=${new String(encode(want)).take(400)}")
         }
-        // a single-path target stays on the classic collected path
-        val one = g(scalable,
-          s"/render/?target=scal.a1&from=${rnow - 60}&until=${rnow + 60}&format=json")
-        assert(one.statusCode() == 200)
-        assert(!one.headers().firstValue("X-Graft-Render").isPresent)
-      } finally { classic.stop(); scalable.stop() }
+      } finally a.stop()
     }
   }
 

@@ -13,6 +13,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.engine.FindCache
 import graft.rollup.{AggFunc, Rules}
 import graft.streaming.Ingest
 
@@ -24,7 +25,10 @@ import graft.streaming.Ingest
   *   - a narrow plain render with an uncached find runs an exact job
   *     count: 2 find jobs, then the render's query stages (alias
   *     broadcast, merged-cell shuffle, rollup shuffle, gap-fill
-  *     broadcast, empty-series window shuffle, result).
+  *     broadcast, empty-series window shuffle, result);
+  *   - the same render with its find served from the find cache runs
+  *     only the render's stages, and a `seriesByTag` render runs the
+  *     tagged find's jobs plus the same render stages.
   * AQE's stage split is deterministic for a fixed store, so the count
   * is pinned exactly: a change that adds a stage fails here.
   */
@@ -43,24 +47,33 @@ class ServingJobFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  private lazy val api: HttpApi = new HttpApi(
-    spark, tablesDir,
-    HttpApi.Config(rules = Rules(Nil, defaultPrecision = 10L, defaultFunction = Some(AggFunc.Avg))),
-    clock = () => Instant.ofEpochSecond(rnow + 5)).start()
-  private var started = false
+  private val started = mutable.ArrayBuffer.empty[HttpApi]
+  private def serve(findCache: Option[FindCache.Config]): HttpApi = {
+    val a = new HttpApi(
+      spark, tablesDir,
+      HttpApi.Config(
+        rules = Rules(Nil, defaultPrecision = 10L, defaultFunction = Some(AggFunc.Avg)),
+        findCache = findCache),
+      clock = () => Instant.ofEpochSecond(rnow + 5)).start()
+    started += a
+    a
+  }
+  // builds the store and starts the server unobserved
+  private lazy val api: HttpApi = serve(None)
+  private lazy val cachingApi: HttpApi = serve(Some(FindCache.Config(
+    defaultTimeoutSec = 300, shortTimeoutSec = 60, shortDurationSec = 240)))
 
-  override def afterAll(): Unit = if (started) api.stop()
+  override def afterAll(): Unit = started.foreach(_.stop())
 
-  /** Stage names of every job started while `path` was served. */
-  private def jobsOf(path: String): Seq[String] = {
+  /** Stage names of every job started while `a` served `path`. */
+  private def jobsOf(path: String, a: HttpApi = api): Seq[String] = {
     val names = mutable.ArrayBuffer.empty[String]
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = names.synchronized {
         names += j.stageInfos.map(_.name).mkString(" | ")
       }
     }
-    val base = api.address // builds the store and starts the server unobserved
-    started = true
+    val base = a.address
     val sc = spark.sparkContext
     ListenerBusSync.await(sc)
     sc.addSparkListener(l)
@@ -95,6 +108,18 @@ class ServingJobFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("narrow plain render, uncached find: exactly 8 jobs") {
     val jobs = jobsOf(s"/render/?target=floor.b.*&$window&format=json")
+    assert(jobs.length == 8, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("narrow plain render, cached find: exactly 6 jobs") {
+    val path = s"/render/?target=floor.b.*&$window&format=json"
+    jobsOf(path, cachingApi) // fills the find cache
+    val jobs = jobsOf(path, cachingApi)
+    assert(jobs.length == 6, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("seriesByTag render: exactly 8 jobs") {
+    val jobs = jobsOf(s"/render/?target=${enc("seriesByTag('name=floor_tagged')")}&$window&format=json")
     assert(jobs.length == 8, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 }

@@ -82,14 +82,6 @@ class E2ESpec extends AnyFunSuite {
     val out = Render.render(points, Seq("test.plain1"),
       TimeFrame(rnow + 1, rnow + 9), rules, now = rnow + 9, appendEmpty = true)
     assert(out.count() == 0)
-    val scalable = Render.renderScalable(points,
-      points.sparkSession.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row("test.plain1")),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType)))),
-      TimeFrame(rnow + 1, rnow + 9), rules, now = rnow + 9, appendEmpty = true)
-    assert(scalable.count() == 0)
   }
 
   test("empty find result renders as the empty response") {

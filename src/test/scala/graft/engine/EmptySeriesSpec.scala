@@ -9,8 +9,7 @@ import graft.rollup.{AggFunc, Rules}
 import graft.sinks.Series
 
 /** Empty-series rule (W4, `render/data/ch_response.go:98-107,203`) on
-  * hand-computed rows, through both render shapes and their response
-  * assembly:
+  * hand-computed rows, through the render and its response assembly:
   *   - a found path with no point in the window is dropped unless
   *     `append-empty-series` is set, and then emits the all-NaN grid
   *     under the literal function `any`;
@@ -45,14 +44,6 @@ class EmptySeriesSpec extends AnyFunSuite {
     SeriesAssembly.collect(out, targets, tf, rules, now = t0 + 20, consolidateBy = None)
   }
 
-  private def scalable(appendEmpty: Boolean): Seq[Series] = {
-    import spark.implicits._
-    val meta = Render.scalableMeta(found.toDF("path"), tf, rules, now = t0 + 20)
-    val filled = Render.renderScalableWithMeta(points, meta, tf, rules, now = t0 + 20,
-      appendEmpty = appendEmpty)
-    SeriesAssembly.assembleScalable(filled, meta, "es.*", tagged = false)
-  }
-
   private def shape(s: Seq[Series]): Seq[(String, String, Long, Long, Seq[String])] =
     s.map(x => (x.name, x.function, x.start, x.step, x.values.toSeq.map(_.toString)))
 
@@ -60,14 +51,12 @@ class EmptySeriesSpec extends AnyFunSuite {
   private val live = ("es.live", "avg", t0, 10L, Seq("1.0", "2.0", "NaN"))
   private val allNan = ("es.nan", "any", t0, 10L, nan3)
 
-  for ((name, run) <- Seq("renderMulti" -> classic _, "renderScalable" -> scalable _)) {
-    test(s"$name: a found path with no point in the window is dropped without append") {
-      assert(shape(run(false)) == Seq(live, allNan))
-    }
+  test("renderMulti: a found path with no point in the window is dropped without append") {
+    assert(shape(classic(false)) == Seq(live, allNan))
+  }
 
-    test(s"$name: append-empty-series emits it as the all-NaN grid under `any`") {
-      assert(shape(run(true)) == Seq(("es.gone", "any", t0, 10L, nan3), live, allNan))
-    }
+  test("renderMulti: append-empty-series emits it as the all-NaN grid under `any`") {
+    assert(shape(classic(true)) == Seq(("es.gone", "any", t0, 10L, nan3), live, allNan))
   }
 
   test("withEmptySeries keeps NaN-valued paths and drops only all-null ones") {

@@ -1,0 +1,80 @@
+package graft.engine
+
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
+import graft.model.TimeFrame
+import graft.rollup.{AggFunc, Pattern, Retention, RuleType, Rules}
+
+/** The render's plan-explosion cap (SURVEY §7.4 risk 1): past 32
+  * distinct (step, function) groups, `Render.render` coalesces the
+  * groups of each function onto the LCM of their steps.
+  *
+  * Fixture: 6 functions × 6 rule precisions (10/20/30/60/120/180 s)
+  * = 36 groups, one path each. LCM(10, 20, 30, 60, 120, 180) = 360,
+  * so every series comes back on a 360 s grid. Each path stores one
+  * point per 10 s over [t0, t0 + 1440) with value k = (t − t0) / 10;
+  * bucket b (k = 36b … 36b + 35) then rolls up to hand-computable
+  * values per function.
+  */
+class RenderCoarseningSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+
+  private val t0 = 1704067200L // 360 s aligned
+  private val tf = TimeFrame(t0, t0 + 1439)
+  private val precisions = Seq(10L, 20L, 30L, 60L, 120L, 180L)
+
+  private def path(f: AggFunc, prec: Long) = s"co.${f.name}.p$prec"
+
+  // function from the first pattern, precision from the second
+  private def rulesFor(funcs: Seq[AggFunc]): Rules = Rules(
+    funcs.toList.map(f => Pattern(RuleType.All, s"^co\\.${f.name}\\.", Some(f), Nil)) ++
+      precisions.toList.map(p =>
+        Pattern(RuleType.All, s"\\.p$p$$", None, List(Retention(0, p)))))
+
+  private lazy val points: DataFrame = {
+    import spark.implicits._
+    (for (f <- AggFunc.all; p <- precisions; k <- 0 until 144)
+      yield (path(f, p), k.toDouble, t0 + 10L * k, 1L))
+      .toDF("path", "value", "time", "version")
+  }
+
+  /** path → (time, value) rows, time-sorted. */
+  private def rendered(funcs: Seq[AggFunc]): Map[String, Seq[(Long, Double)]] = {
+    val paths = for (f <- funcs; p <- precisions) yield path(f, p)
+    Render.render(points, paths, tf, rulesFor(funcs), now = t0 + 1439)
+      .collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (p, rs) => p -> rs.map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1) }
+  }
+
+  private def expected(f: AggFunc, b: Int): Double = f match {
+    case AggFunc.Avg     => 36.0 * b + 17.5
+    case AggFunc.Sum     => 1296.0 * b + 630.0
+    case AggFunc.Min     => 36.0 * b
+    case AggFunc.Max     => 36.0 * b + 35.0
+    case AggFunc.Any     => 36.0 * b
+    case AggFunc.AnyLast => 36.0 * b + 35.0
+  }
+
+  test("36 (step, function) groups coarsen per function onto the 360 s LCM step") {
+    val out = rendered(AggFunc.all)
+    assert(out.size == 36)
+    for (f <- AggFunc.all; p <- precisions) {
+      val rows = out(path(f, p))
+      assert(rows.map(_._1) == (0 until 4).map(b => t0 + 360L * b), s"${path(f, p)} grid")
+      assert(rows.map(_._2) == (0 until 4).map(b => expected(f, b)), s"${path(f, p)} values")
+    }
+  }
+
+  test("30 groups stay under the cap: every path keeps its own rule step") {
+    val funcs = AggFunc.all.take(5)
+    val out = rendered(funcs)
+    assert(out.size == 30)
+    for (f <- funcs; p <- precisions) {
+      val times = out(path(f, p)).map(_._1)
+      assert(times == (t0 until t0 + 1440 by p), s"${path(f, p)} grid")
+    }
+  }
+}

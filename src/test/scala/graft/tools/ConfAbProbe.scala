@@ -10,8 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * `Test/runMain graft.tools.ConfAbProbe <confKey> <baseVal> <optVal> q1,q2,...`
   *
-  * e.g. `ConfAbProbe graft.lineage.eager true false d_curate,d_minhash_recall`
-  * or   `ConfAbProbe graft.promql.lagwindow false true p_query_changes`.
+  * e.g. `ConfAbProbe graft.promql.lagwindow false true p_query_changes`.
   */
 object ConfAbProbe {
   def main(args: Array[String]): Unit = {

@@ -35,7 +35,7 @@ object ScaleProbe {
   val ProbeQueries: Seq[String] = Seq(
     "d_minhash_pairs", "d_cluster_dedup", "d_dup_spans", "d_scrub_spans",
     "d_curate_decon", "d_tfidf", "d_quantiles_by_lang", "d_bpe_train",
-    "e_ivfpq_search", "g_render_headline_scalable", "p_query_groupleft",
+    "e_ivfpq_search", "g_render_headline", "p_query_groupleft",
     // codec representative: real AVI write + full JPEG decode per doc —
     // map-only CPU, the probe pins that it scales linearly with docs
     "m_avi_motion",
