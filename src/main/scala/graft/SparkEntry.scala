@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Autocomplete, Finder, GraphiteTables, Render, TagStats}
+import graft.engine.{Autocomplete, Finder, GraphiteTables, Render, SeriesAssembly, TagStats}
 import graft.llm.{Decontaminate, Dedup, Multimodal, Sampling, Similarity, TextStats}
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Pattern, Retention, RuleType, Rules}
@@ -84,17 +84,64 @@ object SparkEntry {
   private def uniformRules: Rules =
     Rules(Nil, defaultPrecision = 60L, defaultFunction = Some(AggFunc.Avg))
 
+  /** Found paths of a plain glob, collected like the render's find. */
+  private def foundPaths(s: SparkSession, dir: String, glob: String): Seq[String] =
+    Finder.find(GraphiteTables.index(s, dir), glob)
+      .select("path").collect().map(_.getString(0)).toSeq
+
+  /** Assembled grids as the long form the oracle compares: (target,
+    * display_name, path, time, value) rows, absent buckets null,
+    * values rounded to 4 places. The driver ships one array row per
+    * grid and Spark explodes it, so the relation built on the driver
+    * is found-list sized, not grid-cell sized.
+    */
+  private def longForm(s: SparkSession, grids: Seq[SeriesAssembly.Aliased]): DataFrame = {
+    import s.implicits._
+    grids.map(a => (a.target, a.display, a.grid.path, a.grid.start, a.grid.step, a.grid.values.toSeq))
+      .toDF("target", "display_name", "path", "start", "step", "values")
+      .select(col("target"), col("display_name"), col("path"), col("start"), col("step"),
+        posexplode(col("values")))
+      .select(col("target"), col("display_name"), col("path"),
+        (col("start") + col("pos") * col("step")).as("time"), round(col("col"), 4).as("value"))
+  }
+
+  /** Render every `events.*.*` series: the Spark render, then the
+    * driver-side gap-fill and empty-series rule, in long form.
+    */
+  private def renderEvents(
+      s: SparkSession,
+      dir: String,
+      tf: TimeFrame,
+      rules: Rules,
+      consolidateBy: Option[String] = None,
+      appendEmpty: Boolean = true,
+      commonStep: Boolean = false): DataFrame = {
+    val rolled = Render.render(GraphiteTables.points(s, dir), foundPaths(s, dir, "events.*.*"),
+      tf, rules, now = tf.until, consolidateBy, commonStep)
+    longForm(s, SeriesAssembly.fill(rolled, tf, appendEmpty).map(SeriesAssembly.Aliased("", "", _)))
+      .select("path", "time", "value")
+  }
+
+  /** Multi-target render: each series once per (target, display
+    * name), in long form.
+    */
+  private def renderTargets(
+      s: SparkSession,
+      dir: String,
+      tf: TimeFrame,
+      globs: Seq[String]): DataFrame = {
+    val targets = globs.map(t => t -> foundPaths(s, dir, t).map(p => (p, p)))
+    longForm(s, SeriesAssembly.assemble(GraphiteTables.points(s, dir), targets, tf, uniformRules,
+      now = tf.until, appendEmpty = true))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * find `events.*.*` over the derived index, then the full render
     * pipeline (path filter → dedup → rollup → gap-fill).
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val points = GraphiteTables.points(spark, dir)
-    val index = GraphiteTables.index(spark, dir)
-    val found = Finder.find(index, "events.*.*")
-      .select("path").collect().map(_.getString(0)).toSeq
-    Render.render(points, found, TimeFrame(WFrom, WUntil), uniformRules, now = WUntil)
+    renderEvents(spark, dir, TimeFrame(WFrom, WUntil), uniformRules, appendEmpty = false)
   }
 
   /** Build `body` with [[graft.Tuning.spreadTinyInput]] disabled for
@@ -185,62 +232,26 @@ object SparkEntry {
     // ----------------------------------------------------------------
     // Render pipeline (J1-J3, A1-A9, W1-W4, U1, O1)
     // ----------------------------------------------------------------
-    "g_render_avg" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(WFrom, WUntil), uniformRules, now = WUntil,
-        appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_avg" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(WFrom, WUntil), uniformRules)),
 
     // Headline query mirroring the baseline's published benchmark
     // shape (doc/aggregation.md: N metrics, long range, maxDataPoints
     // =100): every series, full month, mdp-inflated step.
-    "g_render_headline" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(MFrom, MUntil, maxDataPoints = 100),
-        uniformRules, now = MUntil, appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_headline" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(MFrom, MUntil, maxDataPoints = 100), uniformRules)),
 
-    "g_render_rules" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(WFrom, WUntil), testRules, now = WUntil,
-        appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_rules" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(WFrom, WUntil), testRules)),
 
-    "g_render_consolidate" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(WFrom, WUntil), testRules, now = WUntil,
-        consolidateBy = Some("max"), appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_consolidate" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(WFrom, WUntil), testRules, consolidateBy = Some("max"))),
 
-    "g_render_commonstep" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(WFrom, WUntil), testRules, now = WUntil,
-        appendEmpty = true, commonStep = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_commonstep" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(WFrom, WUntil), testRules, commonStep = true)),
 
-    "g_render_nonempty" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(NFrom, NUntil), uniformRules, now = NUntil,
-        appendEmpty = false)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_nonempty" -> ((s, dir) =>
+      renderEvents(s, dir, TimeFrame(NFrom, NUntil), uniformRules, appendEmpty = false)),
 
     // Retention compaction (GraphiteMergeTree merge analog): per-row
     // age picks the retention band; ≥2-week-old purchase points land
@@ -274,35 +285,20 @@ object SparkEntry {
 
     // Multi-target render with alias fan-out (U1/J2): overlapping
     // targets display the same series under each matching target.
-    "g_render_multi" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val index = GraphiteTables.index(s, dir)
-      val targets = Seq("events.click.*", "events.*.user1*").map { t =>
-        val found = Finder.find(index, t)
-          .select("path").collect().map(_.getString(0)).toSeq
-        t -> found.map(p => (p, p))
-      }
-      Render.renderMulti(points, targets, TimeFrame(NFrom, NUntil), uniformRules,
-        now = NUntil, appendEmpty = true)
-        .select(col("target"), col("display_name"), col("path"), col("time"),
-          round(col("value"), 4).as("value"))
-    }),
+    "g_render_multi" -> ((s, dir) =>
+      renderTargets(s, dir, TimeFrame(NFrom, NUntil), Seq("events.click.*", "events.*.user1*"))),
 
     // Multi-timeframe MultiTarget request: two windows, each with its
     // own targets, unioned with the request-window echo columns.
-    "g_render_timeframes" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val index = GraphiteTables.index(s, dir)
-      def found(t: String) = Finder.find(index, t)
-        .select("path").collect().map(_.getString(0)).toSeq.map(p => (p, p))
-      val requests = Seq(
-        TimeFrame(NFrom, NUntil) -> Seq("events.click.*" -> found("events.click.*")),
-        TimeFrame(WFrom, WUntil) -> Seq("events.error.*" -> found("events.error.*")))
-      Render.renderMultiTimeframe(points, requests, uniformRules, now = WUntil,
-        appendEmpty = true)
-        .select(col("req_from"), col("req_until"), col("target"), col("path"),
-          col("time"), round(col("value"), 4).as("value"))
-    }),
+    "g_render_timeframes" -> ((s, dir) =>
+      Seq(TimeFrame(NFrom, NUntil) -> "events.click.*", TimeFrame(WFrom, WUntil) -> "events.error.*")
+        .map { case (tf, glob) =>
+          renderTargets(s, dir, tf, Seq(glob))
+            .withColumn("req_from", lit(tf.from))
+            .withColumn("req_until", lit(tf.until))
+        }
+        .reduceLeft(_.unionByName(_))
+        .select("req_from", "req_until", "target", "path", "time", "value")),
 
     // Tag cardinality stats (A11/J5): distinct-series counts for the
     // exact terms of a query, from the derived tag1 count table.
@@ -327,17 +323,15 @@ object SparkEntry {
     // grid → per-series value arrays, summarized scalar-wise so the
     // oracle can check array order/content.
     "s_series_assembly" -> ((s, dir) => {
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      val rendered = Render.render(points, found, TimeFrame(NFrom, NUntil), uniformRules,
-        now = NUntil, appendEmpty = true)
-      graft.sinks.Sinks.seriesFrame(rendered, 60)
-        .select(col("path"), col("start"), col("stop"), col("step"),
-          size(col("values")).cast("long").as("n_buckets"),
-          size(filter(col("values"), v => v.isNotNull)).cast("long").as("n_present"),
-          round(aggregate(col("values"), lit(0.0d),
-            (acc, v) => acc + coalesce(v, lit(0.0d))), 4).as("sum_value"))
+      import s.implicits._
+      val tf = TimeFrame(NFrom, NUntil)
+      val rolled = Render.render(GraphiteTables.points(s, dir), foundPaths(s, dir, "events.*.*"),
+        tf, uniformRules, now = NUntil)
+      SeriesAssembly.fill(rolled, tf, appendEmpty = true)
+        .map(g => (g.path, g.start, g.stop, g.step, g.values.length.toLong,
+          g.values.count(_.isDefined).toLong, g.values.flatten.sum))
+        .toDF("path", "start", "stop", "step", "n_buckets", "n_present", "sum_value")
+        .withColumn("sum_value", round(col("sum_value"), 4))
     }),
 
     // ----------------------------------------------------------------
@@ -363,13 +357,7 @@ object SparkEntry {
           |  <default><function>avg</function>
           |    <retention><age>0</age><precision>60</precision></retention></default>
           |</graphite_rollup>""".stripMargin
-      val rules = graft.rollup.Rules.fromXml(xml)
-      val points = GraphiteTables.points(s, dir)
-      val found = Finder.find(GraphiteTables.index(s, dir), "events.*.*")
-        .select("path").collect().map(_.getString(0)).toSeq
-      Render.render(points, found, TimeFrame(WFrom, WUntil), rules, now = WUntil,
-        appendEmpty = true)
-        .select(col("path"), col("time"), round(col("value"), 4).as("value"))
+      renderEvents(s, dir, TimeFrame(WFrom, WUntil), graft.rollup.Rules.fromXml(xml))
     }),
 
     // PromQL matcher → tagged-term find (Prometheus façade seam).

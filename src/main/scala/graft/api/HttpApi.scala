@@ -719,14 +719,12 @@ final class HttpApi(
             }
           finderNanos += System.nanoTime() - findT0
 
-          val out = Render.renderMulti(pts, targets, tf, cfg.rules,
+          SeriesAssembly.assemble(pts, targets, tf, cfg.rules,
             now = now.getEpochSecond,
             consolidateBy = consolidate,
             appendEmpty = cfg.appendEmptySeries,
             versionMode = versionMode)
-          SeriesAssembly.collect(out, targets, tf, cfg.rules,
-            now = now.getEpochSecond, consolidateBy = consolidate)
-            .map(s => (s, from, until))
+            .map(a => (a.series, from, until))
       }
     } }
 

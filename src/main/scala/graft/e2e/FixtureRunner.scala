@@ -340,14 +340,12 @@ object FixtureRunner {
             rows = pruned.count(),
             bytes = pruned.queryExecution.optimizedPlan.stats.sizeInBytes)
           staged(c.proxyDelayMs, band.dataTimeoutSec) {
-            val out = Render.renderMulti(points, targets, tf, rules, now = until,
+            // the same render + response assembly as /render
+            Right(graft.engine.SeriesAssembly.assemble(points, targets, tf, rules,
+              now = until,
               consolidateBy = consolidate,
               appendEmpty = conf.appendEmptySeries,
-              versionMode = versionMode)
-            // shared response assembly (SeriesAssembly = the
-            // ch_response.go step), with the same `now` the render used
-            Right(graft.engine.SeriesAssembly.collect(
-              out, targets, tf, rules, now = until, consolidateBy = consolidate))
+              versionMode = versionMode).map(_.series))
           }
         } catch {
           case e: Guards.StorageError => Left(s"${e.code}: ${e.message}")

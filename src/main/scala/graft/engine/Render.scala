@@ -1,34 +1,37 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Rules}
 import graft.time.StepMath
 
-/** The /render data path re-expressed as one declarative Spark plan
-  * per (step, function) group — the Spark-native analog of
-  * `render/data/query.go:141-282` + `helper/rollup/rules.go:370-502` +
-  * `helper/point/func.go:29-118`.
+/** The Spark half of /render: one declarative plan per (step,
+  * function) group — the analog of the ClickHouse query the reference
+  * sends (`render/data/query.go:141-282`,
+  * `helper/rollup/rules.go:370-502`, `helper/point/func.go:29-51`).
   *
   * Pipeline: points filtered to the found paths (`path IN (…)`)  →
-  * version dedup (max version wins per (path, time))  →  time-bucket
-  * rollup (`t' = t - t % step`, per-metric aggregation)  →  gap-fill
-  * onto the regular `[start, stop)` grid  →  alias fan-out.
+  * version resolution (per [[VersionMode]])  →  time-bucket rollup
+  * (`t' = t - t % step`, per-metric aggregation). The groups' union is
+  * collected once, and the plan ends there, at the rolled rows. Gap
+  * fill, the empty-series rule and alias fan-out work on the found
+  * list × the grid, which is already on the driver, so they run there
+  * ([[SeriesAssembly]]) — as the reference's Go coordinator does
+  * them after ClickHouse returns its rows.
   *
   * Scale notes: like the reference (`render/handler.go` collects the
   * found metrics on the coordinator), the found-path set is a
-  * driver-side list, so the path filter is a literal IN list and the
-  * alias join broadcasts. Nothing bounds that list today: the
+  * driver-side list, so the path filter is a literal IN list and no
+  * join touches the data. Nothing bounds that list today: the
   * `max-metrics-per-target` guard (`Routing.checkMetricsPerTarget`)
-  * has no caller. The only data-sized shuffle is the (path, bucket)
-  * aggregation, which Catalyst executes as partial+final
-  * HashAggregate — the distributed property the reference bought with
-  * its `-Resample` ClickHouse pushdown (`doc/aggregation.md:96-140`).
-  * The gap-fill grid is bounded by `maxDataPoints` per series, never
-  * a global cross product.
+  * has no caller. The data-sized work is the version resolution and
+  * the (path, bucket) aggregation behind one shuffle by `path`,
+  * distributed like the reference's `-Resample` ClickHouse pushdown
+  * (`doc/aggregation.md:96-140`). The collect is bounded by found
+  * paths × grid points, and the grid by `maxDataPoints`, never by the
+  * stored row count.
   */
 object Render {
 
@@ -202,71 +205,23 @@ object Render {
     val (from, until) = StepMath.alignFromUntil(tf.from, tf.until, group.step)
     val filtered = points
       .where(col("time").between(from, until) && col("path").isin(group.paths: _*))
+    // Both aggregates of a two-aggregate mode key on `path`, so one
+    // exchange by `path` serves both: it ships the filtered rows
+    // instead of partial aggregates, and saves a query stage. Measured
+    // against the same code without it (perfbench, 20 s runs,
+    // interleaved pairs, 4 cores, medians): `live` req_p50 362 → 298 ms
+    // (5/5 pairs), `dashboard` 219 → 219 ms (3/5), `headline` 713 →
+    // 683 ms (3/3); graft.Bench `g_render_headline` at sf0.1, medians
+    // of 3 interleaved runs, 2.09 → 1.86 s (2/3).
+    lazy val byPath = filtered.repartition(col("path"))
     versionMode match {
-      case VersionMode.DedupExact => dedupAndRollup(filtered, group.step, group.func)
+      case VersionMode.DedupExact => dedupAndRollup(byPath, group.step, group.func)
       case VersionMode.Raw        => rollup(filtered, group.step, group.func)
       case VersionMode.MergedCells =>
         val prec = if (cellPrecision > 0) cellPrecision else group.step
-        rollup(mergeCells(filtered, prec, group.func), group.step, group.func)
+        rollup(mergeCells(byPath, prec, group.func), group.step, group.func)
     }
   }
-
-  /** Gap-fill (W1, `helper/point/func.go:53-118`): project each series
-    * onto the regular grid `[start, stop)` (`start = ceil(from/step)*step`,
-    * `stop = floor(until/step)*step + step`); missing buckets are null
-    * (the engine's absent-point sentinel; NaN at the wire layer).
-    *
-    * `seriesPaths` bounds the output: grid length ≤ maxDataPoints and
-    * |paths| is the driver-side found list, so the paths × grid frame
-    * is found-list-sized, never a data-sized cross join.
-    */
-  def gapFill(
-      rolled: DataFrame,
-      seriesPaths: DataFrame,
-      tf: TimeFrame,
-      step: Long): DataFrame = {
-    val (start, stop) = StepMath.gridBounds(tf.from, tf.until, step)
-    // a window containing no step-aligned bucket yields the empty grid
-    // (Spark's sequence with positive step THROWS on start > stop)
-    if (start > stop - step)
-      return seriesPaths.limit(0)
-        .select(col("path"), lit(0L).as("time"), lit(null).cast("double").as("value"))
-    val grid = seriesPaths
-      .select(col("path"),
-        explode(sequence(lit(start), lit(stop - step), lit(step))).as("time"))
-    grid.join(rolled, Seq("path", "time"), "left_outer")
-      .select(col("path"), col("time"), col("value"))
-  }
-
-  /** Alias fan-out (J2, `pkg/alias/map.go:36-70`): one found series is
-    * displayed under every (target, displayName) that matched it. The
-    * alias relation is find-result-sized → broadcast inner join.
-    */
-  def aliasJoin(result: DataFrame, aliases: DataFrame): DataFrame =
-    result.join(broadcast(aliases), Seq("path"), "inner")
-
-  /** Empty-series synthesis (W4, `render/data/ch_response.go:98-107`):
-    * found metrics without any point in the window still emit a row
-    * per grid bucket (all-null values) when `append-empty-series` is
-    * set. Implemented as the gap-fill grid left-join itself — paths
-    * with no data fall out with null values — so the anti-join is
-    * implicit; this helper filters either behavior.
-    *
-    * Without append, a series whose grid is all null is dropped; a
-    * stored NaN is a point (`count` skips only nulls), so an all-NaN
-    * series stays. The per-path count is a window over the input, not
-    * an aggregate joined back to it, so the render subtree appears in
-    * the plan once and costs one shuffle.
-    */
-  def withEmptySeries(
-      gapFilled: DataFrame,
-      appendEmpty: Boolean): DataFrame =
-    if (appendEmpty) gapFilled
-    else
-      gapFilled
-        .withColumn("n_present", count(col("value")).over(Window.partitionBy("path")))
-        .where(col("n_present") > 0)
-        .drop("n_present")
 
   /** Hot ∪ cold union (S5/J3, `render/data/data.go:94-130`): recent
     * not-yet-compacted points (the carbonlink replacement — in Spark,
@@ -281,71 +236,18 @@ object Render {
     cold.select(cols: _*).unionByName(hot.select(cols: _*))
   }
 
-  /** Multi-target render (U1 + J2): one timeframe, many targets. All
-    * targets' found paths run through the shared per-(step,func)
-    * fan-out — one scan family serves every target, as the reference's
-    * common-step design intends (`render/data/common_step.go`) — and
-    * the alias map then fans each series out to every (target,
-    * display name) that matched it (`pkg/alias/map.go:36-70`).
-    *
-    * `targets` maps a raw target expression to its found
-    * (path, displayName) pairs.
+  /** A render's Spark output: the group plan it ran — each group's
+    * `step` is the one its rows were rolled to, after the >32-group
+    * coarsening and `maxDataPoints` inflation — and the rolled rows
+    * (path, time, value), one per bucket holding a point.
+    * [[SeriesAssembly]] builds the response from both.
     */
-  def renderMulti(
-      points: DataFrame,
-      targets: Seq[(String, Seq[(String, String)])],
-      tf: TimeFrame,
-      rules: Rules,
-      now: Long,
-      consolidateBy: Option[String] = None,
-      appendEmpty: Boolean = false,
-      versionMode: VersionMode = VersionMode.DedupExact): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val aliasRows = targets.flatMap { case (target, pairs) =>
-      pairs.map { case (path, display) => (path, target, display) }
-    }
-    val aliases = spark.createDataset(aliasRows)
-      .toDF("path", "target", "display_name")
-    val allPaths = targets.flatMap(_._2.map(_._1)).distinct
-    val rendered = render(
-      points, allPaths, tf, rules, now, consolidateBy, appendEmpty,
-      versionMode = versionMode)
-    aliasJoin(rendered, aliases)
-  }
+  final case class Rolled(groups: Seq[FuncGroup], rows: Array[Row])
 
-  /** Multi-timeframe render — the full `MultiTarget` request shape
-    * (`render/data/multi_target.go:21-28,153-248`): independent
-    * timeframes (e.g. carbonapi v3 batches with different windows)
-    * render separately and union, each row carrying its request
-    * window. The reference fans these out as goroutines; here each
-    * timeframe contributes an independent subtree of one union plan
-    * and Spark schedules them together.
-    */
-  def renderMultiTimeframe(
-      points: DataFrame,
-      requests: Seq[(TimeFrame, Seq[(String, Seq[(String, String)])])],
-      rules: Rules,
-      now: Long,
-      consolidateBy: Option[String] = None,
-      appendEmpty: Boolean = false): DataFrame = {
-    val frames = requests.map { case (tf, targets) =>
-      renderMulti(points, targets, tf, rules, now, consolidateBy, appendEmpty)
-        .withColumn("req_from", lit(tf.from))
-        .withColumn("req_until", lit(tf.until))
-    }
-    if (frames.isEmpty) {
-      val spark = points.sparkSession
-      import spark.implicits._
-      spark.createDataset(Seq.empty[(String, String, String, Long, Option[Double], Long, Long)])
-        .toDF("path", "target", "display_name", "time", "value", "req_from", "req_until")
-    } else frames.reduceLeft(_.unionByName(_))
-  }
-
-  /** Full render of one timeframe over an already-found path set:
-    * per-(step,func) fan-out (A6), union of group results (U1), then
-    * gap-fill per group step. `maxDataPoints` inflates the step per
-    * A7 (`StepMath.aggregatedStep`).
+  /** Render one timeframe over an already-found path set:
+    * per-(step, func) fan-out (A6), `maxDataPoints` step inflation
+    * (A7, `StepMath.aggregatedStep`), the union of the group plans
+    * (U1), collected.
     */
   def render(
       points: DataFrame,
@@ -354,12 +256,9 @@ object Render {
       rules: Rules,
       now: Long,
       consolidateBy: Option[String] = None,
-      appendEmpty: Boolean = false,
       commonStep: Boolean = false,
-      versionMode: VersionMode = VersionMode.DedupExact): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val groups0 = functionGroups(foundPaths, rules, now, tf, consolidateBy)
+      versionMode: VersionMode = VersionMode.DedupExact): Rolled = {
+    val groups0 = functionGroups(foundPaths.distinct, rules, now, tf, consolidateBy)
     // A7 common step: the reference unifies the step across ALL
     // targets of a timeframe (LCM, `render/data/common_step.go:10-63`)
     // and fans out per *function* only; per-(step,func) groups are the
@@ -379,18 +278,15 @@ object Render {
       else groups1.groupBy(_.func).map { case (fn, gs) =>
         FuncGroup(gs.map(_.step).reduce(StepMath.combineSteps), fn, gs.flatMap(_.paths))
       }.toSeq.sortBy(_.func.name)
-    val frames = groups.map { g =>
-      val step = StepMath.aggregatedStep(g.step, tf.from, tf.until, tf.maxDataPoints)
-      val effective = g.copy(step = step)
-      val rolled = fetchGroup(points, effective, tf, versionMode, cellPrecision = g.step)
-      val pathsDf = spark.createDataset(g.paths).toDF("path")
-      withEmptySeries(gapFill(rolled, pathsDf, tf, step), appendEmpty)
+    val planned = groups.map { g =>
+      g -> g.copy(step = StepMath.aggregatedStep(g.step, tf.from, tf.until, tf.maxDataPoints))
     }
-    // empty find result → empty response (`render/handler.go` returns
-    // the empty body), not a planner error
-    if (frames.isEmpty)
-      spark.createDataset(Seq.empty[(String, Long, Option[Double])])
-        .toDF("path", "time", "value")
-    else frames.reduceLeft(_.unionByName(_))
+    val frames = planned.map { case (g, effective) =>
+      fetchGroup(points, effective, tf, versionMode, cellPrecision = g.step)
+    }
+    // an empty find result runs no job (`render/handler.go` returns
+    // the empty body)
+    val rows = frames.reduceOption(_.unionByName(_)).fold(Array.empty[Row])(_.collect())
+    Rolled(planned.map(_._2), rows)
   }
 }

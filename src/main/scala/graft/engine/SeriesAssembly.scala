@@ -3,17 +3,20 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 
 import graft.model.TimeFrame
-import graft.rollup.Rules
+import graft.rollup.{AggFunc, Rules}
 import graft.sinks.Series
 import graft.time.StepMath
 
-/** Long-form render rows → wire [[Series]] — the single response
-  * assembly shared by the HTTP surface and the e2e fixture runner
-  * (the `ch_response.go:125-170` step): per-(display, target) value
-  * arrays on the grid, the per-path step/function resolved with the
-  * SAME rule lookup the render ran, whisper-compatible consolidation
-  * names, and the literal "any" for appended-empty series
-  * (`render/data/ch_response.go:203`).
+/** The coordinator half of /render — what the reference's Go side does
+  * with the rows ClickHouse returns: gap-fill onto the grid
+  * (`helper/point/func.go:53-118`), empty series
+  * (`render/data/ch_response.go:98-107`), alias fan-out
+  * (`pkg/alias/map.go:36-70`) and the wire series
+  * (`ch_response.go:125-170`). Its input is a [[Render.Rolled]]: the
+  * rolled rows and the group plan they were rolled with, so every
+  * series' function, step and grid come from the plan that produced
+  * its values. One assembly serves the HTTP surface, the e2e fixture
+  * runner and the `g_render_*` registry entries.
   */
 object SeriesAssembly {
 
@@ -26,67 +29,90 @@ object SeriesAssembly {
     case other     => other
   }
 
-  /** The per-path (function, effective step) the render resolved —
-    * callers MUST pass the same `now` the render used, or a clock
-    * tick across a retention-age boundary reports a step the data
-    * wasn't rolled to.
+  /** One found path on its group's regular grid `[start, stop)`:
+    * `values(i)` is the bucket at `start + i * step`, `None` where no
+    * point was rolled. An absent point stays apart from a stored NaN
+    * until [[Aliased.series]] encodes both as NaN.
     */
-  def perPathMeta(
-      paths: Seq[String],
-      rules: Rules,
-      now: Long,
-      tf: TimeFrame,
-      consolidateBy: Option[String]): (Map[String, String], Map[String, Long]) = {
-    val groups = Render.functionGroups(paths, rules, now, tf, consolidateBy)
-    val funcByPath = groups.flatMap(g => g.paths.map(_ -> g.func.name)).toMap
-    val stepByPath = groups.flatMap { g =>
-      val step = StepMath.aggregatedStep(g.step, tf.from, tf.until, tf.maxDataPoints)
-      g.paths.map(_ -> step)
-    }.toMap
-    (funcByPath, stepByPath)
+  final case class Grid(
+      path: String,
+      func: AggFunc,
+      start: Long,
+      step: Long,
+      values: Array[Option[Double]]) {
+    def stop: Long = start + step * values.length
   }
 
-  /** Collect a renderMulti output (path, target, display_name, time,
-    * value) into Series, one per (display, target, path) group.
+  /** A grid displayed under one (target, display name) of the request. */
+  final case class Aliased(target: String, display: String, grid: Grid) {
+
+    /** The wire series: absent points become NaN, the reference's
+      * sentinel. A series with nothing but NaN is the appended-empty
+      * synthesis and carries the literal function "any"
+      * (`render/data/ch_response.go:203`).
+      */
+    def series: Series = {
+      val values = grid.values.map(_.getOrElse(Double.NaN))
+      val fn = if (values.forall(_.isNaN)) "any" else whisperName(grid.func.name)
+      Series(display, target, fn, grid.start, grid.stop, grid.step, values)
+    }
+  }
+
+  /** Gap-fill (W1) and the empty-series rule (W4): every path of every
+    * planned group on that group's `[start, stop)` grid
+    * (`StepMath.gridBounds`), in path order. A stored NaN is a point;
+    * a path with no point in the window drops unless `appendEmpty`,
+    * and a window holding no step-aligned bucket yields no grid at
+    * all.
+    */
+  def fill(rolled: Render.Rolled, tf: TimeFrame, appendEmpty: Boolean): Seq[Grid] = {
+    val byPath = rolled.groups.flatMap { g =>
+      val (start, stop) = StepMath.gridBounds(tf.from, tf.until, g.step)
+      val n = math.max(0L, (stop - start) / g.step).toInt
+      g.paths.map(p => p -> Grid(p, g.func, start, g.step, Array.fill[Option[Double]](n)(None)))
+    }.toMap
+    rolled.rows.foreach { r =>
+      val g = byPath(r.getString(0))
+      val offset = r.getLong(1) - g.start
+      val i = offset / g.step
+      if (!r.isNullAt(2) && offset >= 0 && offset % g.step == 0 && i < g.values.length)
+        g.values(i.toInt) = Some(r.getDouble(2))
+    }
+    byPath.values.toSeq
+      .filter(g => g.values.nonEmpty && (appendEmpty || g.values.exists(_.isDefined)))
+      .sortBy(_.path)
+  }
+
+  /** Alias fan-out (J2): each grid once per distinct (target, display
+    * name) that found its path, ordered by (display, target, path).
+    */
+  def fanOut(grids: Seq[Grid], targets: Seq[(String, Seq[(String, String)])]): Seq[Aliased] = {
+    val byPath = grids.map(g => g.path -> g).toMap
+    targets
+      .flatMap { case (target, pairs) => pairs.map { case (path, display) => (display, target, path) } }
+      .distinct.sorted
+      .flatMap { case (display, target, path) => byPath.get(path).map(Aliased(target, display, _)) }
+  }
+
+  /** One render request's targets, both halves: `targets` maps a raw
+    * target expression to its found (path, display name) pairs. All
+    * targets share one Spark render — one scan family for every
+    * target, as the reference's common-step design intends
+    * (`render/data/common_step.go`) — then assemble on the driver.
+    * The entry point of `/render` and the e2e fixture runner.
     */
   def assemble(
-      out: DataFrame,
-      funcByPath: Map[String, String],
-      stepByPath: Map[String, Long]): Seq[Series] = {
-    out.select("path", "target", "display_name", "time", "value")
-      .collect()
-      .groupBy(r => (r.getString(2), r.getString(1), r.getString(0))).toSeq
-      .sortBy(_._1)
-      .map { case ((display, target, path), rs) =>
-        val step = stepByPath(path)
-        val byTime = rs.map(r => r.getLong(3) ->
-          (if (r.isNullAt(4)) Double.NaN else r.getDouble(4))).sortBy(_._1)
-        val values = byTime.map(_._2)
-        // a series with no point in the window is the appended-empty
-        // synthesis → the literal function "any"
-        val fn =
-          if (values.forall(_.isNaN)) "any" else whisperName(funcByPath(path))
-        Series(
-          name = display,
-          pathExpression = target,
-          function = fn,
-          start = byTime.head._1,
-          stop = byTime.last._1 + step,
-          step = step,
-          values = values)
-      }
-  }
-
-  /** Convenience: meta + assemble in one call with a single `now`. */
-  def collect(
-      out: DataFrame,
+      points: DataFrame,
       targets: Seq[(String, Seq[(String, String)])],
       tf: TimeFrame,
       rules: Rules,
       now: Long,
-      consolidateBy: Option[String]): Seq[Series] = {
-    val (funcByPath, stepByPath) =
-      perPathMeta(targets.flatMap(_._2.map(_._1)).distinct, rules, now, tf, consolidateBy)
-    assemble(out, funcByPath, stepByPath)
+      consolidateBy: Option[String] = None,
+      appendEmpty: Boolean = false,
+      versionMode: Render.VersionMode = Render.VersionMode.DedupExact): Seq[Aliased] = {
+    val paths = targets.flatMap(_._2.map(_._1))
+    val rolled = Render.render(points, paths, tf, rules, now, consolidateBy,
+      versionMode = versionMode)
+    fanOut(fill(rolled, tf, appendEmpty), targets)
   }
 }

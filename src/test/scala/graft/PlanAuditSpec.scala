@@ -125,6 +125,25 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  // The g_render_* entries assemble their rows on the driver, so the
+  // plans audited above show only the wrapped result; the render's
+  // Spark half is audited on one group plan here: no join at all, and
+  // one exchange (by path) that both aggregates run behind.
+  for (mode <- Seq(graft.engine.Render.VersionMode.DedupExact,
+      graft.engine.Render.VersionMode.MergedCells))
+    test(s"render group plan ($mode): one exchange by path, no join") {
+      import graft.engine.{Finder, GraphiteTables, Render}
+      val found = Finder.find(GraphiteTables.index(spark, sfDir), "events.*.*")
+        .select("path").collect().map(_.getString(0)).toSeq
+      val group = Render.FuncGroup(60L, graft.rollup.AggFunc.Avg, found)
+      val p = Render.fetchGroup(GraphiteTables.points(spark, sfDir), group,
+        graft.model.TimeFrame(1704067200L, 1704070799L), mode)
+        .queryExecution.executedPlan.toString
+      assert("Exchange".r.findAllIn(p).length == 1, p)
+      assert(p.contains("hashpartitioning(path"), p)
+      assert(!p.contains("Join"), p)
+    }
+
   test("d_decontaminate: eval shingles reach the corpus via broadcast") {
     assert(plan("d_decontaminate").contains("BroadcastHashJoin"))
   }

@@ -231,6 +231,21 @@ class HttpApiSpec extends AnyFunSuite {
     assert(get(s"/render/?format=json&target=a&from=10&until=10").statusCode() == 400)
   }
 
+  test("/render window with no step-aligned bucket: 200 and no series, with or without append") {
+    // (rnow+1, rnow+9) holds no 10 s bucket: every grid is empty
+    val path = s"/render/?format=json&target=test.plain*&from=${rnow + 1}&until=${rnow + 9}"
+    val appending = new HttpApi(spark, tablesDir,
+      HttpApi.Config(rules = rules, appendEmptySeries = true), clock = () => now).start()
+    try {
+      for (base <- Seq(api.address, appending.address)) {
+        val r = client.send(HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+        assert(r.body() == JsonSink.render(Nil, rnow + 1, rnow + 9))
+      }
+    } finally appending.stop()
+  }
+
   test("/tags/autoComplete/values and /tags") {
     val vals = get("/tags/autoComplete/values?tag=tag2&expr=" +
       java.net.URLEncoder.encode("tag1=value1", "UTF-8"))

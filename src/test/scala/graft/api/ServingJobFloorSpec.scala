@@ -23,12 +23,14 @@ import graft.streaming.Ingest
   *     named after the `parquet` reader call site) — the tables open
   *     with fixed schemas;
   *   - a narrow plain render with an uncached find runs an exact job
-  *     count: 2 find jobs, then the render's query stages (alias
-  *     broadcast, merged-cell shuffle, rollup shuffle, gap-fill
-  *     broadcast, empty-series window shuffle, result);
+  *     count: 2 find jobs, then the render's 2 query stages (one
+  *     shuffle by `path` that both the merged-cell and the rollup
+  *     aggregate run behind, and the result collect of the rolled
+  *     rows). Gap-fill, the empty-series rule and alias fan-out run
+  *     on the driver and start no job;
   *   - the same render with its find served from the find cache runs
-  *     only the render's stages, and a `seriesByTag` render runs the
-  *     tagged find's jobs plus the same render stages.
+  *     only the render's 2 stages, and a `seriesByTag` render runs the
+  *     tagged find's 2 jobs plus the same 2.
   * AQE's stage split is deterministic for a fixed store, so the count
   * is pinned exactly: a change that adds a stage fails here.
   */
@@ -106,20 +108,20 @@ class ServingJobFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(inference.isEmpty, s"$name:\n${jobs.mkString("\n")}")
     }
 
-  test("narrow plain render, uncached find: exactly 8 jobs") {
+  test("narrow plain render, uncached find: exactly 4 jobs") {
     val jobs = jobsOf(s"/render/?target=floor.b.*&$window&format=json")
-    assert(jobs.length == 8, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+    assert(jobs.length == 4, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 
-  test("narrow plain render, cached find: exactly 6 jobs") {
+  test("narrow plain render, cached find: exactly 2 jobs") {
     val path = s"/render/?target=floor.b.*&$window&format=json"
     jobsOf(path, cachingApi) // fills the find cache
     val jobs = jobsOf(path, cachingApi)
-    assert(jobs.length == 6, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+    assert(jobs.length == 2, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 
-  test("seriesByTag render: exactly 8 jobs") {
+  test("seriesByTag render: exactly 4 jobs") {
     val jobs = jobsOf(s"/render/?target=${enc("seriesByTag('name=floor_tagged')")}&$window&format=json")
-    assert(jobs.length == 8, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+    assert(jobs.length == 4, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 }

@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Pattern, Retention, RuleType, Rules}
-import graft.sinks.Sinks
 import graft.streaming.Ingest
 
 /** e2e reproduction of `tests/agg_latest` and
@@ -42,10 +41,9 @@ class AggE2ESpec extends AnyFunSuite {
     val index = spark.read.parquet(s"$tables/index")
     val found = Finder.find(index, "test.{avg,min,max,sum}")
       .collect().map(_.getString(0)).toSeq
-    val out = Render.render(points, found, TimeFrame(rnow - 10, rnow + 10), rules,
-      now = rnow + 10, appendEmpty = appendEmpty)
-    Sinks.collectSeries(Sinks.seriesFrame(out, 10))
-      .map(s => s.name -> s.values.toSeq).toMap
+    SeriesAssembly.assemble(points, Seq("test.*" -> found.map(p => (p, p))),
+      TimeFrame(rnow - 10, rnow + 10), rules, now = rnow + 10, appendEmpty = appendEmpty)
+      .map(a => a.display -> a.series.values.toSeq).toMap
   }
 
   test("agg_latest: later write version replaces the bucket for every function") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Rules}
-import graft.sinks.Sinks
+import graft.sinks.Series
 import graft.streaming.Ingest
 
 /** e2e reproduction of `tests/consolidateBy/test.toml`: the
@@ -37,14 +37,15 @@ class ConsolidateByE2ESpec extends AnyFunSuite {
   private val target =
     "seriesByTag('name=request_success_total.counter', 'app=test', 'project=Test', 'environment=TEST')"
 
+  private def series(found: Seq[String], tf: TimeFrame, fn: String): Seq[Series] =
+    SeriesAssembly.assemble(spark.read.parquet(s"$tables/points"),
+      Seq(target -> found.map(p => (p, p))), tf, rules, now = 1030, consolidateBy = Some(fn))
+      .map(_.series)
+
   private def run(fn: String): Map[String, Seq[Double]] = {
-    val points = spark.read.parquet(s"$tables/points")
     val tagsTable = spark.read.parquet(s"$tables/tags")
     val found = Finder.findTagged(tagsTable, target).collect().map(_.getString(0)).toSeq
-    val tf = TimeFrame(1000, 1030, maxDataPoints = 2)
-    val out = Render.render(points, found, tf, rules, now = 1030,
-      consolidateBy = Some(fn))
-    Sinks.collectSeries(Sinks.seriesFrame(out, 20), function = fn)
+    series(found, TimeFrame(1000, 1030, maxDataPoints = 2), fn)
       .map(s => s.name.replace("?", ";").replace("&", ";") -> s.values.toSeq).toMap
   }
 
@@ -68,12 +69,9 @@ class ConsolidateByE2ESpec extends AnyFunSuite {
   }
 
   test("grid bounds under maxDataPoints inflation") {
-    val points = spark.read.parquet(s"$tables/points")
     val tagsTable = spark.read.parquet(s"$tables/tags")
     val found = Finder.findTagged(tagsTable, target).collect().map(_.getString(0)).toSeq
-    val out = Render.render(points, found, TimeFrame(1000, 1030, 2), rules, now = 1030,
-      consolidateBy = Some("max"))
-    val s = Sinks.collectSeries(Sinks.seriesFrame(out, 20)).head
+    val s = series(found, TimeFrame(1000, 1030, 2), "max").head
     assert(s.start == 1000 && s.stop == 1040 && s.step == 20)
   }
 }

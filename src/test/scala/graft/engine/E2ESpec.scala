@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Rules}
-import graft.sinks.Sinks
 import graft.streaming.Ingest
 
 /** End-to-end reproduction of the reference's own e2e fixture
@@ -79,18 +78,19 @@ class E2ESpec extends AnyFunSuite {
 
   test("zero-bucket window renders empty, not a sequence error") {
     // (rnow+1, rnow+9) contains no 10 s-aligned bucket
-    val out = Render.render(points, Seq("test.plain1"),
-      TimeFrame(rnow + 1, rnow + 9), rules, now = rnow + 9, appendEmpty = true)
-    assert(out.count() == 0)
+    val tf = TimeFrame(rnow + 1, rnow + 9)
+    val out = SeriesAssembly.assemble(points, Seq("test.plain1" -> Seq(("test.plain1", "test.plain1"))),
+      tf, rules, now = rnow + 9, appendEmpty = true)
+    assert(out.isEmpty)
   }
 
   test("empty find result renders as the empty response") {
-    val out = Render.render(points, Nil, TimeFrame(rnow - 10, rnow), rules, now = rnow)
-    assert(out.columns.toSeq == Seq("path", "time", "value"))
-    assert(out.count() == 0)
-    val multi = Render.renderMulti(points,
-      Seq("nothing.matches.*" -> Nil), TimeFrame(rnow - 10, rnow), rules, now = rnow)
-    assert(multi.count() == 0)
+    val rolled = Render.render(points, Nil, TimeFrame(rnow - 10, rnow), rules, now = rnow)
+    assert(rolled.groups.isEmpty && rolled.rows.isEmpty)
+    val multi = SeriesAssembly.assemble(points,
+      Seq("nothing.matches.*" -> Nil), TimeFrame(rnow - 10, rnow), rules, now = rnow,
+      appendEmpty = true)
+    assert(multi.isEmpty)
   }
 
   test("render_checks: plain multi-target grid values") {
@@ -101,9 +101,8 @@ class E2ESpec extends AnyFunSuite {
       t -> found.map(p => (p, p))
     }
     val tf = TimeFrame(rnow - 10, rnow)
-    val out = Render.renderMulti(points, targets, tf, rules, now = rnow)
-    val series = Sinks.collectSeries(Sinks.seriesFrame(out, 10))
-      .map(s => (s.name, s.pathExpression) -> s).toMap
+    val series = SeriesAssembly.assemble(points, targets, tf, rules, now = rnow)
+      .map(_.series).map(s => (s.name, s.pathExpression) -> s).toMap
 
     val s1 = series(("test.plain1", "test.plain*"))
     assert(s1.start == rnow - 10 && s1.stop == rnow + 10 && s1.step == 10)
@@ -125,9 +124,8 @@ class E2ESpec extends AnyFunSuite {
         (p, p.replace("?", ";").replace("&", ";"))) // display decode
     }
     val tf = TimeFrame(rnow - 10, rnow)
-    val out = Render.renderMulti(points, targets, tf, rules, now = rnow)
-    val series = Sinks.collectSeries(Sinks.seriesFrame(out, 10))
-      .map(s => (s.name, s.pathExpression) -> s).toMap
+    val series = SeriesAssembly.assemble(points, targets, tf, rules, now = rnow)
+      .map(_.series).map(s => (s.name, s.pathExpression) -> s).toMap
 
     assert(series(("metric1;tag1=value1;tag2=value21;tag3=value3", exprs(0)))
       .values.toSeq == Seq(2.0, 3.0))

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -37,12 +37,9 @@ class EmptySeriesSpec extends AnyFunSuite {
     ).toDF("path", "value", "time", "version")
   }
 
-  private def classic(appendEmpty: Boolean): Seq[Series] = {
-    val targets = Seq("es.*" -> found.map(p => (p, p)))
-    val out = Render.renderMulti(points, targets, tf, rules, now = t0 + 20,
-      appendEmpty = appendEmpty)
-    SeriesAssembly.collect(out, targets, tf, rules, now = t0 + 20, consolidateBy = None)
-  }
+  private def classic(appendEmpty: Boolean): Seq[Series] =
+    SeriesAssembly.assemble(points, Seq("es.*" -> found.map(p => (p, p))), tf, rules,
+      now = t0 + 20, appendEmpty = appendEmpty).map(_.series)
 
   private def shape(s: Seq[Series]): Seq[(String, String, Long, Long, Seq[String])] =
     s.map(x => (x.name, x.function, x.start, x.step, x.values.toSeq.map(_.toString)))
@@ -59,17 +56,16 @@ class EmptySeriesSpec extends AnyFunSuite {
     assert(shape(classic(true)) == Seq(("es.gone", "any", t0, 10L, nan3), live, allNan))
   }
 
-  test("withEmptySeries keeps NaN-valued paths and drops only all-null ones") {
-    import spark.implicits._
-    val filled = Seq[(String, Long, Option[Double])](
-      ("a", t0, None), ("a", t0 + 10, None),
-      ("b", t0, Some(Double.NaN)), ("b", t0 + 10, None),
-      ("c", t0, None), ("c", t0 + 10, Some(3.0))
-    ).toDF("path", "time", "value")
+  test("empty-series rule keeps NaN-valued paths and drops only all-null ones") {
+    // rolled rows as the Spark render returns them: path a has none,
+    // b a stored NaN, c one value
+    val rolled = Render.Rolled(
+      Seq(Render.FuncGroup(10L, AggFunc.Avg, Seq("a", "b", "c"))),
+      Array(Row("b", t0, Double.NaN), Row("c", t0 + 10, 3.0)))
     def rows(appendEmpty: Boolean): Seq[String] =
-      Render.withEmptySeries(filled, appendEmpty).collect()
-        .map(r => s"${r.getString(0)}@${r.getLong(1) - t0}=${Option(r.get(2)).getOrElse("null")}")
-        .sorted.toSeq
+      SeriesAssembly.fill(rolled, TimeFrame(t0, t0 + 10), appendEmpty)
+        .flatMap(g => g.values.indices.map(i =>
+          s"${g.path}@${g.start + g.step * i - t0}=${g.values(i).fold("null")(_.toString)}"))
     assert(rows(appendEmpty = false) ==
       Seq("b@0=NaN", "b@10=null", "c@0=null", "c@10=3.0"))
     assert(rows(appendEmpty = true) ==

@@ -6,10 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.model.TimeFrame
 import graft.rollup.{AggFunc, Pattern, Retention, RuleType, Rules}
+import graft.sinks.Series
 
 /** The render's plan-explosion cap (SURVEY §7.4 risk 1): past 32
   * distinct (step, function) groups, `Render.render` coalesces the
-  * groups of each function onto the LCM of their steps.
+  * groups of each function onto the LCM of their steps, and the
+  * assembled series report the step and stop of that coarser grid.
   *
   * Fixture: 6 functions × 6 rule precisions (10/20/30/60/120/180 s)
   * = 36 groups, one path each. LCM(10, 20, 30, 60, 120, 180) = 360,
@@ -40,14 +42,15 @@ class RenderCoarseningSpec extends AnyFunSuite {
       .toDF("path", "value", "time", "version")
   }
 
-  /** path → (time, value) rows, time-sorted. */
-  private def rendered(funcs: Seq[AggFunc]): Map[String, Seq[(Long, Double)]] = {
+  /** path → its assembled series. */
+  private def rendered(funcs: Seq[AggFunc]): Map[String, Series] = {
     val paths = for (f <- funcs; p <- precisions) yield path(f, p)
-    Render.render(points, paths, tf, rulesFor(funcs), now = t0 + 1439)
-      .collect().toSeq
-      .groupBy(_.getString(0))
-      .map { case (p, rs) => p -> rs.map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1) }
+    SeriesAssembly.assemble(points, Seq("co.*" -> paths.map(p => (p, p))), tf,
+      rulesFor(funcs), now = t0 + 1439)
+      .map(a => a.display -> a.series).toMap
   }
+
+  private def times(s: Series): Seq[Long] = s.values.indices.map(i => s.start + s.step * i)
 
   private def expected(f: AggFunc, b: Int): Double = f match {
     case AggFunc.Avg     => 36.0 * b + 17.5
@@ -62,9 +65,10 @@ class RenderCoarseningSpec extends AnyFunSuite {
     val out = rendered(AggFunc.all)
     assert(out.size == 36)
     for (f <- AggFunc.all; p <- precisions) {
-      val rows = out(path(f, p))
-      assert(rows.map(_._1) == (0 until 4).map(b => t0 + 360L * b), s"${path(f, p)} grid")
-      assert(rows.map(_._2) == (0 until 4).map(b => expected(f, b)), s"${path(f, p)} values")
+      val s = out(path(f, p))
+      assert(times(s) == (0 until 4).map(b => t0 + 360L * b), s"${path(f, p)} grid")
+      assert(s.values.toSeq == (0 until 4).map(b => expected(f, b)), s"${path(f, p)} values")
+      assert(s.step == 360 && s.stop == t0 + 1440, s"${path(f, p)} step ${s.step} stop ${s.stop}")
     }
   }
 
@@ -73,8 +77,9 @@ class RenderCoarseningSpec extends AnyFunSuite {
     val out = rendered(funcs)
     assert(out.size == 30)
     for (f <- funcs; p <- precisions) {
-      val times = out(path(f, p)).map(_._1)
-      assert(times == (t0 until t0 + 1440 by p), s"${path(f, p)} grid")
+      val s = out(path(f, p))
+      assert(times(s) == (t0 until t0 + 1440 by p), s"${path(f, p)} grid")
+      assert(s.step == p && s.stop == t0 + 1440, s"${path(f, p)} step ${s.step} stop ${s.stop}")
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.engine.Render
+import graft.engine.{Render, SeriesAssembly}
 import graft.rollup.{AggFunc, Pattern, Retention, Rules, RuleType}
 
 /** Retention compaction: band resolution per row age, and the
@@ -52,8 +52,9 @@ class CompactionSpec extends AnyFunSuite {
     val compacted = Compaction.compact(raw, rules, now)
     val tf = graft.model.TimeFrame(now - 7200, now - 3600)
     def grid(points: org.apache.spark.sql.DataFrame) =
-      Render.render(points, Seq("a.sum"), tf, rules, now = now)
-        .collect().map(r => (r.getLong(1), Option(r.get(2)))).toMap
+      SeriesAssembly.fill(Render.render(points, Seq("a.sum"), tf, rules, now = now), tf,
+        appendEmpty = false)
+        .flatMap(g => g.values.indices.map(i => (g.start + g.step * i, g.values(i)))).toMap
     assert(grid(compacted) == grid(raw))
   }
 }
