@@ -32,6 +32,15 @@ import graft.time.StepMath
   * (`doc/aggregation.md:96-140`). The collect is bounded by found
   * paths × grid points, and the grid by `maxDataPoints`, never by the
   * stored row count.
+  *
+  * Repeat reads: the HTTP server passes its [[RenderCache]]. A group's
+  * rolled rows depend only on its plan and on the `points` files
+  * Spark reads, and between two ingest commits those files do not
+  * change, so each planned group is looked up by its plan under the
+  * current file set's epoch before anything is planned. A render whose
+  * groups all hit opens no table and starts no Spark job — the part
+  * of the reference's millisecond reads that a per-query Spark floor
+  * (about 100 ms of planning and 2 jobs) cannot otherwise reach.
   */
 object Render {
 
@@ -236,28 +245,85 @@ object Render {
     cold.select(cols: _*).unionByName(hot.select(cols: _*))
   }
 
-  /** A render's Spark output: the group plan it ran — each group's
-    * `step` is the one its rows were rolled to, after the >32-group
-    * coarsening and `maxDataPoints` inflation — and the rolled rows
-    * (path, time, value), one per bucket holding a point.
-    * [[SeriesAssembly]] builds the response from both.
+  /** One planned group's rolled rows, dense over its aligned window
+    * `[from', until']` (`StepMath.alignFromUntil`): cell
+    * `i * buckets + j` holds path `group.paths(i)` at
+    * `start + j * group.step`, and `present` marks the cells a rolled
+    * row filled, so an absent bucket stays apart from a stored NaN.
+    * 8 bytes a cell plus a bit — the form a render returns and
+    * [[RenderCache]] keeps. Not mutated once built.
     */
-  final case class Rolled(groups: Seq[FuncGroup], rows: Array[Row])
+  final class GroupRows private (val group: FuncGroup, start: Long, buckets: Int) {
+    private val values = new Array[Double](group.paths.length * buckets)
+    private val present = new java.util.BitSet
+
+    /** Path `path`'s rolled value at `time`; `None` where no row. */
+    def at(path: Int, time: Long): Option[Double] = {
+      val c = cell(path, time)
+      if (c >= 0 && present.get(c)) Some(values(c)) else None
+    }
+
+    /** The cell of path `path` at `time`, -1 off the window's grid. */
+    private def cell(path: Int, time: Long): Int = {
+      val offset = time - start
+      if (offset < 0 || offset % group.step != 0 || offset / group.step >= buckets) -1
+      else path * buckets + (offset / group.step).toInt
+    }
+  }
+
+  object GroupRows {
+
+    /** Lay collected (path, time, value) rows out per group; a null
+      * value is no row.
+      */
+    def of(groups: Seq[FuncGroup], tf: TimeFrame, rows: Array[Row]): Seq[GroupRows] = {
+      val laid = groups.map { g =>
+        val (from, until) = StepMath.alignFromUntil(tf.from, tf.until, g.step)
+        new GroupRows(g, from, math.max(0L, (until + 1 - from) / g.step).toInt)
+      }
+      val slot = (for (b <- laid; (p, i) <- b.group.paths.zipWithIndex) yield p -> (b, i)).toMap
+      rows.foreach { r =>
+        val (b, i) = slot(r.getString(0))
+        val c = b.cell(i, r.getLong(1))
+        if (c >= 0 && !r.isNullAt(2)) {
+          b.values(c) = r.getDouble(2)
+          b.present.set(c)
+        }
+      }
+      laid
+    }
+  }
+
+  /** A render's Spark output: each planned group — its `step` the one
+    * its rows were rolled to, after the >32-group coarsening and
+    * `maxDataPoints` inflation — with its rolled rows.
+    * [[SeriesAssembly]] builds the response from it.
+    */
+  final case class Rolled(groups: Seq[GroupRows])
 
   /** Render one timeframe over an already-found path set:
     * per-(step, func) fan-out (A6), `maxDataPoints` step inflation
     * (A7, `StepMath.aggregatedStep`), the union of the group plans
     * (U1), collected.
+    *
+    * With a `cache`, each planned group is looked up first and only
+    * the missing ones are planned and collected; `points` (by name, so
+    * pass the opener, not an opened table) is opened only if one is
+    * missing, after the cache listed the store, so a render served
+    * whole from the cache opens no table and starts no Spark job. The
+    * cache is exact ([[RenderCache]]): a hit holds the rows this plan
+    * would collect.
     */
   def render(
-      points: DataFrame,
+      points: => DataFrame,
       foundPaths: Seq[String],
       tf: TimeFrame,
       rules: Rules,
       now: Long,
       consolidateBy: Option[String] = None,
       commonStep: Boolean = false,
-      versionMode: VersionMode = VersionMode.DedupExact): Rolled = {
+      versionMode: VersionMode = VersionMode.DedupExact,
+      cache: Option[RenderCache] = None): Rolled = {
     val groups0 = functionGroups(foundPaths.distinct, rules, now, tf, consolidateBy)
     // A7 common step: the reference unifies the step across ALL
     // targets of a timeframe (LCM, `render/data/common_step.go:10-63`)
@@ -278,15 +344,25 @@ object Render {
       else groups1.groupBy(_.func).map { case (fn, gs) =>
         FuncGroup(gs.map(_.step).reduce(StepMath.combineSteps), fn, gs.flatMap(_.paths))
       }.toSeq.sortBy(_.func.name)
-    val planned = groups.map { g =>
-      g -> g.copy(step = StepMath.aggregatedStep(g.step, tf.from, tf.until, tf.maxDataPoints))
+    // each group at its rolled step, paths sorted (the cache key's
+    // order); `cellPrecision` keeps the storage step MergedCells uses
+    val keys = groups.map { g =>
+      val rolled = FuncGroup(
+        StepMath.aggregatedStep(g.step, tf.from, tf.until, tf.maxDataPoints), g.func, g.paths.sorted)
+      val (from, until) = StepMath.alignFromUntil(tf.from, tf.until, rolled.step)
+      RenderCache.Key(versionMode, g.step, rolled, from, until)
     }
-    val frames = planned.map { case (g, effective) =>
-      fetchGroup(points, effective, tf, versionMode, cellPrecision = g.step)
+    lazy val pts = points
+    def load(missing: Seq[RenderCache.Key]): Seq[GroupRows] = {
+      val frames = missing.map(k => fetchGroup(pts, k.group, tf, versionMode, cellPrecision = k.cellPrecision))
+      // an empty find result runs no job (`render/handler.go` returns
+      // the empty body)
+      val rows = frames.reduceOption(_.unionByName(_)).fold(Array.empty[Row])(_.collect())
+      GroupRows.of(missing.map(_.group), tf, rows)
     }
-    // an empty find result runs no job (`render/handler.go` returns
-    // the empty body)
-    val rows = frames.reduceOption(_.unionByName(_)).fold(Array.empty[Row])(_.collect())
-    Rolled(planned.map(_._2), rows)
+    Rolled(cache match {
+      case Some(c) if keys.nonEmpty => c.through(keys)(load)
+      case _ => load(keys)
+    })
   }
 }

@@ -12,11 +12,15 @@ import graft.time.StepMath
   * (`helper/point/func.go:53-118`), empty series
   * (`render/data/ch_response.go:98-107`), alias fan-out
   * (`pkg/alias/map.go:36-70`) and the wire series
-  * (`ch_response.go:125-170`). Its input is a [[Render.Rolled]]: the
-  * rolled rows and the group plan they were rolled with, so every
-  * series' function, step and grid come from the plan that produced
-  * its values. One assembly serves the HTTP surface, the e2e fixture
-  * runner and the `g_render_*` registry entries.
+  * (`ch_response.go:125-170`). Its input is a [[Render.Rolled]]: per
+  * planned group, the group (function, rolled step, paths) and its
+  * rolled rows, so every series' function, step and grid come from the
+  * plan that produced its values. The rows keep an absent bucket apart
+  * from a stored NaN, whether they were just collected or come from
+  * the server's [[RenderCache]], so a cached render assembles the same
+  * series, named the same way, as an uncached one. One assembly serves
+  * the HTTP surface, the e2e fixture runner and the `g_render_*`
+  * registry entries.
   */
 object SeriesAssembly {
 
@@ -47,14 +51,15 @@ object SeriesAssembly {
   final case class Aliased(target: String, display: String, grid: Grid) {
 
     /** The wire series: absent points become NaN, the reference's
-      * sentinel. A series with nothing but NaN is the appended-empty
+      * sentinel. A series with no point at all is the appended-empty
       * synthesis and carries the literal function "any"
-      * (`render/data/ch_response.go:203`).
+      * (`render/data/ch_response.go:203`); a stored series keeps its
+      * rule function, even when every stored value is NaN.
       */
     def series: Series = {
-      val values = grid.values.map(_.getOrElse(Double.NaN))
-      val fn = if (values.forall(_.isNaN)) "any" else whisperName(grid.func.name)
-      Series(display, target, fn, grid.start, grid.stop, grid.step, values)
+      val fn = if (grid.values.forall(_.isEmpty)) "any" else whisperName(grid.func.name)
+      Series(display, target, fn, grid.start, grid.stop, grid.step,
+        grid.values.map(_.getOrElse(Double.NaN)))
     }
   }
 
@@ -66,19 +71,15 @@ object SeriesAssembly {
     * all.
     */
   def fill(rolled: Render.Rolled, tf: TimeFrame, appendEmpty: Boolean): Seq[Grid] = {
-    val byPath = rolled.groups.flatMap { g =>
+    val grids = rolled.groups.flatMap { rows =>
+      val g = rows.group
       val (start, stop) = StepMath.gridBounds(tf.from, tf.until, g.step)
       val n = math.max(0L, (stop - start) / g.step).toInt
-      g.paths.map(p => p -> Grid(p, g.func, start, g.step, Array.fill[Option[Double]](n)(None)))
-    }.toMap
-    rolled.rows.foreach { r =>
-      val g = byPath(r.getString(0))
-      val offset = r.getLong(1) - g.start
-      val i = offset / g.step
-      if (!r.isNullAt(2) && offset >= 0 && offset % g.step == 0 && i < g.values.length)
-        g.values(i.toInt) = Some(r.getDouble(2))
+      g.paths.zipWithIndex.map { case (p, i) =>
+        Grid(p, g.func, start, g.step, Array.tabulate(n)(k => rows.at(i, start + k * g.step)))
+      }
     }
-    byPath.values.toSeq
+    grids
       .filter(g => g.values.nonEmpty && (appendEmpty || g.values.exists(_.isDefined)))
       .sortBy(_.path)
   }
@@ -99,20 +100,24 @@ object SeriesAssembly {
     * targets share one Spark render — one scan family for every
     * target, as the reference's common-step design intends
     * (`render/data/common_step.go`) — then assemble on the driver.
-    * The entry point of `/render` and the e2e fixture runner.
+    * The entry point of `/render` and the e2e fixture runner; with a
+    * `cache` (the server's), groups already rolled over the same
+    * `points` files are not read again, and `points` is opened only
+    * if one is missing.
     */
   def assemble(
-      points: DataFrame,
+      points: => DataFrame,
       targets: Seq[(String, Seq[(String, String)])],
       tf: TimeFrame,
       rules: Rules,
       now: Long,
       consolidateBy: Option[String] = None,
       appendEmpty: Boolean = false,
-      versionMode: Render.VersionMode = Render.VersionMode.DedupExact): Seq[Aliased] = {
+      versionMode: Render.VersionMode = Render.VersionMode.DedupExact,
+      cache: Option[RenderCache] = None): Seq[Aliased] = {
     val paths = targets.flatMap(_._2.map(_._1))
     val rolled = Render.render(points, paths, tf, rules, now, consolidateBy,
-      versionMode = versionMode)
+      versionMode = versionMode, cache = cache)
     fanOut(fill(rolled, tf, appendEmpty), targets)
   }
 }

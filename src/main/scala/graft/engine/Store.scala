@@ -24,8 +24,10 @@ object Store {
   private def open(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(dir)
 
+  def pointsDir(dir: String): String = s"$dir/points"
+
   def points(spark: SparkSession, dir: String): DataFrame =
-    open(spark, s"$dir/points", Schemas.points)
+    open(spark, pointsDir(dir), Schemas.points)
 
   def index(spark: SparkSession, dir: String): DataFrame =
     open(spark, s"$dir/index", Schemas.index)

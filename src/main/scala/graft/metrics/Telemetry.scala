@@ -26,7 +26,8 @@ import scala.util.control.NonFatal
   *     (`metrics.go:189-198`);
   *   - cache counters `find_cache_hits/misses`,
   *     `short_cache_hits/misses`, `default_cache_hits/misses`
-  *     (`metrics.go:143-148`);
+  *     (`metrics.go:143-148`), and graft's `render_cache_hits/misses`
+  *     (per planned render group, no reference twin);
   *   - limiter wait metrics `<scope>_wait.<sub>.{requests,errors}`
   *     (`metrics.go:68-89`);
   *   - per-table query stats `query.<table>.<range>.{requests,errors}`
@@ -418,6 +419,11 @@ object Telemetry {
     val shortCacheMisses: Counter = registry.counter("short_cache_misses")
     val defaultCacheHits: Counter = registry.counter("default_cache_hits")
     val defaultCacheMisses: Counter = registry.counter("default_cache_misses")
+    // graft's own pair, no reference twin: planned render groups served
+    // from (or missing) the rolled-row cache (engine.RenderCache), so a
+    // slow render can be told apart as a miss
+    val renderCacheHits: Counter = registry.counter("render_cache_hits")
+    val renderCacheMisses: Counter = registry.counter("render_cache_misses")
 
     val find = new ScopeStats(registry, "find", findRangeNames, findRangeBounds,
       widths, labels, cfg.extendedStat, withFinder = false)

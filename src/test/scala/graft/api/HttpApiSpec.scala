@@ -71,6 +71,35 @@ class HttpApiSpec extends AnyFunSuite {
     assert(new String(r.body()) == "Graphite-clickhouse is alive.\n")
   }
 
+  test("keep-alive /alive round trips: median of 20 under 10 ms (no delayed-ACK stall)") {
+    // one persistent HTTP/1.1 connection; the server writes headers and
+    // body separately, and with Nagle on its sockets the body waits
+    // for the client's delayed ACK (~40 ms on Linux)
+    val uri = URI.create(api.address)
+    val sock = new java.net.Socket(uri.getHost, uri.getPort)
+    try {
+      sock.setTcpNoDelay(true)
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
+      val request = "GET /alive HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes("US-ASCII")
+      def roundTripMs(): Double = {
+        val t = System.nanoTime()
+        out.write(request); out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) head.append(in.readUnsignedByte().toChar)
+        val length = head.toString.split("\r\n").collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt
+        }.get
+        in.readFully(new Array[Byte](length))
+        assert(head.startsWith("HTTP/1.1 200"), head)
+        (System.nanoTime() - t) / 1e6
+      }
+      roundTripMs() // warm-up
+      val ms = Seq.fill(20)(roundTripMs()).sorted
+      assert((ms(9) + ms(10)) / 2 < 10.0, s"round trips (ms): ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally sock.close()
+  }
+
   test("/metrics/find json, pickle, protobuf agree with the sinks") {
     val rows = Seq(("test.plain1", true), ("test.plain2", true))
     val j = get("/metrics/find/?query=test.pl*&format=json")

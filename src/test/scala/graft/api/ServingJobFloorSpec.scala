@@ -30,7 +30,10 @@ import graft.streaming.Ingest
   *     on the driver and start no job;
   *   - the same render with its find served from the find cache runs
   *     only the render's 2 stages, and a `seriesByTag` render runs the
-  *     tagged find's 2 jobs plus the same 2.
+  *     tagged find's 2 jobs plus the same 2;
+  *   - those are first renders: a repeat of a render on an unchanged
+  *     store, its find cached, is served from the server's rolled-row
+  *     cache and runs no job at all.
   * AQE's stage split is deterministic for a fixed store, so the count
   * is pinned exactly: a change that adds a stage fails here.
   */
@@ -114,14 +117,25 @@ class ServingJobFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("narrow plain render, cached find: exactly 2 jobs") {
-    val path = s"/render/?target=floor.b.*&$window&format=json"
-    jobsOf(path, cachingApi) // fills the find cache
-    val jobs = jobsOf(path, cachingApi)
+    // fills the find cache (its key is day-granular) with a shifted
+    // window, so the counted render is a first render
+    jobsOf(s"/render/?target=floor.b.*&from=${rnow - 290}&until=$rnow&format=json", cachingApi)
+    val jobs = jobsOf(s"/render/?target=floor.b.*&$window&format=json", cachingApi)
     assert(jobs.length == 2, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 
   test("seriesByTag render: exactly 4 jobs") {
-    val jobs = jobsOf(s"/render/?target=${enc("seriesByTag('name=floor_tagged')")}&$window&format=json")
+    // a fresh server: the route test above already rendered this
+    // request on `api`, so its rolled rows are cached there
+    val jobs = jobsOf(s"/render/?target=${enc("seriesByTag('name=floor_tagged')")}&$window&format=json",
+      serve(None))
     assert(jobs.length == 4, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("repeated identical render on an unchanged store: 0 jobs") {
+    val path = s"/render/?target=floor.a.m1&$window&format=json"
+    assert(jobsOf(path, cachingApi).nonEmpty)
+    val jobs = jobsOf(path, cachingApi)
+    assert(jobs.isEmpty, s"${jobs.length} jobs:\n${jobs.mkString("\n")}")
   }
 }

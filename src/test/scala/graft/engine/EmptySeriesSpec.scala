@@ -14,7 +14,9 @@ import graft.sinks.Series
   *     `append-empty-series` is set, and then emits the all-NaN grid
   *     under the literal function `any`;
   *   - a stored NaN is a point: a path whose values are all NaN is
-  *     kept either way (only all-null, i.e. absent, series drop).
+  *     kept either way (only all-null, i.e. absent, series drop), and
+  *     keeps its rule function — only the appended-empty synthesis is
+  *     named `any`.
   */
 class EmptySeriesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -46,7 +48,8 @@ class EmptySeriesSpec extends AnyFunSuite {
 
   private val nan3 = Seq("NaN", "NaN", "NaN")
   private val live = ("es.live", "avg", t0, 10L, Seq("1.0", "2.0", "NaN"))
-  private val allNan = ("es.nan", "any", t0, 10L, nan3)
+  // stored NaNs are points: the series keeps its rule function
+  private val allNan = ("es.nan", "avg", t0, 10L, nan3)
 
   test("renderMulti: a found path with no point in the window is dropped without append") {
     assert(shape(classic(false)) == Seq(live, allNan))
@@ -59,9 +62,9 @@ class EmptySeriesSpec extends AnyFunSuite {
   test("empty-series rule keeps NaN-valued paths and drops only all-null ones") {
     // rolled rows as the Spark render returns them: path a has none,
     // b a stored NaN, c one value
-    val rolled = Render.Rolled(
-      Seq(Render.FuncGroup(10L, AggFunc.Avg, Seq("a", "b", "c"))),
-      Array(Row("b", t0, Double.NaN), Row("c", t0 + 10, 3.0)))
+    val rolled = Render.Rolled(Render.GroupRows.of(
+      Seq(Render.FuncGroup(10L, AggFunc.Avg, Seq("a", "b", "c"))), TimeFrame(t0, t0 + 10),
+      Array(Row("b", t0, Double.NaN), Row("c", t0 + 10, 3.0))))
     def rows(appendEmpty: Boolean): Seq[String] =
       SeriesAssembly.fill(rolled, TimeFrame(t0, t0 + 10), appendEmpty)
         .flatMap(g => g.values.indices.map(i =>
