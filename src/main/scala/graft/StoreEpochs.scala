@@ -39,6 +39,13 @@ package graft
   *    checkpoint blocks until the next bump — forever on a store
   *    that then goes static).
   *
+  * The HTTP server also observes its store at each commit: its
+  * [[graft.engine.StoreSnapshot]] version moves when ingest publishes,
+  * and the first request that sees a new version reports the
+  * snapshot's (bytes, fileCount) here, so a commit re-keys the memos
+  * at the next request rather than at the next tick (its Retuner reads
+  * the same totals, so no FS call feeds either).
+  *
   * Epoch-in-key plus eviction (rather than eviction alone) is what
   * makes the bump race-safe without locking the memo hot path.
   *

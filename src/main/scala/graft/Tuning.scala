@@ -232,22 +232,26 @@ object Tuning {
     * entrypoints (Bench/Verify/ScaleProbe) re-derive per run, but an
     * HTTP session over a store that streaming ingest + compaction grow
     * 10× would otherwise keep its boot-time `initialPartitionNum`
-    * forever. The Retuner re-stats the store through the same
-    * Hadoop-FS rule at most once per `minIntervalSec` (no Spark job,
-    * no driver lock on the hot path; `getContentSummary` is one
-    * namenode call on HDFS — on object stores it is a recursive LIST,
-    * so raise the interval if the store is both huge and flat) and
-    * touches the session confs ONLY when the derived count
+    * forever. The Retuner re-stats the store at most once per
+    * `minIntervalSec` (no Spark job, no driver lock on the hot path)
+    * and touches the session confs ONLY when the derived count
     * changes — a static store re-derives the identical count and the
     * confs (including any manual override layered on top) are left
     * untouched. Shrinkage (compaction, retention drops) lowers the
     * ceiling the same way growth raises it.
+    *
+    * `stat` gives a dir's (bytes, files). By default it is
+    * [[dirStat]], a Hadoop-FS walk (`getContentSummary` is one namenode
+    * call on HDFS, a recursive listing on a local FS or an object
+    * store); the HTTP server passes its store snapshot's totals, which
+    * cost no FS call.
     */
   final class Retuner(
       spark: SparkSession,
       dirs: Seq[String],
       cpus: Int,
-      minIntervalSec: Long = 60L) {
+      minIntervalSec: Long = 60L,
+      stat: (String, SparkSession) => (Long, Long) = dirStat) {
     // never-checked sentinel must not be Long.MinValue: nowSec − it
     // would overflow and make the interval check false forever
     @volatile private var lastCheckSec = Long.MinValue / 4
@@ -258,7 +262,7 @@ object Tuning {
 
     private def derive(): (Long, Int) = {
       val app = spark.sparkContext.applicationId
-      val stats = dirs.map(d => d -> dirStat(d, spark))
+      val stats = dirs.map(d => d -> stat(d, spark))
       // the SAME stat drives both re-derivations: the shuffle ceiling
       // below, and the store-epoch memo invalidation ([[StoreEpochs]])
       // — one FS call per dir per tick, no second stat path to drift

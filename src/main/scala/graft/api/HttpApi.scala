@@ -12,7 +12,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compiler.Tagged
-import graft.engine.{Autocomplete, FindCache, Finder, Guards, Limiter, Render, RenderCache, SeriesAssembly, Store}
+import graft.engine.{Autocomplete, FindCache, Finder, Guards, Limiter, Render, RenderCache, SeriesAssembly, Store, StoreSnapshot}
 import graft.metrics.{SparkReadStats, Telemetry}
 import graft.model.{FeatureFlags, TimeFrame}
 import graft.rollup.Rules
@@ -321,15 +321,22 @@ final class HttpApi(
 
   import HttpApi._
 
+  // the store as of its last commit: each request takes the current
+  // snapshot once (one stat when nothing was committed) and opens
+  // every table it reads from it (see StoreSnapshot)
+  private val snapshots = new StoreSnapshot(spark, tablesDir)
+  private val requestSnapshot = new ThreadLocal[StoreSnapshot.Snap]
+  @volatile private var observedVersion = snapshots.last.version
+
   // data-derived AQE shuffle ceiling for the serving session (same
   // rule as Bench/Verify — see graft.Tuning): the server's input size
-  // is the tables dir, its parallelism the session's. Long-lived
-  // sessions re-derive as ingest/compaction grow (or shrink) the
-  // store: the Retuner re-stats at most once per retuneIntervalSec
-  // from the request path and re-applies only on a changed count.
+  // is the store's bytes, its parallelism the session's. Long-lived
+  // sessions re-derive as ingest grows the store: the Retuner re-reads
+  // the snapshot's totals (no FS call) at most once per
+  // retuneIntervalSec and re-applies only on a changed count.
   private val retuner = new graft.Tuning.Retuner(
     spark, Seq(tablesDir), spark.sparkContext.defaultParallelism,
-    cfg.retuneIntervalSec)
+    cfg.retuneIntervalSec, stat = (_, _) => snapshots.last.totals)
   retuner.force(clock().getEpochSecond)
 
   private val cache = new FindCache.TtlCache[Any]()
@@ -342,7 +349,7 @@ final class HttpApi(
 
   // always on, exact (see RenderCache); `noCache` bypasses it like the
   // find cache
-  private val renderCache = new RenderCache(spark, tablesDir, hit =>
+  private val renderCache = new RenderCache(hit =>
     telemetry.foreach(t => (if (hit) t.renderCacheHits else t.renderCacheMisses).inc()))
 
   private val readStats: Option[SparkReadStats] = telemetry.map { _ =>
@@ -365,11 +372,13 @@ final class HttpApi(
     case None => HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
 
-  // opened per use with the fixed schemas (no inference job), so each
-  // request lists the store afresh and sees the latest micro-batch
-  private def points: DataFrame = Store.points(spark, tablesDir)
-  private def index: DataFrame = Store.index(spark, tablesDir)
-  private def tagsTable: DataFrame = Store.tags(spark, tablesDir)
+  // opened per use with the fixed schemas (no inference job) from the
+  // snapshot `handle` took for this request, so one request reads one
+  // set of commits and sees the latest micro-batch
+  private def snapshot: StoreSnapshot.Snap = requestSnapshot.get
+  private def points: DataFrame = Store.points(spark, snapshot)
+  private def index: DataFrame = Store.index(spark, snapshot)
+  private def tagsTable: DataFrame = Store.tags(spark, snapshot)
 
   def address: String = {
     val scheme = if (cfg.tls.isDefined) "https" else "http"
@@ -422,6 +431,7 @@ final class HttpApi(
     group.foreach(g =>
       spark.sparkContext.setJobGroup(g, path, interruptOnCancel = false))
     try {
+      observe(snapshots.current())
       path match {
         case p if p.startsWith("/render")        => render(ex)
         case p if p.startsWith("/metrics/find")  => find(ex)
@@ -479,9 +489,25 @@ final class HttpApi(
       case NonFatal(e) =>
         reply(ex, 500, "text/plain", (s"internal error: ${e.getMessage}\n").getBytes)
     } finally {
+      requestSnapshot.remove()
       group.foreach(_ => spark.sparkContext.clearJobGroup())
       record(ex, path, t0, group)
       ex.close()
+    }
+  }
+
+  /** Takes `snap` as this request's store, and reports a new version
+    * to [[graft.StoreEpochs]], so memos keyed on the store re-key at
+    * the commit rather than at the Retuner's next tick.
+    */
+  private def observe(snap: StoreSnapshot.Snap): Unit = {
+    requestSnapshot.set(snap)
+    if (snap.version > observedVersion) synchronized {
+      if (snap.version > observedVersion) {
+        observedVersion = snap.version
+        val (bytes, files) = snap.totals
+        graft.StoreEpochs.observe(spark.sparkContext.applicationId, tablesDir, bytes, files)
+      }
     }
   }
 
@@ -664,10 +690,11 @@ final class HttpApi(
 
     // opened on first use: a plain render never opens tags, a cached
     // find never opens index. `points` is opened by each render call
-    // itself, and only for groups the render cache misses: the cache
-    // lists the store before Spark does (see RenderCache)
+    // itself, and only for groups the render cache misses; the cache
+    // is pinned to the snapshot `points` opens (see RenderCache)
     lazy val idx = index
     lazy val tags = tagsTable
+    val snap = snapshot
     val useCache = !truthy(q.first("noCache"))
     var anyCacheHit = false
     var maxTtl = 0
@@ -745,12 +772,12 @@ final class HttpApi(
             }
           finderNanos += System.nanoTime() - findT0
 
-          SeriesAssembly.assemble(points, targets, tf, cfg.rules,
+          SeriesAssembly.assemble(Store.points(spark, snap), targets, tf, cfg.rules,
             now = now.getEpochSecond,
             consolidateBy = consolidate,
             appendEmpty = cfg.appendEmptySeries,
             versionMode = versionMode,
-            cache = if (useCache) Some(renderCache) else None)
+            cache = if (useCache) Some(RenderCache.At(renderCache, snap.version)) else None)
             .map(a => (a.series, from, until))
       }
     } }
@@ -766,11 +793,7 @@ final class HttpApi(
 
     format match {
       case "carbonapi_v3_pb" =>
-        val bodyOut = new java.io.ByteArrayOutputStream()
-        allSeries.foreach { case (s, f, u) =>
-          bodyOut.write(ProtobufSink.encodeV3(Seq(s), f, u))
-        }
-        reply(ex, 200, "application/x-protobuf", bodyOut.toByteArray)
+        reply(ex, 200, "application/x-protobuf", ProtobufSink.encodeV3Rows(allSeries))
       case "protobuf" | "carbonapi_v2_pb" =>
         reply(ex, 200, "application/x-protobuf", ProtobufSink.encodeV2(allSeries.map(_._1)))
       case "pickle" =>

@@ -33,11 +33,12 @@ import graft.time.StepMath
   * paths × grid points, and the grid by `maxDataPoints`, never by the
   * stored row count.
   *
-  * Repeat reads: the HTTP server passes its [[RenderCache]]. A group's
+  * Repeat reads: the HTTP server passes its [[RenderCache]], pinned to
+  * the [[StoreSnapshot]] version it opens `points` from. A group's
   * rolled rows depend only on its plan and on the `points` files
-  * Spark reads, and between two ingest commits those files do not
-  * change, so each planned group is looked up by its plan under the
-  * current file set's epoch before anything is planned. A render whose
+  * Spark reads, and a version names one fixed file list, so each
+  * planned group is looked up by its plan under that version before
+  * anything is planned. A render whose
   * groups all hit opens no table and starts no Spark job — the part
   * of the reference's millisecond reads that a per-query Spark floor
   * (about 100 ms of planning and 2 jobs) cannot otherwise reach.
@@ -308,11 +309,11 @@ object Render {
     *
     * With a `cache`, each planned group is looked up first and only
     * the missing ones are planned and collected; `points` (by name, so
-    * pass the opener, not an opened table) is opened only if one is
-    * missing, after the cache listed the store, so a render served
-    * whole from the cache opens no table and starts no Spark job. The
-    * cache is exact ([[RenderCache]]): a hit holds the rows this plan
-    * would collect.
+    * pass the opener, not an opened table) must open the snapshot the
+    * cache is pinned to, and is opened only if a group is missing, so
+    * a render served whole from the cache opens no table and starts no
+    * Spark job. The cache is exact ([[RenderCache]]): a hit holds the
+    * rows this plan would collect.
     */
   def render(
       points: => DataFrame,
@@ -323,7 +324,7 @@ object Render {
       consolidateBy: Option[String] = None,
       commonStep: Boolean = false,
       versionMode: VersionMode = VersionMode.DedupExact,
-      cache: Option[RenderCache] = None): Rolled = {
+      cache: Option[RenderCache.At] = None): Rolled = {
     val groups0 = functionGroups(foundPaths.distinct, rules, now, tf, consolidateBy)
     // A7 common step: the reference unifies the step across ALL
     // targets of a timeframe (LCM, `render/data/common_step.go:10-63`)
@@ -361,7 +362,7 @@ object Render {
       GroupRows.of(missing.map(_.group), tf, rows)
     }
     Rolled(cache match {
-      case Some(c) if keys.nonEmpty => c.through(keys)(load)
+      case Some(c) if keys.nonEmpty => c.cache.through(c.version, keys)(load)
       case _ => load(keys)
     })
   }

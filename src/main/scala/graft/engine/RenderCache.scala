@@ -1,104 +1,87 @@
 package graft.engine
 
-import java.io.FileNotFoundException
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
 /** Exact rolled-row cache for [[Render.render]]: a planned group whose
-  * key was already rolled over the same `points` file set is answered
+  * key was already rolled over the same store snapshot is answered
   * from memory, without opening a table or starting a Spark job.
   *
   * Why it is exact. A group's rolled rows ([[Render.fetchGroup]]) are a
   * function of the group plan and of the `points` files Spark reads —
   * nothing else. The [[RenderCache.Key]] holds every input of the plan,
-  * and the points *epoch* names the file set: a digest of every data
-  * file visible under `points/` (path, length, modification time),
-  * listed with the Hadoop `FileSystem` API under the visibility rule of
-  * Spark's file index (names starting with `_` or `.` are skipped, so a
-  * write in progress under `_temporary` is not part of it). Ingest only
-  * appends, each micro-batch commits new, uniquely named part files
-  * (Structured Streaming commits whole micro-batches), so a commit
-  * always makes a new epoch and is visible to the very next request.
+  * and the caller names the file set by the version of the
+  * [[StoreSnapshot]] it opens `points` from: a version is one fixed
+  * file list from the store's log, and every commit publishes a new
+  * one, so a commit is visible to the very next request and the rows
+  * loaded for a version are exactly that version's rows.
   *
-  * A miss is loaded by one Spark collect and kept only if a second
-  * listing after the collect gives the epoch of the first: the file set
-  * only grows, so Spark's own listing, taken between the two, saw
-  * exactly that set. Only the current epoch's entries are kept — a new
-  * epoch drops the old ones — and the entries are bounded by
+  * Only the current version's entries are kept — a new version drops
+  * the old ones — and the entries are bounded by
   * [[RenderCache.RowBudget]] rows, least recently used first out.
-  * Every map access holds the cache's lock; the loads run outside it,
-  * so concurrent handlers only contend for lookups.
+  * Every map access holds the cache's lock; loads run outside it.
+  * Concurrent misses of the same keys under one version wait for one
+  * load (as [[FindCache.through]] does) and are then served as hits;
+  * distinct keys load concurrently.
   *
   * `onLookup` sees each group lookup (true = hit) — the server's
   * `render_cache_hits`/`render_cache_misses` counters.
   */
 final class RenderCache(
-    spark: SparkSession,
-    storeDir: String,
     onLookup: Boolean => Unit = _ => (),
     rowBudget: Long = RenderCache.RowBudget) {
   import RenderCache._
 
-  private val root = new Path(Store.pointsDir(storeDir))
-  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-
   // access-ordered: iteration starts at the least recently used entry
   private val entries = new java.util.LinkedHashMap[Key, Render.GroupRows](16, 0.75f, true)
-  private var current: String = ""
+  private var current = -1L
   private var held = 0L
+  private val inflight = new ConcurrentHashMap[(Long, Seq[Key]), Object]()
 
-  /** The points epoch: a digest of the visible data files. A missing
-    * `points/` dir has its own epoch; opening it fails as before.
+  /** The rolled rows of every key, in key order, for the snapshot
+    * `version`: hits from memory, the rest from one `load` call (which
+    * returns them in the order given). `load` must read the `points`
+    * of exactly that snapshot.
     */
-  def epoch(): String = {
-    def walk(dir: Path): Seq[FileStatus] =
-      fs.listStatus(dir).toSeq
-        .filterNot(s => hidden(s.getPath.getName))
-        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
-    val files =
-      try walk(root)
-      catch { case _: FileNotFoundException => return "absent" }
-    val md = MessageDigest.getInstance("SHA-256")
-    files.map(s => s"${s.getPath}\t${s.getLen}\t${s.getModificationTime}\n").sorted
-      .foreach(l => md.update(l.getBytes(StandardCharsets.UTF_8)))
-    md.digest().map(b => f"$b%02x").mkString
-  }
-
-  /** The rolled rows of every key, in key order: hits from memory, the
-    * rest from one `load` call (which returns them in the order given).
-    * `load` must open `points` itself: a table opened before the first
-    * listing could hold an older file set than the epoch it is kept
-    * under.
-    */
-  def through(keys: Seq[Key])(load: Seq[Key] => Seq[Render.GroupRows]): Seq[Render.GroupRows] = {
-    val before = epoch()
-    val hits = lookup(before, keys)
-    hits.foreach(h => onLookup(h.isDefined))
+  def through(version: Long, keys: Seq[Key])(load: Seq[Key] => Seq[Render.GroupRows]): Seq[Render.GroupRows] = {
+    val hits = lookup(version, keys)
+    hits.foreach(h => if (h.isDefined) onLookup(true))
     val missing = keys.zip(hits).collect { case (k, None) => k }
-    if (missing.isEmpty) hits.flatten
-    else {
-      val loaded = load(missing)
-      if (epoch() == before) store(before, missing.zip(loaded))
-      val next = loaded.iterator
-      hits.map(_.getOrElse(next.next()))
-    }
+    val filled = if (missing.isEmpty) Map.empty[Key, Render.GroupRows] else fill(version, missing)(load)
+    keys.zip(hits).map { case (k, h) => h.getOrElse(filled(k)) }
   }
 
   /** Rows held now, counted as [[Key.weight]]. */
   def rows: Long = synchronized(held)
 
-  private def lookup(epoch: String, keys: Seq[Key]): Seq[Option[Render.GroupRows]] = synchronized {
-    if (epoch != current) {
-      entries.clear(); held = 0L; current = epoch
-    }
-    keys.map(k => Option(entries.get(k)))
+  /** Loads `missing` once per version: a concurrent request for the
+    * same keys waits, then finds them stored (a hit).
+    */
+  private def fill(version: Long, missing: Seq[Key])(
+      load: Seq[Key] => Seq[Render.GroupRows]): Map[Key, Render.GroupRows] = {
+    val flight = (version, missing)
+    val lock = inflight.computeIfAbsent(flight, _ => new Object)
+    try lock.synchronized {
+      val found = missing.zip(lookup(version, missing))
+      val still = found.collect { case (k, None) => k }
+      val loaded = if (still.isEmpty) Nil else still.zip(load(still))
+      store(version, loaded)
+      found.foreach { case (_, h) => onLookup(h.isDefined) }
+      found.collect { case (k, Some(v)) => k -> v }.toMap ++ loaded
+    } finally inflight.remove(flight, lock)
   }
 
-  private def store(epoch: String, loaded: Seq[(Key, Render.GroupRows)]): Unit = synchronized {
-    if (epoch == current) {
+  // versions only move forward: a newer one drops the entries, an
+  // older one (a request that read the store just before a commit)
+  // neither reads nor keeps any
+  private def lookup(version: Long, keys: Seq[Key]): Seq[Option[Render.GroupRows]] = synchronized {
+    if (version > current) {
+      entries.clear(); held = 0L; current = version
+    }
+    if (version < current) keys.map(_ => None) else keys.map(k => Option(entries.get(k)))
+  }
+
+  private def store(version: Long, loaded: Seq[(Key, Render.GroupRows)]): Unit = synchronized {
+    if (version == current) {
       loaded.foreach { case (k, v) =>
         if (k.weight <= rowBudget && entries.put(k, v) == null) held += k.weight
       }
@@ -116,6 +99,11 @@ object RenderCache {
     */
   val RowBudget: Long = 1L << 20
 
+  /** A cache pinned to one snapshot version: a render given it must
+    * open `points` from that snapshot.
+    */
+  final case class At(cache: RenderCache, version: Long)
+
   /** Everything [[Render.fetchGroup]] reads, but the file set: the
     * version mode, the storage precision MergedCells merges on, the
     * group at its rolled step (after coarsening and `maxDataPoints`
@@ -132,13 +120,4 @@ object RenderCache {
     lazy val weight: Long =
       group.paths.length * (1L + math.max(0L, (until + 1 - from) / group.step))
   }
-
-  /** Spark's file-index visibility rule (`HadoopFSUtils.shouldFilterOutPathName`):
-    * `_`/`.`-prefixed names are not data, save partition dirs and the
-    * Parquet summary files. Spark also skips `._COPYING_` files; the
-    * epoch keeps them, which can only cost a miss.
-    */
-  private def hidden(name: String): Boolean =
-    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) &&
-      !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
 }

@@ -101,9 +101,9 @@ object SeriesAssembly {
     * target, as the reference's common-step design intends
     * (`render/data/common_step.go`) — then assemble on the driver.
     * The entry point of `/render` and the e2e fixture runner; with a
-    * `cache` (the server's), groups already rolled over the same
-    * `points` files are not read again, and `points` is opened only
-    * if one is missing.
+    * `cache` (the server's, pinned to the snapshot `points` opens),
+    * groups already rolled over the same snapshot are not read again,
+    * and `points` is opened only if one is missing.
     */
   def assemble(
       points: => DataFrame,
@@ -114,7 +114,7 @@ object SeriesAssembly {
       consolidateBy: Option[String] = None,
       appendEmpty: Boolean = false,
       versionMode: Render.VersionMode = Render.VersionMode.DedupExact,
-      cache: Option[RenderCache] = None): Seq[Aliased] = {
+      cache: Option[RenderCache.At] = None): Seq[Aliased] = {
     val paths = targets.flatMap(_._2.map(_._1))
     val rolled = Render.render(points, paths, tf, rules, now, consolidateBy,
       versionMode = versionMode, cache = cache)

@@ -21,8 +21,41 @@ object JsonSink {
       case c            => c.toString
     } + "\""
 
-  /** Go's `%f` (6 fixed decimals) used by the reference for values. */
-  private def f6(v: Double): String = "%f".formatLocal(Locale.ROOT, v)
+  /** Go's `%f` (6 fixed decimals) used by the reference for values:
+    * byte for byte Java's `"%f".formatLocal(Locale.ROOT, v)`, without
+    * a `Formatter` per value. Java rounds the digits of
+    * `Double.toString` half up at the 6th decimal, and so does this;
+    * where those digits lie within an ulp of a rounding midpoint, or
+    * `|v| ≥ 1e9`, it defers to the `Formatter` itself, whose digit
+    * generation may differ there.
+    */
+  private[sinks] def f6(v: Double): String = {
+    val a = math.abs(v)
+    if (!(a < 1e9)) return "%f".formatLocal(Locale.ROOT, v)
+    val s = java.lang.Double.toString(a) // "123.45", "1.0E-5", "1.2345E7"
+    val e = s.indexOf('E')
+    val dot = s.indexOf('.')
+    val end = if (e < 0) s.length else e
+    // the digits without the point; `point` of them precede it
+    val digits = s.substring(0, dot) + s.substring(dot + 1, end)
+    val point = dot + (if (e < 0) 0 else s.substring(e + 1).toInt)
+    def d(i: Int): Int = if (i >= 0 && i < digits.length) digits.charAt(i) - '0' else 0
+    var n = 0L // the value in millionths, truncated
+    var i = 0
+    while (i < point + 6) { n = n * 10 + d(i); i += 1 }
+    var rest = 0L // the next 9 decimals, in units of 1e-15
+    i = point + 6
+    while (i < point + 15) { rest = rest * 10 + d(i); i += 1 }
+    if (math.abs(rest - 500000000L) <= math.ulp(a) * 1e15 + 2) return "%f".formatLocal(Locale.ROOT, v)
+    if (rest > 500000000L) n += 1
+    val frac = (n % 1000000).toString
+    val sb = new java.lang.StringBuilder(24)
+    if (java.lang.Double.compare(v, 0.0) < 0) sb.append('-')
+    sb.append(n / 1000000).append('.')
+    var pad = 6 - frac.length
+    while (pad > 0) { sb.append('0'); pad -= 1 }
+    sb.append(frac).toString
+  }
 
   /** Render debug JSON: `{"metrics":[{name, pathExpression,
     * consolidationFunc, startTime, stopTime, stepTime, xFilesFactor,
@@ -30,29 +63,35 @@ object JsonSink {
     * empty strings omitted, exactly as `json.go:27-70`.
     */
   def render(series: Seq[Series], requestFrom: Long, requestUntil: Long): String = {
-    val metrics = series.map { s =>
-      val sb = new StringBuilder("{")
+    val sb = new StringBuilder("{\"metrics\":[")
+    series.iterator.zipWithIndex.foreach { case (s, k) =>
+      if (k > 0) sb.append(',')
+      sb.append('{')
       if (s.name.nonEmpty) sb.append("\"name\":").append(q(s.name)).append(',')
       if (s.pathExpression.nonEmpty)
         sb.append("\"pathExpression\":").append(q(s.pathExpression)).append(',')
       if (s.function.nonEmpty)
         sb.append("\"consolidationFunc\":").append(q(s.function)).append(',')
-      sb.append(s""""startTime":${s.start},""")
-      sb.append(s""""stopTime":${s.stop},""")
-      sb.append(s""""stepTime":${s.step},""")
-      sb.append(s""""xFilesFactor":${f6(0.0)},""")
+      sb.append("\"startTime\":").append(s.start).append(',')
+      sb.append("\"stopTime\":").append(s.stop).append(',')
+      sb.append("\"stepTime\":").append(s.step).append(',')
+      sb.append("\"xFilesFactor\":0.000000,")
       if (s.values.nonEmpty) {
         sb.append("\"values\":[")
-        sb.append(s.values.map(v =>
-          if (v.isNaN || v.isInfinite) "null" else f6(v)).mkString(","))
+        var i = 0
+        while (i < s.values.length) {
+          val v = s.values(i)
+          if (i > 0) sb.append(',')
+          sb.append(if (v.isNaN || v.isInfinite) "null" else f6(v))
+          i += 1
+        }
         sb.append("],")
       }
-      sb.append(s""""requestStartTime":$requestFrom,""")
-      sb.append(s""""requestStopTime":$requestUntil""")
+      sb.append("\"requestStartTime\":").append(requestFrom).append(',')
+      sb.append("\"requestStopTime\":").append(requestUntil)
       sb.append('}')
-      sb.toString
     }
-    metrics.mkString("{\"metrics\":[", ",", "]}")
+    sb.append("]}").toString
   }
 
   /** Find response — the reference's (intentionally quirky, non-JSON)

@@ -2,7 +2,9 @@ package graft.sinks
 
 import java.io.ByteArrayOutputStream
 
-import Wire.{Buf, Fixed32, LengthDelimited}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import Wire.{Buf, Fixed32, LengthDelimited, varintSize}
 
 /** carbonapi protobuf sinks (S6/S7) — byte-for-byte the reference's
   * hand-rolled encoders (`render/reply/v2_pb.go:55-120`,
@@ -43,26 +45,41 @@ object ProtobufSink {
     * values=9 (packed double, NaN carried as-is), requestStartTime=11,
     * requestStopTime=12; wrapped as repeated metrics=1.
     */
-  def encodeV3(series: Seq[Series], requestFrom: Long, requestUntil: Long): Array[Byte] = {
-    val out = new ByteArrayOutputStream(65536)
-    series.foreach { s =>
-      val b = new Buf
-      b.string(1, s.name)
-      b.string(2, s.pathExpression)
-      b.string(3, s.function)
-      b.tag(4, 0).varint(s.start)
-      b.tag(5, 0).varint(s.stop)
-      b.tag(6, 0).varint(s.step)
-      b.tag(7, Fixed32).floatLE(0.0f)
-      b.tag(8, 0).byte(0)
-      b.tag(9, LengthDelimited).varint(8L * s.values.length)
-      s.values.foreach(b.doubleLE)
-      b.tag(11, 0).varint(requestFrom)
-      b.tag(12, 0).varint(requestUntil)
-      val hdr = new Buf
-      hdr.tag(1, LengthDelimited).varint(b.size.toLong)
-      out.write(hdr.bytes); out.write(b.bytes)
+  def encodeV3(series: Seq[Series], requestFrom: Long, requestUntil: Long): Array[Byte] =
+    encodeV3Rows(series.map(s => (s, requestFrom, requestUntil)))
+
+  /** [[encodeV3]] of rows that each carry their own request window
+    * (a render of several windows), into one array sized up front.
+    */
+  def encodeV3Rows(rows: Seq[(Series, Long, Long)]): Array[Byte] = {
+    val utf8 = rows.map { case (s, _, _) =>
+      (s.name.getBytes(UTF_8), s.pathExpression.getBytes(UTF_8), s.function.getBytes(UTF_8))
     }
-    out.toByteArray
+    def str(b: Array[Byte]): Int = 1 + varintSize(b.length.toLong) + b.length
+    val sizes = rows.zip(utf8).map { case ((s, from, until), (n, p, f)) =>
+      str(n) + str(p) + str(f) +
+        3 + varintSize(s.start) + varintSize(s.stop) + varintSize(s.step) +
+        5 + 2 +
+        1 + varintSize(8L * s.values.length) + 8 * s.values.length +
+        2 + varintSize(from) + varintSize(until)
+    }
+    val total = sizes.map(n => 1 + varintSize(n.toLong) + n).sum
+    val out = new Buf(total)
+    rows.lazyZip(utf8).lazyZip(sizes).foreach { case ((s, from, until), (n, p, f), size) =>
+      out.tag(1, LengthDelimited).varint(size.toLong)
+      out.string(1, n).string(2, p).string(3, f)
+      out.tag(4, 0).varint(s.start)
+      out.tag(5, 0).varint(s.stop)
+      out.tag(6, 0).varint(s.step)
+      out.tag(7, Fixed32).floatLE(0.0f)
+      out.tag(8, 0).byte(0)
+      out.tag(9, LengthDelimited).varint(8L * s.values.length)
+      var i = 0
+      while (i < s.values.length) { out.doubleLE(s.values(i)); i += 1 }
+      out.tag(11, 0).varint(from)
+      out.tag(12, 0).varint(until)
+    }
+    assert(out.size == total)
+    out.bytes
   }
 }

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.io.ByteArrayOutputStream
-
 /** Low-level wire-format helpers shared by the protobuf and pickle
   * sinks (`render/reply/protobuf.go:19-24` constants; varint/fixed64
   * are the standard protobuf encodings).
@@ -12,16 +10,24 @@ object Wire {
   val LengthDelimited = 2
   val Fixed32 = 5
 
-  final class Buf {
-    val out = new ByteArrayOutputStream(4096)
+  /** A protobuf writer over one growable array. Sized up front to what
+    * it will hold (`initial`), it never grows or copies.
+    */
+  final class Buf(initial: Int = 4096) {
+    private var arr = new Array[Byte](initial)
+    private var n = 0
+
+    private def room(k: Int): Unit =
+      if (n + k > arr.length) arr = java.util.Arrays.copyOf(arr, math.max(2 * arr.length, n + k))
 
     def varint(v: Long): this.type = {
+      room(10)
       var x = v
       while ((x & ~0x7fL) != 0) {
-        out.write(((x & 0x7f) | 0x80).toInt)
+        arr(n) = ((x & 0x7f) | 0x80).toByte; n += 1
         x >>>= 7
       }
-      out.write(x.toInt)
+      arr(n) = x.toByte; n += 1
       this
     }
 
@@ -29,31 +35,48 @@ object Wire {
     def tag(field: Int, wireType: Int): this.type = varint((field << 3) | wireType)
 
     def doubleLE(v: Double): this.type = {
+      room(8)
       var bits = java.lang.Double.doubleToLongBits(v)
       var i = 0
-      while (i < 8) { out.write((bits & 0xff).toInt); bits >>>= 8; i += 1 }
+      while (i < 8) { arr(n) = bits.toByte; n += 1; bits >>>= 8; i += 1 }
       this
     }
 
     def floatLE(v: Float): this.type = {
+      room(4)
       var bits = java.lang.Float.floatToIntBits(v)
       var i = 0
-      while (i < 4) { out.write(bits & 0xff); bits >>>= 8; i += 1 }
+      while (i < 4) { arr(n) = bits.toByte; n += 1; bits >>>= 8; i += 1 }
       this
     }
 
-    def string(field: Int, s: String): this.type = {
-      val b = s.getBytes("UTF-8")
+    def string(field: Int, s: String): this.type = string(field, s.getBytes("UTF-8"))
+
+    /** A length-delimited field of already-encoded UTF-8 bytes. */
+    def string(field: Int, b: Array[Byte]): this.type = {
       tag(field, LengthDelimited).varint(b.length.toLong)
-      out.write(b, 0, b.length)
+      raw(b)
+    }
+
+    def raw(b: Array[Byte]): this.type = {
+      room(b.length)
+      System.arraycopy(b, 0, arr, n, b.length); n += b.length
       this
     }
 
-    def raw(b: Array[Byte]): this.type = { out.write(b, 0, b.length); this }
-    def byte(b: Int): this.type = { out.write(b); this }
+    def byte(b: Int): this.type = { room(1); arr(n) = b.toByte; n += 1; this }
 
-    def bytes: Array[Byte] = out.toByteArray
-    def size: Int = out.size()
+    /** The bytes written; the array itself when the initial size was exact. */
+    def bytes: Array[Byte] = if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n)
+    def size: Int = n
+  }
+
+  /** Bytes a [[Buf.varint]] of `v` takes. */
+  def varintSize(v: Long): Int = {
+    var x = v
+    var k = 1
+    while ((x & ~0x7fL) != 0) { x >>>= 7; k += 1 }
+    k
   }
 
   /** Minimal protobuf reader — enough to decode the flat carbonapi

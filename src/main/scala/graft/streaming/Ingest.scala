@@ -1,11 +1,15 @@
 package graft.streaming
 
+import java.io.IOException
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.engine.GraphiteTables
+import graft.engine.{GraphiteTables, StoreSnapshot}
 
 /** Streaming ingest (SURVEY §2.9) — the engine-owned replacement for
   * carbon-clickhouse + carbonlink: Structured Streaming over the
@@ -65,14 +69,32 @@ object Ingest {
     * (tagged metrics) derived from the batch's distinct paths. The
     * distinct is per-batch-sized; read-side version dedup gives
     * ReplacingMergeTree semantics across batches.
+    *
+    * The commit is one entry of the store's log ([[StoreSnapshot]]):
+    * each table's rows are written to a hidden staging dir inside the
+    * table, its data files moved into place (`points/date=…/`, as a
+    * plain `spark.read.parquet` of the table dir expects) and then
+    * published together. Readers open the files the log names and
+    * never list a table, so the batch's three tables become visible
+    * at once, and files moved in by a batch that died before its
+    * publish stay invisible. No Spark job beyond the three writes.
     */
-  def processBatch(parsed: DataFrame, outDir: String): Unit = {
+  def processBatch(parsed: DataFrame, outDir: String): Unit =
+    StoreSnapshot.publish(parsed.sparkSession, outDir)(writeTables(parsed, outDir))
+
+  /** The three writes and the moves of a commit, without its publish:
+    * the files now in place, per table.
+    */
+  private[graft] def writeTables(parsed: DataFrame, outDir: String): Map[String, Seq[FileStatus]] = {
     parsed.cache()
     try {
-      parsed
-        .write.mode("append")
-        .partitionBy("date")
-        .parquet(s"$outDir/points")
+      val staging = s"_graft_staging_${UUID.randomUUID()}"
+      def stage(table: String, write: String => Unit): (String, Path) = {
+        val dir = s"$outDir/$table/$staging"
+        write(dir)
+        table -> new Path(dir)
+      }
+      val points = stage("points", parsed.write.partitionBy("date").parquet(_))
 
       // per (path, day): the reference's carbon writer emits daily
       // index/tag rows for every active day (`doc/index-table.md`)
@@ -81,14 +103,38 @@ object Ingest {
         .agg(max("version").as("version"))
         .cache()
 
-      GraphiteTables.expandIndexRows(
-        newMetrics.where(!col("is_tagged")).select("path", "date", "version"))
-        .write.mode("append").parquet(s"$outDir/index")
+      val index = stage("index", GraphiteTables.expandIndexRows(
+        newMetrics.where(!col("is_tagged")).select("path", "date", "version")).write.parquet(_))
+      val tags = stage("tags", GraphiteTables.expandTagRows(
+        newMetrics.where(col("is_tagged")).select("path", "date", "version")).write.parquet(_))
 
-      GraphiteTables.expandTagRows(
-        newMetrics.where(col("is_tagged")).select("path", "date", "version"))
-        .write.mode("append").parquet(s"$outDir/tags")
+      val fs = new Path(outDir).getFileSystem(parsed.sparkSession.sessionState.newHadoopConf())
+      Seq(points, index, tags).map { case (table, dir) => table -> moveIn(fs, fs.makeQualified(dir)) }.toMap
     } finally parsed.unpersist()
+  }
+
+  /** Moves the data files of a staged write up into its table dir, at
+    * the same relative paths, and drops the staging dir with Spark's
+    * `_SUCCESS` marker; returns the moved files. A hidden `.…crc`
+    * checksum is not a data file: the local FS's rename moves it along
+    * with its part file.
+    */
+  private def moveIn(fs: FileSystem, staging: Path): Seq[FileStatus] = {
+    def walk(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (s.isDirectory) walk(s.getPath)
+      else if (name.startsWith("_") || name.startsWith(".")) Nil
+      else Seq(s)
+    }
+    val prefix = staging.toString + "/"
+    val moved = walk(staging).map { s =>
+      val to = new Path(staging.getParent, s.getPath.toString.stripPrefix(prefix))
+      fs.mkdirs(to.getParent)
+      if (!fs.rename(s.getPath, to)) throw new IOException(s"could not move ${s.getPath} to $to")
+      new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize, s.getModificationTime, to)
+    }
+    fs.delete(staging, true)
+    moved
   }
 
   /** Wire a line stream into the three tables. Caller starts/awaits

@@ -127,4 +127,35 @@ class StoreEpochSpec extends AnyFunSuite {
     StoreEpochs.observe(app, dir, 120L, 3L) // unchanged positive stat
     assert(StoreEpochs.current(app, dir) == 1L)
   }
+
+  test("a commit bumps the store's epoch at the server's next request, not at its next tick") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-epochcommit")
+      .toFile.getAbsolutePath + "/t"
+    def commit(line: String): Unit =
+      graft.streaming.Ingest.processBatch(graft.streaming.Ingest.parseLines(Seq(line).toDF("value")), dir)
+    commit("ep.a 1 1704067200")
+    val api = new graft.api.HttpApi(spark, dir,
+      graft.api.HttpApi.Config(
+        rules = graft.rollup.Rules(Nil, defaultPrecision = 10L),
+        retuneIntervalSec = 3600L)).start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def request(): Unit = {
+      val r = client.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(api.address + "/alive")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.discarding())
+      assert(r.statusCode() == 200)
+    }
+    val app = spark.sparkContext.applicationId
+    try {
+      request()
+      val e0 = StoreEpochs.current(app, dir)
+      commit("ep.a 2 1704067210")
+      assert(StoreEpochs.current(app, dir) == e0, "nothing observes between requests")
+      request()
+      assert(StoreEpochs.current(app, dir) == e0 + 1, "the next request sees the commit")
+      request()
+      assert(StoreEpochs.current(app, dir) == e0 + 1, "no commit, no bump")
+    } finally api.stop()
+  }
 }

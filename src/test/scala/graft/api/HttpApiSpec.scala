@@ -710,11 +710,14 @@ class HttpApiSpec extends AnyFunSuite {
       assert(g("/alive").statusCode() == 200)
       assert(spark.conf.get(key).toInt == cpus)
 
-      // ingest/compaction grow the store well past the floor (the
-      // rule is one partition per MB of on-disk bytes)
-      val padMb = cpus + 16
-      Files.write(java.nio.file.Paths.get(dir, "t", "pad.bin"),
-        new Array[Byte](padMb << 20))
+      // ingest grows the store well past the floor (the rule is one
+      // partition per MB of the store's bytes): long random names, so
+      // each point carries ~10 KB that parquet cannot compress away
+      val rnd = new scala.util.Random(7)
+      Ingest.processBatch(Ingest.parseLines((1 to 600).map(i =>
+        s"pad$i${rnd.alphanumeric.take(10000).mkString} 1.0 $rnow").toDF("value")), s"$dir/t")
+      val padMb = (graft.engine.StoreSnapshot.open(spark, s"$dir/t").totals._1 >> 20).toInt
+      assert(padMb > cpus + 8, s"$padMb MB")
       // same store clock-window: no re-stat yet, conf unchanged
       assert(g("/alive").statusCode() == 200)
       assert(spark.conf.get(key).toInt == cpus)

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,13 +40,15 @@ class RenderCacheSpec extends AnyFunSuite {
     d
   }
 
+  private lazy val snap = StoreSnapshot.open(spark, dir)
+
   private val targets = Seq("rc.*" -> Seq("rc.a", "rc.b").map(p => (p, p)))
   private val base = TimeFrame(rnow - 30, rnow)
 
   private final class Counted(budget: Long = RenderCache.RowBudget) {
     val hits = new AtomicLong
     val misses = new AtomicLong
-    val cache = new RenderCache(spark, dir,
+    val cache = new RenderCache(
       hit => (if (hit) hits else misses).incrementAndGet(), rowBudget = budget)
   }
 
@@ -57,8 +60,9 @@ class RenderCacheSpec extends AnyFunSuite {
       tf: TimeFrame = base,
       mode: Render.VersionMode = Render.VersionMode.DedupExact,
       consolidateBy: Option[String] = None): Shape =
-    SeriesAssembly.assemble(Store.points(spark, dir), targets, tf, rules, now = rnow,
-      consolidateBy = consolidateBy, versionMode = mode, cache = c.map(_.cache))
+    SeriesAssembly.assemble(Store.points(spark, snap), targets, tf, rules, now = rnow,
+      consolidateBy = consolidateBy, versionMode = mode,
+      cache = c.map(x => RenderCache.At(x.cache, snap.version)))
       .map(_.series)
       .map(s => (s.name, s.function, s.start, s.step, s.values.toSeq.map(_.toString)))
 
@@ -121,5 +125,18 @@ class RenderCacheSpec extends AnyFunSuite {
     val small = new Counted(budget = 9)
     render(Some(small)); render(Some(small))
     assert(small.cache.rows == 0 && small.hits.get == 0 && small.misses.get == 2)
+  }
+
+  test("concurrent identical misses run one load, and every caller gets its rows") {
+    val c = new Counted
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val go = new CountDownLatch(1)
+      val renders = (1 to 8).map(_ => pool.submit(() => { go.await(); render(Some(c)) }))
+      go.countDown()
+      for (r <- renders) assert(r.get(120, TimeUnit.SECONDS) == variants.head._3)
+      assert(c.misses.get == 1, "one load for eight identical misses")
+      assert(c.hits.get == 7)
+    } finally pool.shutdown()
   }
 }

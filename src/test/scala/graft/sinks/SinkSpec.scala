@@ -47,6 +47,27 @@ class SinkSpec extends AnyFunSuite {
       java.lang.Double.longBitsToDouble(bits)
     }.toSeq
 
+  test("v3 rows encode into one array with the bytes of the per-series Buf encoding") {
+    // the encoding /render sent before, one growable Buf per field group
+    def perSeries(s: Series, from: Long, until: Long): Array[Byte] = {
+      val b = new Wire.Buf
+      b.string(1, s.name).string(2, s.pathExpression).string(3, s.function)
+      b.tag(4, 0).varint(s.start).tag(5, 0).varint(s.stop).tag(6, 0).varint(s.step)
+      b.tag(7, Wire.Fixed32).floatLE(0.0f).tag(8, 0).byte(0)
+      b.tag(9, Wire.LengthDelimited).varint(8L * s.values.length)
+      s.values.foreach(b.doubleLE)
+      b.tag(11, 0).varint(from).tag(12, 0).varint(until)
+      val hdr = new Wire.Buf
+      hdr.tag(1, Wire.LengthDelimited).varint(b.size.toLong)
+      hdr.bytes ++ b.bytes
+    }
+    val long = Series("ünïcode.✓", "", "", -60, 1L << 40, 1, Array.tabulate(300)(i => if (i % 7 == 0) Double.NaN else i * -1.25))
+    val rows = Seq((s1, 55L, 185L), (s2, 0L, -1L), (long, 1700000000L, 1700086400L), (Series("", "", "", 0, 0, 0, Array()), 1L, 2L))
+    assert(ProtobufSink.encodeV3Rows(rows).sameElements(rows.flatMap { case (s, f, u) => perSeries(s, f, u) }))
+    assert(ProtobufSink.encodeV3(Seq(s1, s2), 55, 185).sameElements(perSeries(s1, 55, 185) ++ perSeries(s2, 55, 185)))
+    assert(ProtobufSink.encodeV3Rows(Nil).isEmpty)
+  }
+
   test("v3 protobuf layout") {
     val top = parseFields(ProtobufSink.encodeV3(Seq(s1, s2), 55, 185))
     assert(top.map(_._1) == List(1, 1)) // repeated metrics
@@ -93,6 +114,13 @@ class SinkSpec extends AnyFunSuite {
       """"startTime":60,"stopTime":180,"stepTime":60,"xFilesFactor":0.000000,""" +
       """"values":[1.500000,null],"requestStartTime":55,"requestStopTime":185}]}""")
     assert(JsonSink.render(Nil, 0, 0) == """{"metrics":[]}""")
+    // empty strings omitted, an empty value list omitted, series comma-joined
+    assert(JsonSink.render(Seq(Series("", "", "", 0, 0, 60, Array()), s2), 55, 185) ==
+      """{"metrics":[{"startTime":0,"stopTime":0,"stepTime":60,"xFilesFactor":0.000000,""" +
+      """"requestStartTime":55,"requestStopTime":185},""" +
+      """{"name":"m2","pathExpression":"m*","consolidationFunc":"max",""" +
+      """"startTime":60,"stopTime":180,"stepTime":60,"xFilesFactor":0.000000,""" +
+      """"values":[2.000000,3.000000],"requestStartTime":55,"requestStopTime":185}]}""")
   }
 
   test("find body: quirky reference format") {
