@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
 import Wire.{Buf, LengthDelimited}
 
@@ -16,27 +16,25 @@ object FindSink {
     */
   def pickle(rows: Seq[(String, Boolean)]): Array[Byte] = {
     if (rows.isEmpty) return PickleSink.emptyList
-    val out = new ByteArrayOutputStream(4096)
-    out.write(0x80); out.write(2); out.write(']')
-    rows.foreach { case (path, isLeaf) =>
-      out.write('}')
-      writeStr(out, "metric_path"); writeStr(out, path); out.write('s')
-      writeStr(out, "isLeaf")
-      out.write(if (isLeaf) 0x88 else 0x89) // NEWTRUE 0x88 / NEWFALSE 0x89
-      out.write('s')
-      out.write('a')
+    val paths = rows.map(_._1.getBytes(UTF_8))
+    // per row: EMPTY_DICT, two keys, two SETITEMs, the bool, APPEND
+    val total = 4 + paths.map(p => 5 + MetricPath.length + PickleSink.strSize(p) + IsLeaf.length).sum
+    val w = new PickleSink.Out(total)
+    w.op(0x80); w.op(2); w.op(']')
+    rows.lazyZip(paths).foreach { case ((_, isLeaf), p) =>
+      w.op('}')
+      w.raw(MetricPath); w.str(p); w.op('s')
+      w.raw(IsLeaf)
+      w.op(if (isLeaf) 0x88 else 0x89) // NEWTRUE 0x88 / NEWFALSE 0x89
+      w.op('s')
+      w.op('a')
     }
-    out.write('.')
-    out.toByteArray
+    w.op('.')
+    w.bytes
   }
 
-  private def writeStr(out: ByteArrayOutputStream, s: String): Unit = {
-    val b = s.getBytes("UTF-8")
-    out.write('X')
-    out.write(b.length & 0xff); out.write((b.length >> 8) & 0xff)
-    out.write((b.length >> 16) & 0xff); out.write((b.length >> 24) & 0xff)
-    out.write(b, 0, b.length)
-  }
+  private val MetricPath = PickleSink.key("metric_path")
+  private val IsLeaf = PickleSink.key("isLeaf")
 
   /** GlobResponse protobuf (identical field layout in carbonapi v2
     * and v3).

@@ -84,32 +84,44 @@ object Ingest {
 
   /** The three writes and the moves of a commit, without its publish:
     * the files now in place, per table.
+    *
+    * It caches two relations: the batch (`parsed`, read by the points
+    * write and the aggregate) and its per-(path, day) aggregate
+    * (`newMetrics`, read by the index and the tags write). Both are
+    * released before it returns, on success and on failure, so no
+    * Spark cache entry, and so no batch lineage, outlives a commit: a
+    * long-lived ingest session would otherwise keep every commit's
+    * input on the heap, and every later query of the session would
+    * match its plan against one more cache entry. `newMetrics` goes
+    * first: its plan reads the cached batch, and released in the
+    * other order it would be the batch's dependent that Spark
+    * re-plans onto the uncached input.
     */
   private[graft] def writeTables(parsed: DataFrame, outDir: String): Map[String, Seq[FileStatus]] = {
     parsed.cache()
     try {
-      val staging = s"_graft_staging_${UUID.randomUUID()}"
-      def stage(table: String, write: String => Unit): (String, Path) = {
-        val dir = s"$outDir/$table/$staging"
-        write(dir)
-        table -> new Path(dir)
-      }
-      val points = stage("points", parsed.write.partitionBy("date").parquet(_))
-
       // per (path, day): the reference's carbon writer emits daily
       // index/tag rows for every active day (`doc/index-table.md`)
       val newMetrics = parsed
         .groupBy("path", "is_tagged", "date")
         .agg(max("version").as("version"))
         .cache()
+      try {
+        val staging = s"_graft_staging_${UUID.randomUUID()}"
+        def stage(table: String, write: String => Unit): (String, Path) = {
+          val dir = s"$outDir/$table/$staging"
+          write(dir)
+          table -> new Path(dir)
+        }
+        val points = stage("points", parsed.write.partitionBy("date").parquet(_))
+        val index = stage("index", GraphiteTables.expandIndexRows(
+          newMetrics.where(!col("is_tagged")).select("path", "date", "version")).write.parquet(_))
+        val tags = stage("tags", GraphiteTables.expandTagRows(
+          newMetrics.where(col("is_tagged")).select("path", "date", "version")).write.parquet(_))
 
-      val index = stage("index", GraphiteTables.expandIndexRows(
-        newMetrics.where(!col("is_tagged")).select("path", "date", "version")).write.parquet(_))
-      val tags = stage("tags", GraphiteTables.expandTagRows(
-        newMetrics.where(col("is_tagged")).select("path", "date", "version")).write.parquet(_))
-
-      val fs = new Path(outDir).getFileSystem(parsed.sparkSession.sessionState.newHadoopConf())
-      Seq(points, index, tags).map { case (table, dir) => table -> moveIn(fs, fs.makeQualified(dir)) }.toMap
+        val fs = new Path(outDir).getFileSystem(parsed.sparkSession.sessionState.newHadoopConf())
+        Seq(points, index, tags).map { case (table, dir) => table -> moveIn(fs, fs.makeQualified(dir)) }.toMap
+      } finally newMetrics.unpersist()
     } finally parsed.unpersist()
   }
 

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wire-format sinks: carbonapi v2/v3 protobuf, pickle, JSON
@@ -95,16 +93,50 @@ class SinkSpec extends AnyFunSuite {
     assert(byField(6).head._3.toOption.get.toSeq == Seq[Byte](0, 1))
   }
 
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+
+  // Pinned bytes. Each literal was loaded once with python3's
+  // `pickle.loads(bytes.fromhex(...))` and gave the list of dicts its
+  // fixture describes, keys in the reference's order.
   test("pickle: deterministic protocol-2 bytes") {
-    val b = PickleSink.encode(Seq(s1))
-    assert(b(0) == 0x80.toByte && b(1) == 2.toByte && b.last == '.'.toByte)
-    // known-good hex captured from a python pickle.loads round-trip
-    // (tools/check_pickle.py) of this exact fixture
-    Files.createDirectories(Paths.get("target"))
-    Files.write(Paths.get("target/pickle_sample.bin"), b)
-    assert(PickleSink.encode(Seq(s1)).toSeq == b.toSeq) // deterministic
-    assert(PickleSink.emptyList.toSeq ==
-      Seq(0x80.toByte, 2.toByte, ']'.toByte, '.'.toByte))
+    val pins = Seq(
+      "one series, an absent point" -> (Seq(s1),
+        "80025d7d58040000006e616d6558020000006d3173580e000000706174684578" +
+        "7072657373696f6e58020000006d2a735804000000737465704b3c7358060000" +
+        "0076616c7565735d28473ff80000000000004e6573580500000073746172744b" +
+        "3c735803000000656e644bb473612e"),
+      // step/start/end across each integer opcode's edge: 255 | 256
+      // (BININT1 | BININT2), 65535 | 65536 (BININT2 | BININT) and
+      // Int.MaxValue | +1 (BININT | LONG1)
+      "integer opcode edges" -> (Seq(
+        Series("b", "b*", "avg", 255, 256, 65535, Array(1.0)),
+        Series("c", "c*", "sum", 65536, Int.MaxValue.toLong, Int.MaxValue.toLong + 1, Array(-0.5))),
+        "80025d7d58040000006e616d6558010000006273580e00000070617468457870" +
+        "72657373696f6e5802000000622a735804000000737465704dffff7358060000" +
+        "0076616c7565735d28473ff00000000000006573580500000073746172744bff" +
+        "735803000000656e644d000173617d58040000006e616d655801000000637358" +
+        "0e0000007061746845787072657373696f6e5802000000632a73580400000073" +
+        "7465708a05000000800073580600000076616c7565735d2847bfe00000000000" +
+        "006573580500000073746172744a00000100735803000000656e644affffff7f" +
+        "73612e"),
+      "only absent points" -> (Seq(Series("n", "n", "avg", 60, 0, 120, Array(Double.NaN, Double.NaN))),
+        "80025d7d58040000006e616d6558010000006e73580e00000070617468457870" +
+        "72657373696f6e58010000006e735804000000737465704b7873580600000076" +
+        "616c7565735d284e4e6573580500000073746172744b3c735803000000656e64" +
+        "4b0073612e"),
+      "no values" -> (Seq(Series("e", "e*", "", 60, 0, 0, Array())),
+        "80025d7d58040000006e616d6558010000006573580e00000070617468457870" +
+        "72657373696f6e5802000000652a735804000000737465704b00735806000000" +
+        "76616c7565735d73580500000073746172744b3c735803000000656e644b0073" +
+        "612e"),
+      "non-ASCII name" -> (Seq(Series("ünïcode.✓", "ü*", "avg", 60, 0, 60, Array(2.5))),
+        "80025d7d58040000006e616d65580d000000c3bc6ec3af636f64652ee29c9373" +
+        "580e0000007061746845787072657373696f6e5803000000c3bc2a7358040000" +
+        "00737465704b3c73580600000076616c7565735d284740040000000000006573" +
+        "580500000073746172744b3c735803000000656e644b0073612e"),
+      "no series" -> (Nil, "80025d2e"))
+    for ((name, (series, bytes)) <- pins) assert(hex(PickleSink.encode(series)) == bytes, name)
+    assert(hex(PickleSink.emptyList) == "80025d2e")
   }
 
   test("render JSON matches the reference's hand-built shape") {
@@ -132,10 +164,13 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("find pickle: loadable protocol-2 list of dicts") {
-    val b = FindSink.pickle(Seq(("a.b", true), ("a.c", false)))
-    assert(b(0) == 0x80.toByte && b.last == '.'.toByte)
-    Files.createDirectories(Paths.get("target"))
-    Files.write(Paths.get("target/find_pickle_sample.bin"), b)
+    assert(hex(FindSink.pickle(Seq(("a.b", true), ("a.c", false)))) ==
+      "80025d7d580b0000006d65747269635f706174685803000000612e6273580600" +
+      "000069734c6561668873617d580b0000006d65747269635f7061746858030000" +
+      "00612e6373580600000069734c6561668973612e")
+    assert(hex(FindSink.pickle(Seq(("ü.✓", true)))) ==
+      "80025d7d580b0000006d65747269635f706174685806000000c3bc2ee29c9373" +
+      "580600000069734c6561668873612e")
     assert(FindSink.pickle(Nil).toSeq == PickleSink.emptyList.toSeq)
   }
 

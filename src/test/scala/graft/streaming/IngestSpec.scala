@@ -1,19 +1,35 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.engine.Finder
+import graft.engine.{Finder, StoreSnapshot}
 
 /** Streaming ingest: line parse, points append, index ancestor
   * expansion, tags maintenance (SURVEY §2.9, `doc/index-table.md:20-38`).
   */
 class IngestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+
+  /** One commit, checked to leave no entry in Spark's cache. The
+    * session is shared with every other suite, so the cache is emptied
+    * first: what is there afterwards is what the commit left.
+    */
+  private def commit(parsed: DataFrame, store: String): Unit = {
+    spark.catalog.clearCache()
+    Ingest.processBatch(parsed, store)
+    assert(spark.sharedState.cacheManager.isEmpty, "a commit left an entry in Spark's cache")
+  }
 
   test("parseLines: plain, tagged (sorted tags), malformed dropped") {
     import spark.implicits._
@@ -43,8 +59,10 @@ class IngestSpec extends AnyFunSuite {
       "lorem.ipsum.dolor.sit.amet 1.0 1557827619",
       "lorem.ipsum.other 2.0 1557827620",
       "m;env=prod;dc=ams 3.0 1557827621")
+    spark.catalog.clearCache()
     val q = Ingest.stream(stream.toDF(), s"$dir/tables", s"$dir/ckpt").start()
     q.awaitTermination(60000)
+    assert(spark.sharedState.cacheManager.isEmpty, "the stream's commit left an entry in Spark's cache")
 
     val points = spark.read.parquet(s"$dir/tables/points")
     assert(points.count() == 3)
@@ -108,7 +126,7 @@ class IngestSpec extends AnyFunSuite {
       "a.b 2.0 1704153600",  // 2024-01-02
       "a.b 3.0 1704240000"). // 2024-01-03
       toDF("value")
-    Ingest.processBatch(Ingest.parseLines(lines), s"$dir/t")
+    commit(Ingest.parseLines(lines), s"$dir/t")
     val pts = spark.read.parquet(s"$dir/t/points")
       .where(col("date") === "2024-01-02")
     // date is a physical partition column of the ingested layout: the
@@ -124,7 +142,7 @@ class IngestSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val dir = Files.createTempDirectory("graft-seg1").toFile.getAbsolutePath
-    Ingest.processBatch(Ingest.parseLines(Seq("cpu 1.0 1700000000").toDF("value")), s"$dir/t")
+    commit(Ingest.parseLines(Seq("cpu 1.0 1700000000").toDF("value")), s"$dir/t")
     val index = spark.read.parquet(s"$dir/t/index")
     // no bogus '.'/'cpu.' rows from Spark's descending sequence(1, 0)
     assert(index.where(col("path") === "." || col("path") === "cpu.").count() == 0)
@@ -143,10 +161,79 @@ class IngestSpec extends AnyFunSuite {
       .withColumn("version", lit(1L))
     val b2 = Ingest.parseLines(Seq("a.b 9.0 100").toDF("value"))
       .withColumn("version", lit(2L))
-    Ingest.processBatch(b1, s"$dir/tables")
-    Ingest.processBatch(b2, s"$dir/tables")
+    commit(b1, s"$dir/tables")
+    commit(b2, s"$dir/tables")
     val deduped = graft.engine.Render.dedup(spark.read.parquet(s"$dir/tables/points"))
     val rows = deduped.collect()
     assert(rows.length == 1 && rows.head.getAs[Double]("value") == 9.0)
+  }
+
+  /** One commit's batch as a file source reads it: 20 plain series
+    * and one tagged one, at time `t`.
+    */
+  private def textBatch(dir: String, t: Long) = {
+    val file = Paths.get(dir, s"lines-$t.txt")
+    val lines = (0 until 20).map(i => s"ingest.host$i.cpu $i.0 $t") :+ s"marker;env=test 20.0 $t"
+    Files.write(file, lines.asJava)
+    Ingest.parseLines(spark.read.text(file.toString))
+  }
+
+  /** The store's log entries, without their hidden `.crc` files. */
+  private def logEntries(store: String): Seq[String] =
+    Option(Paths.get(store, StoreSnapshot.LogDir).toFile.list())
+      .fold(Seq.empty[String])(_.toSeq.filterNot(_.startsWith(".")))
+
+  test("a commit leaves no entry in Spark's cache") {
+    val dir = Files.createTempDirectory("graft-uncache").toFile.getAbsolutePath
+    for (t <- Seq(1704067200L, 1704067260L)) commit(textBatch(dir, t), s"$dir/t")
+    assert(logEntries(s"$dir/t").sorted == Seq("0", "1"))
+    assert(spark.read.parquet(s"$dir/t/points").count() == 42)
+  }
+
+  test("a failed commit publishes no log entry and leaves no entry in Spark's cache") {
+    val dir = Files.createTempDirectory("graft-failed-commit").toFile.getAbsolutePath
+    val store = s"$dir/t"
+    // the index table's path is a regular file, so the index write
+    // throws after the points write and the aggregate's cache
+    Files.createDirectories(Paths.get(store))
+    Files.write(Paths.get(store, "index"), Array[Byte](1))
+    spark.catalog.clearCache()
+    intercept[Exception](Ingest.processBatch(textBatch(dir, 1704067200L), store))
+    assert(logEntries(store).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** Stage names of every job started while `body` ran. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val jobs = mutable.ArrayBuffer.empty[String]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += j.stageInfos.map(_.name).mkString(" | ")
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBusSync.await(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      ListenerBusSync.await(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.synchronized(jobs.toList)
+  }
+
+  // the points write, the aggregate's shuffle, then the index and tags
+  // writes with the query stages AQE splits them into; pinned exactly,
+  // as ServingJobFloorSpec pins the render's, so that a change that
+  // adds a job to every commit fails here. A commit of the same rows
+  // as an earlier one runs them all again: an aggregate left cached by
+  // the first would serve the second with 4.
+  test("a commit runs exactly 6 Spark jobs, a repeat of its rows too") {
+    import spark.implicits._
+    val lines = (0 until 100).map(i => s"jobs.host$i.cpu $i.0 1704067200") :+ "jobs;env=test 100.0 1704067200"
+    for (k <- 1 to 2) {
+      val dir = Files.createTempDirectory("graft-commit-jobs").toFile.getAbsolutePath
+      val jobs = jobsOf(Ingest.processBatch(Ingest.parseLines(lines.toDF("value")), s"$dir/t"))
+      assert(jobs.length == 6, s"commit $k, ${jobs.length} jobs:\n${jobs.mkString("\n")}")
+    }
   }
 }
