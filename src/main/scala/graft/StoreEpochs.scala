@@ -1,8 +1,9 @@
 package graft
 
-/** Store-epoch registry: the bridge between the serving session's
-  * store-stat tick ([[Tuning.Retuner]]) and the session-lifetime
-  * memos ([[graft.engine.GraphiteTables]], [[graft.llm.AnnIndex]]).
+/** Store-epoch registry: the bridge between the HTTP server's
+  * store-change signal (a new [[graft.engine.StoreSnapshot]] version)
+  * and the session-lifetime memos ([[graft.engine.GraphiteTables]],
+  * [[graft.llm.AnnIndex]]).
   *
   * The problem this closes: the derived-table and ANN-index memos are
   * keyed per (application, dir, kind) and — before epochs — never
@@ -13,20 +14,21 @@ package graft
   * query. Neither is the production behavior: ingest-owned state
   * should be re-derived ONCE when the store actually changes.
   *
-  * Mechanism: the Retuner already re-stats the store directories at
-  * most once per interval (one Hadoop-FS `getContentSummary` call —
-  * a single namenode RPC on HDFS) to re-derive the AQE shuffle
-  * ceiling. Each tick now also reports the per-dir (bytes, fileCount)
-  * here via [[observe]]; when a POSITIVE observation differs from the
-  * recorded one, the dir's epoch is bumped and every registered
-  * invalidator runs. The memo holders fold the current epoch into
-  * their cache key and register an invalidator that drops entries
-  * from older epochs — so:
+  * Mechanism: the server's snapshot version moves when ingest
+  * publishes a commit to the store log. The first request that sees a
+  * new version reports the snapshot's per-dir (bytes, fileCount)
+  * totals here via [[observe]] (the log already names every file and
+  * its size, so no FS call feeds it); the server's construction
+  * reports the boot state. When a POSITIVE observation differs from
+  * the recorded one, the dir's epoch is bumped and every registered
+  * invalidator runs. The memo folds the current epoch into its cache
+  * key and registers an invalidator that drops entries from older
+  * epochs — so:
   *
-  *  - a grown/compacted store ⇒ next request after the tick misses
-  *    the memo, re-derives ONCE, and is memoized again under the new
-  *    epoch (no disable flag, no per-query re-derivation);
-  *  - a static store ⇒ observations never change, the epoch never
+  *  - a grown/compacted store ⇒ the first request after the commit
+  *    misses the memo, re-derives ONCE, and is memoized again under
+  *    the new epoch (no disable flag, no per-query re-derivation);
+  *  - a static store ⇒ the version never moves, the epoch never
   *    moves, and every request keeps hitting the same materialized
   *    relation (zero new work);
   *  - an in-flight query that began before a bump inserts its result
@@ -39,21 +41,15 @@ package graft
   *    checkpoint blocks until the next bump — forever on a store
   *    that then goes static).
   *
-  * The HTTP server also observes its store at each commit: its
-  * [[graft.engine.StoreSnapshot]] version moves when ingest publishes,
-  * and the first request that sees a new version reports the
-  * snapshot's (bytes, fileCount) here, so a commit re-keys the memos
-  * at the next request rather than at the next tick (its Retuner reads
-  * the same totals, so no FS call feeds either).
-  *
   * Epoch-in-key plus eviction (rather than eviction alone) is what
   * makes the bump race-safe without locking the memo hot path.
   *
-  * Zero-observation conservatism mirrors the Retuner's: a (0, 0)
-  * reading after a successful boot stat is indistinguishable from a
-  * transient FS failure (`Tuning.dirStat` swallows errors into 0), so
-  * it never bumps — a store that genuinely emptied re-derives on the
-  * next positive observation instead.
+  * Zero-observation conservatism: a (0, 0) reading after a positive
+  * one never bumps. An add-only log never shrinks, but a caller that
+  * stats a dir with `Tuning.dirStat` cannot tell a transient FS
+  * failure (swallowed into 0) from an emptied store, so a store that
+  * genuinely emptied re-derives on the next positive observation
+  * instead.
   *
   * Evicted entries drop their last strong reference to the
   * localCheckpoint/checkpoint RDD; the ContextCleaner's reference
@@ -62,8 +58,8 @@ package graft
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, the
   * standard Spark contract).
   *
-  * Batch entrypoints (Verify / Bench / ScaleProbe) construct no
-  * Retuner, so nothing observes, epochs stay 0, and their behavior is
+  * Batch entrypoints (Verify / Bench / ScaleProbe) run no server, so
+  * nothing observes, epochs stay 0, and their behavior is
   * byte-identical to the pre-epoch engine.
   */
 object StoreEpochs {
@@ -91,10 +87,10 @@ object StoreEpochs {
     * (appId, dir) whose key carries an older epoch. */
   def onBump(f: (String, String, Long) => Unit): Unit = invalidators.add(f)
 
-  /** Record one store-stat observation (from the Retuner tick). Bumps
-    * the epoch — and fires invalidators — only when a positive
-    * observation differs from the recorded one. Returns the current
-    * epoch. */
+  /** Record one store-stat observation (from the server, at each new
+    * snapshot version). Bumps the epoch — and fires invalidators —
+    * only when a positive observation differs from the recorded one.
+    * Returns the current epoch. */
   def observe(appId: String, dir: String, bytes: Long, files: Long): Long =
     synchronized {
       val k = (appId, dir)

@@ -74,12 +74,16 @@ object Tuning {
   def dirBytes(dir: String, spark: SparkSession): Long =
     dirStat(dir, spark)._1
 
-  /** (bytes, fileCount) of a data directory — the byte total sizes the
-    * shuffle ceiling; the pair together is the store-change signal
-    * [[StoreEpochs]] keys memo invalidation on (an in-place compaction
-    * can keep the byte total while collapsing many files into few —
-    * the fileCount catches it). Missing dir or unreachable FS →
-    * (0, 0), which both consumers treat conservatively. */
+  /** (bytes, fileCount) of a data directory, by one Hadoop-FS
+    * `getContentSummary` (one namenode call on HDFS, a recursive
+    * listing on a local FS or an object store). The byte total sizes
+    * the shuffle ceiling ([[configureShuffle]]). A store the HTTP
+    * server reads reports the same pair from its snapshot log instead
+    * ([[graft.engine.StoreSnapshot]] totals, no FS call), and
+    * [[StoreEpochs]] keys memo invalidation on it (an in-place
+    * compaction can keep the byte total while collapsing many files
+    * into few — the fileCount catches it). Missing dir or unreachable
+    * FS → (0, 0). */
   def dirStat(dir: String, spark: SparkSession): (Long, Long) =
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
@@ -157,8 +161,8 @@ object Tuning {
     * greedy encoding, simhash md5 voting) serializes onto one core of
     * a 32-thread session — `m_png_resize` spent 1.85 s in a 1-task
     * stage that runs in 0.81 s once spread, `m_avi_motion_banded`
-    * 1.21 → 0.38 s, `d_bpe_encode` 1.71 → 0.79 s (SpreadProbe A/B,
-    * min-of-2, noop sink).
+    * 1.21 → 0.38 s, `d_bpe_encode` 1.71 → 0.79 s (interleaved
+    * single-session A/B, min-of-2, noop sink).
     *
     * The rule: when the relation's optimizer size estimate says the
     * scan under-fills the session (estimated scan tasks below the
@@ -181,8 +185,9 @@ object Tuning {
     * same A/B, so the blanket form is wrong by measurement).
     */
   /** Session-conf kill switch for [[spreadTinyInput]] (`"false"` to
-    * disable); also the A/B handle SpreadProbe uses to measure both
-    * paths inside one session. */
+    * disable); also the A/B handle `graft.tools.ConfAbProbe` flips to
+    * measure both paths inside one session (its scaladoc lists the
+    * spread-instrumented queries). */
   val SpreadEnabledKey = "graft.spread.enabled"
 
   /** Construction-scoped opt-out, THREAD-local rather than
@@ -225,79 +230,6 @@ object Tuning {
     else {
       val estTasks = ((stats + maxPB - 1) / maxPB).toLong
       if (estTasks < p) df.repartition(p) else df
-    }
-  }
-
-  /** Re-derives the ceiling for long-lived serving sessions. Batch
-    * entrypoints (Bench/Verify/ScaleProbe) re-derive per run, but an
-    * HTTP session over a store that streaming ingest + compaction grow
-    * 10× would otherwise keep its boot-time `initialPartitionNum`
-    * forever. The Retuner re-stats the store at most once per
-    * `minIntervalSec` (no Spark job, no driver lock on the hot path)
-    * and touches the session confs ONLY when the derived count
-    * changes — a static store re-derives the identical count and the
-    * confs (including any manual override layered on top) are left
-    * untouched. Shrinkage (compaction, retention drops) lowers the
-    * ceiling the same way growth raises it.
-    *
-    * `stat` gives a dir's (bytes, files). By default it is
-    * [[dirStat]], a Hadoop-FS walk (`getContentSummary` is one namenode
-    * call on HDFS, a recursive listing on a local FS or an object
-    * store); the HTTP server passes its store snapshot's totals, which
-    * cost no FS call.
-    */
-  final class Retuner(
-      spark: SparkSession,
-      dirs: Seq[String],
-      cpus: Int,
-      minIntervalSec: Long = 60L,
-      stat: (String, SparkSession) => (Long, Long) = dirStat) {
-    // never-checked sentinel must not be Long.MinValue: nowSec − it
-    // would overflow and make the interval check false forever
-    @volatile private var lastCheckSec = Long.MinValue / 4
-    @volatile private var currentN: Int = -1
-
-    /** The count currently applied to the session. */
-    def current: Int = currentN
-
-    private def derive(): (Long, Int) = {
-      val app = spark.sparkContext.applicationId
-      val stats = dirs.map(d => d -> stat(d, spark))
-      // the SAME stat drives both re-derivations: the shuffle ceiling
-      // below, and the store-epoch memo invalidation ([[StoreEpochs]])
-      // — one FS call per dir per tick, no second stat path to drift
-      stats.foreach { case (d, (b, f)) => StoreEpochs.observe(app, d, b, f) }
-      val bytes = stats.map(_._2._1).sum
-      (bytes, initialShufflePartitions(bytes, cpus))
-    }
-
-    /** Unconditional derive-and-apply (boot-time sizing). */
-    def force(nowSec: Long): Int = synchronized {
-      lastCheckSec = nowSec
-      val (_, n) = derive()
-      currentN = n
-      applyConf(spark, n)
-      n
-    }
-
-    /** Rate-limited re-check; call from the serving request path. */
-    def maybe(nowSec: Long): Int = {
-      if (nowSec - lastCheckSec >= minIntervalSec) synchronized {
-        if (nowSec - lastCheckSec >= minIntervalSec) {
-          lastCheckSec = nowSec
-          val (bytes, n) = derive()
-          // bytes == 0 after a successful boot sizing means either a
-          // transient stat failure (dirBytes swallows FS errors into
-          // 0) or a store emptied under us — in both cases collapsing
-          // the ceiling to the cpu floor (and clobbering any manual
-          // conf override) is worse than keeping the last good value,
-          // so re-derive only from a positive measurement
-          if (n != currentN && (bytes > 0 || currentN < 0)) {
-            currentN = n; applyConf(spark, n)
-          }
-        }
-      }
-      currentN
     }
   }
 }

@@ -128,9 +128,6 @@ object HttpApi {
       httpWorkers: Int = 8,
       limits: Limits = Limits(),
       tls: Option[Tls] = None,
-      // minimum seconds between store-size re-stats for the serving
-      // session's shuffle-ceiling re-derivation (graft.Tuning.Retuner)
-      retuneIntervalSec: Long = 60L,
       // self-telemetry (the reference's `[metrics]` block: request
       // histograms, limiter/cache counters, per-table read stats,
       // flushed in graphite line protocol to `metric-endpoint`) —
@@ -326,18 +323,14 @@ final class HttpApi(
   // every table it reads from it (see StoreSnapshot)
   private val snapshots = new StoreSnapshot(spark, tablesDir)
   private val requestSnapshot = new ThreadLocal[StoreSnapshot.Snap]
-  @volatile private var observedVersion = snapshots.last.version
+  @volatile private var observedVersion = -1L
 
   // data-derived AQE shuffle ceiling for the serving session (same
   // rule as Bench/Verify — see graft.Tuning): the server's input size
-  // is the store's bytes, its parallelism the session's. Long-lived
-  // sessions re-derive as ingest grows the store: the Retuner re-reads
-  // the snapshot's totals (no FS call) at most once per
-  // retuneIntervalSec and re-applies only on a changed count.
-  private val retuner = new graft.Tuning.Retuner(
-    spark, Seq(tablesDir), spark.sparkContext.defaultParallelism,
-    cfg.retuneIntervalSec, stat = (_, _) => snapshots.last.totals)
-  retuner.force(clock().getEpochSecond)
+  // is the store's bytes, its parallelism the session's. Sized here
+  // and re-derived at each new snapshot version (see observe).
+  private var shufflePartitions = -1
+  observe(snapshots.last)
 
   private val cache = new FindCache.TtlCache[Any]()
 
@@ -418,7 +411,6 @@ final class HttpApi(
 
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
-    retuner.maybe(clock().getEpochSecond)
     val t0 = System.currentTimeMillis()
     // per-request job group: thread-local, so concurrent handlers each
     // account their own Spark reads (see SparkReadStats). Scoped to
@@ -431,7 +423,8 @@ final class HttpApi(
     group.foreach(g =>
       spark.sparkContext.setJobGroup(g, path, interruptOnCancel = false))
     try {
-      observe(snapshots.current())
+      requestSnapshot.set(snapshots.current())
+      observe(snapshot)
       path match {
         case p if p.startsWith("/render")        => render(ex)
         case p if p.startsWith("/metrics/find")  => find(ex)
@@ -496,20 +489,26 @@ final class HttpApi(
     }
   }
 
-  /** Takes `snap` as this request's store, and reports a new version
-    * to [[graft.StoreEpochs]], so memos keyed on the store re-key at
-    * the commit rather than at the Retuner's next tick.
+  /** A new snapshot version is the server's one store-change signal:
+    * its totals go to [[graft.StoreEpochs]], so memos keyed on the
+    * store re-key at the commit, and re-derive the shuffle ceiling,
+    * whose confs are set only when the count changes (a manual
+    * session override survives commits that leave the count as it
+    * was).
     */
-  private def observe(snap: StoreSnapshot.Snap): Unit = {
-    requestSnapshot.set(snap)
+  private def observe(snap: StoreSnapshot.Snap): Unit =
     if (snap.version > observedVersion) synchronized {
       if (snap.version > observedVersion) {
         observedVersion = snap.version
         val (bytes, files) = snap.totals
         graft.StoreEpochs.observe(spark.sparkContext.applicationId, tablesDir, bytes, files)
+        val n = graft.Tuning.initialShufflePartitions(bytes, spark.sparkContext.defaultParallelism)
+        if (n != shufflePartitions) {
+          shufflePartitions = n
+          graft.Tuning.applyConf(spark, n)
+        }
       }
     }
-  }
 
   /** The three instrumented route families — the same trio the
     * reference wires in `InitMetrics` (`metrics/metrics.go:684-686`).

@@ -27,14 +27,44 @@ import graft.model.Schemas
 object GraphiteTables {
 
   /** The derived tables are what ingest would have materialized once;
-    * memoize + cache them per (session, dir) so repeated queries read
-    * the "stored" table instead of re-deriving it — mirroring the
-    * production layout where points/index/tags are real tables.
+    * memoize them per (application, dir, kind) so repeated queries
+    * read the "stored" table instead of re-deriving it — mirroring the
+    * production layout where points/index/tags are real tables. The
+    * ANN index state ([[graft.llm.AnnIndex]]) shares this memo under
+    * its own kinds.
     */
   private val derived =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
 
-  /** Materialize via [[graft.Lineage.truncate]] (LogicalRDD), NOT
+  /** Runtime-conf key: set `"true"` to bypass the memo and return the
+    * raw derivation plan instead — every query then re-derives the
+    * table from its scan. Two uses: (a) plan observability — the
+    * census tool reads the derivation subtree through this flag, so
+    * the per-query operator counts (which stop at the memoized
+    * LogicalRDD) can be read together with what the derivation itself
+    * costs; (b) an escape hatch for stores that change outside any
+    * serving session. Serving sessions don't need it:
+    * [[graft.StoreEpochs]] re-keys the memo once per observed store
+    * change, so ingest/compaction growth is picked up at the next
+    * request after the commit without per-query re-derivation.
+    */
+  val DisableMemoKey = "graft.memo.disable"
+
+  // Store-epoch invalidation (graft.StoreEpochs): the HTTP server
+  // bumps a dir's epoch when a new snapshot version changes its
+  // (bytes, fileCount); the epoch is folded into the memo key (so
+  // post-bump requests can never read a pre-bump entry, even one
+  // inserted by an in-flight query) and this callback drops the
+  // superseded entries so their checkpoint blocks can be cleaned.
+  // Batch sessions never observe, epochs stay 0, behavior unchanged.
+  graft.StoreEpochs.onBump((app, dir, epoch) => {
+    val live = s"@e$epoch"
+    derived.keySet.removeIf(k =>
+      k._1 == app && k._2 == dir && !k._3.endsWith(live))
+  })
+
+  /** `build`, materialized once per (application, dir, kind, store
+    * epoch) via [[graft.Lineage.truncate]] (LogicalRDD), NOT
     * `.cache()`: an InMemoryRelation whose cached plan is an
     * AdaptiveSparkPlan never compares `sameResult` to a second scan
     * of itself, which silently disables exchange/stage reuse for
@@ -51,60 +81,18 @@ object GraphiteTables {
     * without it an executor loss poisons the memo entry for the rest
     * of the application. Single-JVM (local mode) deployments are
     * unaffected.
+    *
+    * `build` runs on a miss only.
     */
-  /** Runtime-conf key: set `"true"` to bypass the memo and return the
-    * raw derivation plan instead — every query then re-derives the
-    * table from its scan. Two uses: (a) plan observability — the
-    * census tool reads the derivation subtree through this flag, so
-    * the per-query operator counts (which stop at the memoized
-    * LogicalRDD) can be read together with what the derivation itself
-    * costs; (b) an escape hatch for stores that change OUTSIDE any
-    * Retuner-observed serving session. Serving sessions don't need
-    * it: [[graft.StoreEpochs]] re-keys the memo once per observed
-    * store change, so ingest/compaction growth is picked up at the
-    * next tick without per-query re-derivation.
-    */
-  val DisableMemoKey = "graft.memo.disable"
-
-  // Store-epoch invalidation (graft.StoreEpochs): the serving
-  // session's Retuner tick bumps a dir's epoch when its (bytes,
-  // fileCount) stat changes; the epoch is folded into the memo key
-  // (so post-bump requests can never read a pre-bump entry, even one
-  // inserted by an in-flight query) and this callback drops the
-  // superseded entries so their checkpoint blocks can be cleaned.
-  // Batch sessions never observe, epochs stay 0, behavior unchanged.
-  graft.StoreEpochs.onBump((app, dir, epoch) => {
-    val live = s"@e$epoch"
-    derived.keySet.removeIf(k =>
-      k._1 == app && k._2 == dir && !k._3.endsWith(live))
-  })
-
-  private def memo(spark: SparkSession, dir: String, kind: String)(
+  private[graft] def memo(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
     if (spark.conf.getOption(DisableMemoKey).contains("true")) build
     else {
       val app = spark.sparkContext.applicationId
       val suffix = graft.StoreEpochs.keySuffix(app, dir)
       val key = (app, dir, kind + suffix)
-      // The memoized RDD's partitioning is its PERMANENT layout for
-      // the whole session, so size it to the DATA, not to whatever
-      // coalescing floor the session runs queries under: round 17's
-      // 64 KB AQE floor (Tuning.MinPartitionBytes — right for
-      // CPU-heavy query aggregates) left these path-dimension-sized
-      // tables in ~parallelism partitions, taxing every later tiny
-      // find/render with a full task wave per stage (g_find_* walls
-      // 4–7× — caught by the untouched-median control). One partition
-      // per advisory chunk of the SOURCE dir, clamped to
-      // [1, parallelism]; coalesce never widens, so a genuinely large
-      // store keeps its parallel layout. Sized on a miss only: the dir
-      // walk is a recursive FS listing that a memo hit must not pay.
-      val out = derived.computeIfAbsent(key, _ => {
-        val memoParts = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong,
-          graft.Tuning.dirBytes(dir, spark) / graft.Tuning.AdvisoryPartitionBytes))
-          .toInt
-        graft.Lineage.truncate(build.coalesce(memoParts), eager = false)
-      })
+      val out = derived.computeIfAbsent(
+        key, _ => graft.Lineage.truncate(build, eager = false))
       // close the insert-after-bump window: a bump whose invalidator
       // ran between this thread's key computation and the insert
       // completing would otherwise leave this old-epoch entry
@@ -117,6 +105,24 @@ object GraphiteTables {
         derived.remove(key)
       out
     }
+
+  /** `df` coalesced to one partition per advisory chunk of the SOURCE
+    * dir, clamped to [1, parallelism]. The memoized RDD's partitioning
+    * is its PERMANENT layout for the whole session, so size it to the
+    * DATA, not to whatever coalescing floor the session runs queries
+    * under: round 17's 64 KB AQE floor (Tuning.MinPartitionBytes —
+    * right for CPU-heavy query aggregates) left these
+    * path-dimension-sized tables in ~parallelism partitions, taxing
+    * every later tiny find/render with a full task wave per stage
+    * (g_find_* walls 4–7× — caught by the untouched-median control).
+    * coalesce never widens, so a genuinely large store keeps its
+    * parallel layout. Called inside a memo `build`, so the dir walk (a
+    * recursive FS listing) runs on a miss only.
+    */
+  private def sizedToStore(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
+    df.coalesce(math.max(1L, math.min(
+      spark.sparkContext.defaultParallelism.toLong,
+      graft.Tuning.dirBytes(dir, spark) / graft.Tuning.AdvisoryPartitionBytes)).toInt)
 
   /** events.parquet has shipped `ts` both as nanosecond timestamps
     * (which Spark's parquet reader rejects by default — read as raw
@@ -199,10 +205,10 @@ object GraphiteTables {
     */
   def index(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "index") {
-      expandIndexRows(
+      sizedToStore(spark, dir, expandIndexRows(
         points(spark, dir)
           .groupBy("path", "date")
-          .agg(max("version").as("version")))
+          .agg(max("version").as("version"))))
     }
 
   /** Ancestor expansion of a (path, date, version) metric batch into
@@ -274,9 +280,9 @@ object GraphiteTables {
     */
   def tags(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "tags") {
-      expandTagRows(
+      sizedToStore(spark, dir, expandTagRows(
         pointsTagged(spark, dir)
           .groupBy("path", "date")
-          .agg(max("version").as("version")))
+          .agg(max("version").as("version"))))
     }
 }

@@ -18,46 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan it was built to beat), while the served path against the
   * built index reads the corpus once per batch.
   *
-  * Memoized per (application, dir, kind) via [[graft.Lineage.truncate]]
-  * like `GraphiteTables.memo` — a LogicalRDD, so repeated references
-  * canonicalize equal and reuse exchanges — and honoring the same
-  * `graft.memo.disable` escape hatch (staleness opt-out + census
-  * observability). The same durability contract applies: multi-
+  * Memoized per (application, dir, kind, store epoch) in
+  * `GraphiteTables.memo`, the derived tables' memo: a LogicalRDD, so
+  * repeated references canonicalize equal and reuse exchanges, with
+  * the same `graft.memo.disable` escape hatch (staleness opt-out +
+  * census observability) and the same durability contract (multi-
   * executor deployments set `graft.checkpoint.dir` to make the cut
-  * reliable.
+  * reliable). The kinds here (`ivf-cells-…`, `epoch-cells-…`,
+  * `maxsim-cells-…`) never collide with its `index` and `tags`.
   */
 object AnnIndex {
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
-  // same store-epoch contract as GraphiteTables.memo: the Retuner
-  // tick bumps the dir's epoch on a changed store stat, the epoch
-  // rides the key, superseded entries are dropped here
-  graft.StoreEpochs.onBump((app, dir, epoch) => {
-    val live = s"@e$epoch"
-    built.keySet.removeIf(k =>
-      k._1 == app && k._2 == dir && !k._3.endsWith(live))
-  })
-
-  private def memo(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame =
-    if (spark.conf.getOption(graft.engine.GraphiteTables.DisableMemoKey)
-        .contains("true")) build
-    else {
-      val app = spark.sparkContext.applicationId
-      val suffix = graft.StoreEpochs.keySuffix(app, dir)
-      val key = (app, dir, kind + suffix)
-      val out = built.computeIfAbsent(
-        key, _ => graft.Lineage.truncate(build, eager = false))
-      // post-insert epoch recheck — same insert-after-bump window as
-      // GraphiteTables.memo (see the comment there): an entry whose
-      // epoch moved while it was being computed is returned (valid
-      // pre-bump read) but not retained, so its checkpoint blocks
-      // never outlive the bump that superseded them.
-      if (graft.StoreEpochs.keySuffix(app, dir) != suffix)
-        built.remove(key)
-      out
-    }
+  import graft.engine.GraphiteTables.memo
 
   /** Canonical-plan fingerprint of an input relation, folded into the
     * memo key so two DIFFERENT derivations (a different centroid set,
@@ -117,13 +88,12 @@ object AnnIndex {
     * ([[graft.streaming.StreamAnnIndex.epochAssignment]]) as memoized
     * serve state — the composition that closes the serving lifecycle:
     * the maintainer owns the store at ingest, [[graft.StoreEpochs]]
-    * bumps this memo's key when the Retuner tick observes the store
-    * change (a re-index epoch swap grows/changes the store's file
-    * set), and the next request re-resolves the `_CURRENT` pointer
-    * ONCE and is memoized again — so a drift re-index reaches a
-    * long-lived serving session at its next tick with no restart and
-    * no per-query pointer/parquet re-read. `StoreEpochSpec` drives
-    * reindex → tick → serve end to end.
+    * bumps this memo's key when an observer reports the store change
+    * (a re-index epoch swap grows/changes the store's file set), and
+    * the next request re-resolves the `_CURRENT` pointer ONCE and is
+    * memoized again — so a drift re-index reaches a long-lived serving
+    * session with no restart and no per-query pointer/parquet re-read.
+    * `StoreEpochSpec` drives reindex → observe → serve end to end.
     */
   def epochCells(
       spark: SparkSession,

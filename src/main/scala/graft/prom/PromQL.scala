@@ -66,14 +66,6 @@ object PromQL {
   /** Prometheus's default instant-vector staleness lookback (5 m). */
   val LookbackSec: Long = 300L
 
-  /** Session-conf kill switch for the round-17 lag-window rewrite of
-    * the consecutive-pair range functions (changes / resets / idelta /
-    * irate / delta / rate / increase / xrate / xincrease): set
-    * `"false"` to restore the collect_list → sorted-fold aggregate.
-    * Also the A/B handle `LagProbe` interleaves on.
-    */
-  val LagWindowKey = "graft.promql.lagwindow"
-
   sealed trait Expr { def matchers: Seq[(String, String, String)] }
 
   /** `metric{k="v"}` — instant vector, evaluated per grid point as
@@ -1500,25 +1492,16 @@ object PromQL {
         // per-slot sample list is bounded by window/scrape-interval
         // — sorting it is cheap and stays inside the aggregate
         lazy val sorted = array_sort(collect_list(struct(col("time"), col("value"))))
-        // Round-17 (guide §1.2 step 2, codegen): the consecutive-pair
-        // functions (changes/resets/idelta/irate and the
-        // delta/rate/increase family) previously rode an
-        // ObjectHashAggregate — collect_list → array_sort →
-        // interpreted higher-order fold per slot. Consecutive-pair
-        // state is exactly what a lag window provides: one sort
-        // within the (series, slot) partition, then plain codegen'd
-        // hash aggregates, and the window's hash exchange is reused
-        // by the follow-up aggregate (same keys — no extra shuffle).
-        // Equivalence: (path, time) is unique per slot after the
-        // max-version dedup above, so `lag(…) over (partition by
-        // path, n order by time)` visits exactly the pairs
-        // zip_with(s[0..len-1], s[1..len]) visited over the
-        // time-sorted list; per-function notes at each case. The
-        // genuinely whole-list functions (holt_winters, mad,
-        // quantile) keep the list aggregate. Kill switch / A/B
-        // handle: graft.promql.lagwindow=false.
-        val useLag = !slotted.sparkSession.conf.getOption(LagWindowKey)
-          .exists(_.equalsIgnoreCase("false"))
+        // The consecutive-pair functions (changes/resets/idelta/irate
+        // and the delta/rate/increase family) read each sample's
+        // predecessor from a lag window: one sort within the (series,
+        // slot) partition, then plain codegen'd hash aggregates, and
+        // the window's hash exchange is reused by the follow-up
+        // aggregate (same keys — no extra shuffle). (path, time) is
+        // unique per slot after the max-version dedup above, so the
+        // window visits each consecutive pair of the time-sorted
+        // samples once. The genuinely whole-list functions
+        // (holt_winters, mad, quantile) keep the list aggregate.
         lazy val lagged = {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("path"), col("n")).orderBy(col("time"))
@@ -1527,14 +1510,6 @@ object PromQL {
             .withColumn("pt", lag(col("time"), 1).over(w))
         }
         lazy val gl = lagged.groupBy(col("path"), col("n"))
-        // consecutive-pair fold over the sorted list (resets/changes)
-        def pairFold(f: (Column, Column) => Column): Column =
-          aggregate(
-            zip_with(
-              slice(col("s"), lit(1), size(col("s")) - 1),
-              slice(col("s"), lit(2), size(col("s")) - 1),
-              f),
-            lit(0.0), (acc, x) => acc + x)
         val out = fn match {
           case "avg_over_time"    => g.agg(avg("value").as("value"))
           case "sum_over_time"    => g.agg(sum("value").as("value"))
@@ -1563,7 +1538,7 @@ object PromQL {
               .withColumn("med", arrMedian(col("vs")))
               .withColumn("value",
                 arrMedian(array_sort(transform(col("vs"), v => abs(v - col("med"))))))
-          case "idelta" | "irate" if useLag =>
+          case "idelta" | "irate" =>
             // the slot's max-time row already carries (pv, pt) = the
             // second-to-last sample via the lag window; cnt >= 2
             // guarantees that row's pv/pt are non-null
@@ -1582,39 +1557,14 @@ object PromQL {
                     .otherwise(col("lastr.value"))
                   diff / (col("lastr.time") - col("lastr.pt"))
                 })
-          case "idelta" | "irate" =>
-            g.agg(sorted.as("s"), count(lit(1)).as("cnt"))
-              .where(col("cnt") >= 2)
-              .withColumn("lastp", element_at(col("s"), -1))
-              .withColumn("prevp", element_at(col("s"), -2))
-              .withColumn("value",
-                if (fn == "idelta")
-                  col("lastp")("value") - col("prevp")("value")
-                else {
-                  // counter reset between the last two samples: the
-                  // last value IS the increase (Prometheus instantRate)
-                  val diff = when(
-                    col("lastp")("value") >= col("prevp")("value"),
-                    col("lastp")("value") - col("prevp")("value"))
-                    .otherwise(col("lastp")("value"))
-                  diff / (col("lastp")("time") - col("prevp")("time"))
-                })
-          case "resets" if useLag =>
+          case "resets" =>
             // first row of a slot has pv null → comparison null →
-            // otherwise(0.0), identical to the fold's empty-pair init
+            // otherwise(0.0): a single-sample slot reads 0
             gl.agg(sum(when(col("value") < col("pv"), lit(1.0))
               .otherwise(lit(0.0))).as("value"))
-          case "resets" =>
-            g.agg(sorted.as("s"))
-              .withColumn("value", pairFold((a, b) =>
-                when(b("value") < a("value"), lit(1.0)).otherwise(lit(0.0))))
-          case "changes" if useLag =>
+          case "changes" =>
             gl.agg(sum(when(col("value") =!= col("pv"), lit(1.0))
               .otherwise(lit(0.0))).as("value"))
-          case "changes" =>
-            g.agg(sorted.as("s"))
-              .withColumn("value", pairFold((a, b) =>
-                when(b("value") =!= a("value"), lit(1.0)).otherwise(lit(0.0))))
           case "deriv" | "predict_linear" =>
             // least-squares slope over (t, v), time centered on the
             // eval slot for float stability (epoch² overflows double
@@ -1677,44 +1627,22 @@ object PromQL {
             // aliases from when the classic non-extrapolated form was
             // the default.
             val isCounter = fn != "delta"
-            val base0 =
-              if (useLag) {
-                // first/last via min_by/max_by on the unique time key;
-                // the reset give-back sums the lagged predecessor
-                // value exactly where the pair fold added a("value")
-                val aggs = Seq(
-                  min_by(struct(col("time"), col("value")), col("time"))
-                    .as("first"),
-                  max_by(struct(col("time"), col("value")), col("time"))
-                    .as("last")) ++
-                  (if (isCounter)
-                    Seq(sum(when(col("value") < col("pv"), col("pv"))
-                      .otherwise(lit(0.0))).as("resets"))
-                  else Nil)
-                gl.agg(count(lit(1)).as("cnt"), aggs: _*)
-                  .where(col("cnt") >= 2)
-              } else
-                g.agg(sorted.as("s"), count(lit(1)).as("cnt"))
-                  .where(col("cnt") >= 2)
-                  .withColumn("first", element_at(col("s"), 1))
-                  .withColumn("last", element_at(col("s"), -1))
-            val base =
-              if (isCounter)
-                // counter resets: every time a sample drops below its
-                // predecessor, the predecessor's value is added back
-                (if (useLag) base0
-                 else base0.withColumn("resets",
-                    aggregate(
-                      zip_with(
-                        slice(col("s"), lit(1), size(col("s")) - 1),
-                        slice(col("s"), lit(2), size(col("s")) - 1),
-                        (a, b) => when(b("value") < a("value"), a("value")).otherwise(lit(0.0))),
-                      lit(0.0), (acc, x) => acc + x)))
-                  .withColumn("increase",
-                    col("last")("value") - col("first")("value") + col("resets"))
-              else
-                base0.withColumn("increase",
-                  col("last")("value") - col("first")("value"))
+            // first/last via min_by/max_by on the unique time key;
+            // counter resets: every time a sample drops below its
+            // predecessor, the predecessor's value is added back
+            val aggs = Seq(
+              min_by(struct(col("time"), col("value")), col("time"))
+                .as("first"),
+              max_by(struct(col("time"), col("value")), col("time"))
+                .as("last")) ++
+              (if (isCounter)
+                Seq(sum(when(col("value") < col("pv"), col("pv"))
+                  .otherwise(lit(0.0))).as("resets"))
+              else Nil)
+            val delta = col("last")("value") - col("first")("value")
+            val base = gl.agg(count(lit(1)).as("cnt"), aggs: _*)
+              .where(col("cnt") >= 2)
+              .withColumn("increase", if (isCounter) delta + col("resets") else delta)
             val tEnd = (lit(start) + col("n") * lit(step)).cast("double")
             val firstT = col("first")("time").cast("double")
             val lastT = col("last")("time").cast("double")

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Store-epoch memo invalidation — the last piece of the live-serving
-  * story: ingest grows the store, the Retuner's next store-stat tick
-  * bumps the dir's epoch, and the NEXT request re-derives the
+  * story: ingest grows the store, the next observation of its
+  * (bytes, files) bumps the dir's epoch, and the NEXT request
+  * re-derives the
   * memoized tables ONCE (no `graft.memo.disable` hatch, no per-query
   * re-derivation); a static store never re-derives anything; the
   * served relation stays the memoized LogicalRDD the plan census
@@ -29,9 +30,12 @@ class StoreEpochSpec extends AnyFunSuite {
       .toFile.getAbsolutePath
 
     writeEvents(dir, "overwrite", 0 until 100, "click")
-    val retuner = new Tuning.Retuner(spark, Seq(dir),
-      cpus = 4, minIntervalSec = 0L)
-    retuner.force(1000L) // boot stat = the epoch baseline
+    val app = spark.sparkContext.applicationId
+    def observe(): Unit = {
+      val (bytes, files) = Tuning.dirStat(dir, spark)
+      StoreEpochs.observe(app, dir, bytes, files)
+    }
+    observe() // boot stat = the epoch baseline
 
     def viewPaths(df: org.apache.spark.sql.DataFrame): Long =
       df.where(col("path").startsWith("events.view")).count()
@@ -44,13 +48,12 @@ class StoreEpochSpec extends AnyFunSuite {
     assert(i1.queryExecution.analyzed.toString.contains("LogicalRDD"))
 
     // ingest grows the store with a NEW metric family; BEFORE the
-    // tick the memo still serves the boot-epoch state (documented
-    // pre-tick behavior)
+    // next observation the memo still serves the boot-epoch state
     writeEvents(dir, "append", 100 until 150, "view")
     assert(graft.engine.GraphiteTables.index(spark, dir) eq i1)
 
-    // the tick observes the changed (bytes, files) stat and bumps
-    retuner.maybe(2000L)
+    // the observation sees the changed (bytes, files) stat and bumps
+    observe()
     val i2 = graft.engine.GraphiteTables.index(spark, dir)
     assert(!(i2 eq i1), "post-bump request must re-derive")
     assert(viewPaths(i2) > 0L,
@@ -58,10 +61,10 @@ class StoreEpochSpec extends AnyFunSuite {
     assert(i2.queryExecution.analyzed.toString.contains("LogicalRDD"),
       "post-bump relation is memoized again, not the raw plan")
 
-    // static store: further ticks observe the same stat — no bump, no
-    // re-derivation, the same materialized relation keeps serving
-    retuner.maybe(3000L)
-    retuner.maybe(4000L)
+    // static store: further observations see the same stat — no bump,
+    // no re-derivation, the same materialized relation keeps serving
+    observe()
+    observe()
     assert(graft.engine.GraphiteTables.index(spark, dir) eq i2)
 
     // the ANN-index memo rides the same epoch signal
@@ -73,7 +76,7 @@ class StoreEpochSpec extends AnyFunSuite {
     val a1 = graft.llm.AnnIndex.ivfCells(spark, dir, vecs, cents, nlist = 2)
     assert(graft.llm.AnnIndex.ivfCells(spark, dir, vecs, cents, nlist = 2) eq a1)
     writeEvents(dir, "append", 150 until 160, "click")
-    retuner.maybe(5000L)
+    observe()
     val a2 = graft.llm.AnnIndex.ivfCells(spark, dir, vecs, cents, nlist = 2)
     assert(!(a2 eq a1), "AnnIndex memo must re-key on the epoch bump")
     assert(a2.count() == 2L)
@@ -89,28 +92,30 @@ class StoreEpochSpec extends AnyFunSuite {
 
     graft.streaming.StreamAnnIndex.reindex(spark, boot, base,
       nlist = 2, iters = 2)
-    val retuner = new Tuning.Retuner(spark, Seq(base),
-      cpus = 4, minIntervalSec = 0L)
-    retuner.force(100L)
+    def observe(): Unit = {
+      val (bytes, files) = Tuning.dirStat(base, spark)
+      StoreEpochs.observe(spark.sparkContext.applicationId, base, bytes, files)
+    }
+    observe()
 
     val a0 = graft.llm.AnnIndex.epochCells(spark, base, boot)
     assert(a0.count() == 4L)
     assert(graft.llm.AnnIndex.epochCells(spark, base, boot) eq a0)
 
     // drift + re-index swaps the store to epoch 1 — the memo still
-    // serves epoch 0 until the serving session's next store-stat tick
+    // serves epoch 0 until the store's next observation
     val all = boot.union(
       Seq((100L, v(0.7, 0.7)), (101L, v(0.7, 0.71))).toDF("vec_id", "embedding"))
     graft.streaming.StreamAnnIndex.reindex(spark, all, base,
       nlist = 2, iters = 2)
     assert(graft.llm.AnnIndex.epochCells(spark, base, boot) eq a0,
-      "pre-tick requests keep the memoized epoch-0 relation")
+      "requests before the observation keep the memoized epoch-0 relation")
 
-    retuner.maybe(200L)
+    observe()
     val a1 = graft.llm.AnnIndex.epochCells(spark, base, boot)
-    assert(!(a1 eq a0), "the tick must re-key the epoch'd serve memo")
+    assert(!(a1 eq a0), "the observation must re-key the epoch'd serve memo")
     assert(a1.count() == 6L,
-      "post-tick serve path must read the re-indexed epoch")
+      "the serve path after it must read the re-indexed epoch")
   }
 
   test("zero observations never bump (transient stat failure ≠ store change)") {
@@ -137,8 +142,7 @@ class StoreEpochSpec extends AnyFunSuite {
     commit("ep.a 1 1704067200")
     val api = new graft.api.HttpApi(spark, dir,
       graft.api.HttpApi.Config(
-        rules = graft.rollup.Rules(Nil, defaultPrecision = 10L),
-        retuneIntervalSec = 3600L)).start()
+        rules = graft.rollup.Rules(Nil, defaultPrecision = 10L))).start()
     val client = java.net.http.HttpClient.newHttpClient()
     def request(): Unit = {
       val r = client.send(java.net.http.HttpRequest.newBuilder(

@@ -70,62 +70,6 @@ class TuningSpec extends AnyFunSuite {
     assert(s.conf.getOption("spark.sql.files.maxPartitionBytes") == before)
   }
 
-  test("Retuner re-derives on growth, rate-limits, and leaves a static store alone") {
-    val s = SparkTestBase.spark
-    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val before = s.conf.getOption(key)
-    val dir = java.nio.file.Files.createTempDirectory("graft-retune").toFile
-    try {
-      val r = new Tuning.Retuner(s, Seq(dir.getAbsolutePath), cpus = 2,
-        minIntervalSec = 60L)
-      assert(r.force(1000L) === 2) // empty dir → floor at cpus
-      assert(s.conf.get(key) === "2")
-
-      // grow the store past the floor: 5 MB → rule wants 5 partitions
-      java.nio.file.Files.write(dir.toPath.resolve("pad.bin"),
-        new Array[Byte](5 << 20))
-      // within the interval: no re-stat, conf untouched
-      assert(r.maybe(1030L) === 2)
-      assert(s.conf.get(key) === "2")
-      // past the interval: re-derived on the check path
-      assert(r.maybe(1061L) === 5)
-      assert(s.conf.get(key) === "5")
-
-      // static store: confs are re-applied ONLY on a changed count —
-      // a manual override layered on the session survives the re-check
-      s.conf.set(key, "777")
-      assert(r.maybe(1200L) === 5)
-      assert(s.conf.get(key) === "777")
-
-      // shrinkage (to a still-positive size) lowers the ceiling the
-      // same way growth raises it
-      java.nio.file.Files.write(dir.toPath.resolve("pad.bin"),
-        new Array[Byte](3 << 20))
-      assert(r.maybe(1300L) === 3)
-      assert(s.conf.get(key) === "3")
-
-      // a zero measurement is indistinguishable from a transient FS
-      // stat failure (dirBytes swallows errors into 0): keep the last
-      // good ceiling and leave any manual override untouched instead
-      // of collapsing to the cpu floor
-      java.nio.file.Files.delete(dir.toPath.resolve("pad.bin"))
-      s.conf.set(key, "888")
-      assert(r.maybe(1400L) === 3)
-      assert(s.conf.get(key) === "888")
-
-      // a Retuner used WITHOUT a prior force() derives on the first
-      // maybe() (the never-checked sentinel must not overflow the
-      // interval arithmetic)
-      val r2 = new Tuning.Retuner(s, Seq(dir.getAbsolutePath), cpus = 2,
-        minIntervalSec = 60L)
-      assert(r2.maybe(5L) === 2)
-      assert(s.conf.get(key) === "2")
-    } finally {
-      before.foreach(v => s.conf.set(key, v))
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
-  }
-
   test("dirBytes sizes recursively via Hadoop FS and tolerates missing dirs") {
     val s = SparkTestBase.spark
     assert(Tuning.dirBytes("/root/testdata/sf0.001", s) > 0)

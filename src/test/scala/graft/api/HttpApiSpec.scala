@@ -694,17 +694,15 @@ class HttpApiSpec extends AnyFunSuite {
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val before = spark.conf.getOption(key)
     val dir = Files.createTempDirectory("graft-retune-http").toFile.getAbsolutePath
-    @volatile var t = rnow + 5
-    val srv = new HttpApi(
-      spark, s"$dir/t", HttpApi.Config(rules = rules),
-      clock = () => Instant.ofEpochSecond(t)).start()
+    val store = s"$dir/t"
+    val srv = new HttpApi(spark, store, HttpApi.Config(rules = rules)).start()
     def g(path: String) = client.send(
       HttpRequest.newBuilder(URI.create(srv.address + path)).GET().build(),
       HttpResponse.BodyHandlers.ofByteArray())
+    def commit(lines: Seq[String]): Unit =
+      Ingest.processBatch(Ingest.parseLines(lines.toDF("value")), store)
     try {
-      Ingest.processBatch(
-        Ingest.parseLines(Seq(s"test.retune 1.0 $rnow").toDF("value")),
-        s"$dir/t")
+      commit(Seq(s"test.retune 1.0 $rnow"))
       val cpus = spark.sparkContext.defaultParallelism
       // boot: tiny store floors at the session parallelism
       assert(g("/alive").statusCode() == 200)
@@ -714,24 +712,29 @@ class HttpApiSpec extends AnyFunSuite {
       // partition per MB of the store's bytes): long random names, so
       // each point carries ~10 KB that parquet cannot compress away
       val rnd = new scala.util.Random(7)
-      Ingest.processBatch(Ingest.parseLines((1 to 600).map(i =>
-        s"pad$i${rnd.alphanumeric.take(10000).mkString} 1.0 $rnow").toDF("value")), s"$dir/t")
-      val padMb = (graft.engine.StoreSnapshot.open(spark, s"$dir/t").totals._1 >> 20).toInt
+      commit((1 to 600).map(i =>
+        s"pad$i${rnd.alphanumeric.take(10000).mkString} 1.0 $rnow"))
+      val padMb = (graft.engine.StoreSnapshot.open(spark, store).totals._1 >> 20).toInt
       assert(padMb > cpus + 8, s"$padMb MB")
-      // same store clock-window: no re-stat yet, conf unchanged
-      assert(g("/alive").statusCode() == 200)
-      assert(spark.conf.get(key).toInt == cpus)
-      // past the retune interval: the request path raises the ceiling
-      // without a server restart
-      t += 61
+      // the first request after the commit sees the new snapshot
+      // version and raises the ceiling without a server restart
       assert(g("/alive").statusCode() == 200)
       assert(spark.conf.get(key).toInt == padMb)
 
-      // static store afterwards: re-applied only on change — a manual
-      // session override survives the periodic re-check
+      // re-applied only on a changed count — a manual session override
+      // survives a request with no new commit ...
       spark.conf.set(key, "777")
-      t += 61
       assert(g("/alive").statusCode() == 200)
+      assert(spark.conf.get(key) == "777")
+      // ... and a commit whose derived count is unchanged
+      val app = spark.sparkContext.applicationId
+      val e0 = graft.StoreEpochs.current(app, store)
+      commit(Seq(s"test.retune 2.0 ${rnow + 10}"))
+      val bytes = graft.engine.StoreSnapshot.open(spark, store).totals._1
+      assert(graft.Tuning.initialShufflePartitions(bytes, cpus) == padMb)
+      assert(g("/alive").statusCode() == 200)
+      assert(graft.StoreEpochs.current(app, store) == e0 + 1,
+        "the request observed the commit")
       assert(spark.conf.get(key) == "777")
     } finally {
       srv.stop()

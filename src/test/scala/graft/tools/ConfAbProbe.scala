@@ -3,14 +3,29 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Generic single-session interleaved A/B over a session-conf kill
-  * switch — the round-16 SpreadProbe methodology (base, opt, base,
-  * opt; min-of-2 per arm; one session so host weather, JIT and codec
-  * warmup hit both arms equally) generalized to any conf-gated
-  * optimization.
+  * switch: base, opt, base, opt; min-of-2 per arm; one session, so
+  * host weather, JIT and codec warmup hit both arms equally (the
+  * two-session form of such a comparison disagreed with itself by
+  * 2–4× per query in both directions).
   *
   * `Test/runMain graft.tools.ConfAbProbe <confKey> <baseVal> <optVal> q1,q2,...`
   *
-  * e.g. `ConfAbProbe graft.promql.lagwindow false true p_query_changes`.
+  * Example, the adaptive scan spread ([[graft.Tuning.spreadTinyInput]]):
+  * `ConfAbProbe graft.spread.enabled false true <names>`, with `<names>`
+  * the 26 queries on spread-instrumented paths, joined by commas:
+  * d_bpe_encode, d_simhash, d_simhash_pairs, d_simhash_recall,
+  * d_simhash_recall_banded, d_unigram_encode, d_wordpiece_encode, m_afp,
+  * m_afp_pairs, m_avi_frames, m_avi_motion, m_avi_motion_banded,
+  * m_dhash, m_dhash_dedup, m_dhash_pairs, m_dhash_wide,
+  * m_dhash_wide_pairs, m_features, m_frames, m_img_entropy,
+  * m_png_features, m_png_resize, m_resize, m_vad_segments,
+  * m_wav_features, q_topk.
+  *
+  * d_split_media, d_split_media_linear and m_afp_dedup are left out on
+  * purpose: their entries are wrapped in `SparkEntry.noSpread`, which
+  * forces the spread off during construction in BOTH arms, so their
+  * ratio reads ~1.0 whatever the spread's real effect. Measure those
+  * by editing the entry, not by this probe.
   */
 object ConfAbProbe {
   def main(args: Array[String]): Unit = {
