@@ -65,34 +65,23 @@ object Tuning {
 
   /** Recursive on-disk byte count of a data directory (parquet files
     * plus whatever sidecars ship with them — close enough for a
-    * partition-count heuristic). Resolved through the Hadoop
-    * FileSystem API so hdfs:// / s3a:// stores size correctly on a
+    * partition-count heuristic), by one Hadoop-FS `getContentSummary`
+    * (one namenode call on HDFS, a recursive listing on a local FS or
+    * an object store), so hdfs:// / s3a:// stores size correctly on a
     * real cluster (a local-FS walk would silently return 0 there and
     * floor the ceiling at cpus — the exact failure mode this class
-    * exists to remove). Missing dir or unreachable FS → 0 (the rule
-    * then floors at cpus, the safe small default). */
+    * exists to remove). It sizes the shuffle ceiling
+    * ([[configureShuffle]]); a store the HTTP server reads reports its
+    * byte total from its snapshot log instead
+    * ([[graft.engine.StoreSnapshot]], no FS call). Missing dir or
+    * unreachable FS → 0 (the rule then floors at cpus, the safe small
+    * default). */
   def dirBytes(dir: String, spark: SparkSession): Long =
-    dirStat(dir, spark)._1
-
-  /** (bytes, fileCount) of a data directory, by one Hadoop-FS
-    * `getContentSummary` (one namenode call on HDFS, a recursive
-    * listing on a local FS or an object store). The byte total sizes
-    * the shuffle ceiling ([[configureShuffle]]). A store the HTTP
-    * server reads reports the same pair from its snapshot log instead
-    * ([[graft.engine.StoreSnapshot]] totals, no FS call), and
-    * [[StoreEpochs]] keys memo invalidation on it (an in-place
-    * compaction can keep the byte total while collapsing many files
-    * into few — the fileCount catches it). Missing dir or unreachable
-    * FS → (0, 0). */
-  def dirStat(dir: String, spark: SparkSession): (Long, Long) =
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) {
-        val cs = fs.getContentSummary(path)
-        (cs.getLength, cs.getFileCount)
-      } else (0L, 0L)
-    } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
+      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** The sizing rule itself, pure for testing. */
   def initialShufflePartitions(inputBytes: Long, cpus: Int): Int = {

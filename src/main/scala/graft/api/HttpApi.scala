@@ -490,19 +490,15 @@ final class HttpApi(
   }
 
   /** A new snapshot version is the server's one store-change signal:
-    * its totals go to [[graft.StoreEpochs]], so memos keyed on the
-    * store re-key at the commit, and re-derive the shuffle ceiling,
-    * whose confs are set only when the count changes (a manual
-    * session override survives commits that leave the count as it
-    * was).
+    * it re-derives the shuffle ceiling from the snapshot's byte total,
+    * and sets the confs only when the count changes (a manual session
+    * override survives commits that leave the count as it was).
     */
   private def observe(snap: StoreSnapshot.Snap): Unit =
     if (snap.version > observedVersion) synchronized {
       if (snap.version > observedVersion) {
         observedVersion = snap.version
-        val (bytes, files) = snap.totals
-        graft.StoreEpochs.observe(spark.sparkContext.applicationId, tablesDir, bytes, files)
-        val n = graft.Tuning.initialShufflePartitions(bytes, spark.sparkContext.defaultParallelism)
+        val n = graft.Tuning.initialShufflePartitions(snap.bytes, spark.sparkContext.defaultParallelism)
         if (n != shufflePartitions) {
           shufflePartitions = n
           graft.Tuning.applyConf(spark, n)

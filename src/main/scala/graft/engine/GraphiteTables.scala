@@ -31,40 +31,17 @@ object GraphiteTables {
     * read the "stored" table instead of re-deriving it — mirroring the
     * production layout where points/index/tags are real tables. The
     * ANN index state ([[graft.llm.AnnIndex]]) shares this memo under
-    * its own kinds.
+    * its own kinds. An entry is derived once and kept for the
+    * application's life: the HTTP server reads its store through
+    * [[StoreSnapshot]], never through this memo, so only batch callers
+    * (Verify, Bench, SparkEntry's queries) reach it, over inputs that
+    * do not change while they run.
     */
   private val derived =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
 
-  /** Runtime-conf key: set `"true"` to bypass the memo and return the
-    * raw derivation plan instead — every query then re-derives the
-    * table from its scan. Two uses: (a) plan observability — the
-    * census tool reads the derivation subtree through this flag, so
-    * the per-query operator counts (which stop at the memoized
-    * LogicalRDD) can be read together with what the derivation itself
-    * costs; (b) an escape hatch for stores that change outside any
-    * serving session. Serving sessions don't need it:
-    * [[graft.StoreEpochs]] re-keys the memo once per observed store
-    * change, so ingest/compaction growth is picked up at the next
-    * request after the commit without per-query re-derivation.
-    */
-  val DisableMemoKey = "graft.memo.disable"
-
-  // Store-epoch invalidation (graft.StoreEpochs): the HTTP server
-  // bumps a dir's epoch when a new snapshot version changes its
-  // (bytes, fileCount); the epoch is folded into the memo key (so
-  // post-bump requests can never read a pre-bump entry, even one
-  // inserted by an in-flight query) and this callback drops the
-  // superseded entries so their checkpoint blocks can be cleaned.
-  // Batch sessions never observe, epochs stay 0, behavior unchanged.
-  graft.StoreEpochs.onBump((app, dir, epoch) => {
-    val live = s"@e$epoch"
-    derived.keySet.removeIf(k =>
-      k._1 == app && k._2 == dir && !k._3.endsWith(live))
-  })
-
-  /** `build`, materialized once per (application, dir, kind, store
-    * epoch) via [[graft.Lineage.truncate]] (LogicalRDD), NOT
+  /** `build`, materialized once per (application, dir, kind) via
+    * [[graft.Lineage.truncate]] (LogicalRDD), NOT
     * `.cache()`: an InMemoryRelation whose cached plan is an
     * AdaptiveSparkPlan never compares `sameResult` to a second scan
     * of itself, which silently disables exchange/stage reuse for
@@ -86,25 +63,8 @@ object GraphiteTables {
     */
   private[graft] def memo(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
-    if (spark.conf.getOption(DisableMemoKey).contains("true")) build
-    else {
-      val app = spark.sparkContext.applicationId
-      val suffix = graft.StoreEpochs.keySuffix(app, dir)
-      val key = (app, dir, kind + suffix)
-      val out = derived.computeIfAbsent(
-        key, _ => graft.Lineage.truncate(build, eager = false))
-      // close the insert-after-bump window: a bump whose invalidator
-      // ran between this thread's key computation and the insert
-      // completing would otherwise leave this old-epoch entry
-      // unreachable-but-pinned (its checkpoint blocks held until the
-      // NEXT bump — forever on a store that then goes static). The
-      // entry is a valid pre-bump read, so return it; just don't keep
-      // it. A bump arriving after this check is covered by its own
-      // invalidator pass — the key is already inserted and visible.
-      if (graft.StoreEpochs.keySuffix(app, dir) != suffix)
-        derived.remove(key)
-      out
-    }
+    derived.computeIfAbsent((spark.sparkContext.applicationId, dir, kind),
+      _ => graft.Lineage.truncate(build, eager = false))
 
   /** `df` coalesced to one partition per advisory chunk of the SOURCE
     * dir, clamped to [1, parallelism]. The memoized RDD's partitioning
@@ -117,7 +77,8 @@ object GraphiteTables {
     * (g_find_* walls 4–7× — caught by the untouched-median control).
     * coalesce never widens, so a genuinely large store keeps its
     * parallel layout. Called inside a memo `build`, so the dir walk (a
-    * recursive FS listing) runs on a miss only.
+    * recursive FS listing) runs on a miss only; a raw builder
+    * ([[indexRows]], [[tagRows]]) pays it per call.
     */
   private def sizedToStore(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
     df.coalesce(math.max(1L, math.min(
@@ -204,12 +165,16 @@ object GraphiteTables {
     * point count.
     */
   def index(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "index") {
-      sizedToStore(spark, dir, expandIndexRows(
-        points(spark, dir)
-          .groupBy("path", "date")
-          .agg(max("version").as("version"))))
-    }
+    memo(spark, dir, "index")(indexRows(spark, dir))
+
+  /** The raw derivation behind [[index]], scanning `events.parquet`
+    * on every call: what the plan census reads to show the cost the
+    * memo pays once. */
+  private[graft] def indexRows(spark: SparkSession, dir: String): DataFrame =
+    sizedToStore(spark, dir, expandIndexRows(
+      points(spark, dir)
+        .groupBy("path", "date")
+        .agg(max("version").as("version"))))
 
   /** Ancestor expansion of a (path, date, version) metric batch into
     * index rows — shared by the batch derivation above and the
@@ -279,10 +244,13 @@ object GraphiteTables {
     * `tag1`, including the `__name__` pseudo-tag.
     */
   def tags(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "tags") {
-      sizedToStore(spark, dir, expandTagRows(
-        pointsTagged(spark, dir)
-          .groupBy("path", "date")
-          .agg(max("version").as("version"))))
-    }
+    memo(spark, dir, "tags")(tagRows(spark, dir))
+
+  /** The raw derivation behind [[tags]], as [[indexRows]] is behind
+    * [[index]]. */
+  private[graft] def tagRows(spark: SparkSession, dir: String): DataFrame =
+    sizedToStore(spark, dir, expandTagRows(
+      pointsTagged(spark, dir)
+        .groupBy("path", "date")
+        .agg(max("version").as("version"))))
 }

@@ -84,11 +84,9 @@ object StoreSnapshot {
     def files(table: String): Vector[FileStatus] =
       tables.getOrElse(table, throw new FileNotFoundException(s"store table $table does not exist"))
 
-    /** (bytes, files) over every table. */
-    lazy val totals: (Long, Long) = {
-      val all = tables.values.flatten
-      (all.map(_.getLen).sum, all.size.toLong)
-    }
+    /** Bytes over every table: what sizes the server's shuffle
+      * ceiling, read from the log with no FS call. */
+    lazy val bytes: Long = tables.values.iterator.flatten.map(_.getLen).sum
 
     private[StoreSnapshot] def applied(e: Entry): Snap =
       if (e.full) copy(version = version + 1, tables = e.files)

@@ -18,14 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan it was built to beat), while the served path against the
   * built index reads the corpus once per batch.
   *
-  * Memoized per (application, dir, kind, store epoch) in
-  * `GraphiteTables.memo`, the derived tables' memo: a LogicalRDD, so
-  * repeated references canonicalize equal and reuse exchanges, with
-  * the same `graft.memo.disable` escape hatch (staleness opt-out +
-  * census observability) and the same durability contract (multi-
-  * executor deployments set `graft.checkpoint.dir` to make the cut
-  * reliable). The kinds here (`ivf-cells-…`, `epoch-cells-…`,
-  * `maxsim-cells-…`) never collide with its `index` and `tags`.
+  * Memoized per (application, dir, kind) in `GraphiteTables.memo`,
+  * the derived tables' memo: a LogicalRDD, so repeated references
+  * canonicalize equal and reuse exchanges, derived once per
+  * application, with the same durability contract (multi-executor
+  * deployments set `graft.checkpoint.dir` to make the cut reliable).
+  * The kinds here (`ivf-cells-…`, `maxsim-cells-…`) never collide
+  * with its `index` and `tags`. The raw builders
+  * ([[Similarity.ivfAssignKernel]], [[Similarity.maxSimCellGroups]])
+  * give the same rows without the memo.
   */
 object AnnIndex {
   import graft.engine.GraphiteTables.memo
@@ -84,28 +85,6 @@ object AnnIndex {
     * grouping over the same dir are different plans, so they can never
     * share a cached membership even under one `groupCol` name).
     */
-  /** The epoch'd streamed ANN store's current assignment
-    * ([[graft.streaming.StreamAnnIndex.epochAssignment]]) as memoized
-    * serve state — the composition that closes the serving lifecycle:
-    * the maintainer owns the store at ingest, [[graft.StoreEpochs]]
-    * bumps this memo's key when an observer reports the store change
-    * (a re-index epoch swap grows/changes the store's file set), and
-    * the next request re-resolves the `_CURRENT` pointer ONCE and is
-    * memoized again — so a drift re-index reaches a long-lived serving
-    * session with no restart and no per-query pointer/parquet re-read.
-    * `StoreEpochSpec` drives reindex → observe → serve end to end.
-    */
-  def epochCells(
-      spark: SparkSession,
-      base: String,
-      template: DataFrame,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    memo(spark, base, s"epoch-cells-$idCol-$embCol-t${planTag(template)}") {
-      graft.streaming.StreamAnnIndex.epochAssignment(
-        spark, base, template, idCol, embCol)
-    }
-
   def maxSimCellGroups(
       spark: SparkSession,
       dir: String,

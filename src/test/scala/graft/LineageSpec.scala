@@ -115,7 +115,7 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
-  test("graft.memo.disable bypasses the table memo: raw derivation plan, parquet scan visible") {
+  test("the table memo reads a LogicalRDD; the raw builder shows the derivation scan") {
     val s = spark.newSession()
     val sfDir = "/root/testdata/sf0.001"
     def scans(df: org.apache.spark.sql.DataFrame): Int =
@@ -124,14 +124,35 @@ class LineageSpec extends AnyFunSuite {
     // memoized: the table reads from the materialized LogicalRDD — no scan
     val memod = graft.engine.GraphiteTables.index(s, sfDir)
     memod.write.mode("overwrite").format("noop").save()
+    assert(memod.queryExecution.analyzed.toString.contains("LogicalRDD"))
     assert(scans(memod) == 0, "memoized read must not re-scan parquet")
-    // disabled: the raw derivation plan, scanning parquet each time
-    s.conf.set(graft.engine.GraphiteTables.DisableMemoKey, "true")
+    assert(graft.engine.GraphiteTables.index(s, sfDir) eq memod)
+    // the raw builder: the derivation plan, scanning parquet each time
+    val raw = graft.engine.GraphiteTables.indexRows(s, sfDir)
+    assert(scans(raw) >= 1, "the raw builder must expose the derivation scan")
+    // same rows either way
+    assert(raw.count() == memod.count())
+  }
+
+  test("the table memo derives once per session: a grown store still returns the first relation") {
+    val s = spark.newSession()
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-memo-once")
+    def writeEvents(mode: String, ids: Range, eventType: String): Unit =
+      ids.map(i => (i.toLong, i.toLong * 1000000000L, i.toLong % 7, eventType, i.toDouble, ""))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode(mode).parquet(s"$dir/events.parquet")
     try {
-      val raw = graft.engine.GraphiteTables.index(s, sfDir)
-      assert(scans(raw) >= 1, "disabled memo must expose the derivation scan")
-      // same rows either way
-      assert(raw.count() == memod.count())
-    } finally s.conf.unset(graft.engine.GraphiteTables.DisableMemoKey)
+      writeEvents("overwrite", 0 until 100, "click")
+      val first = graft.engine.GraphiteTables.index(s, dir.toString)
+      assert(first.count() > 0L)
+      writeEvents("append", 100 until 150, "view")
+      // the memo has one lifetime: nothing re-derives an entry, so a
+      // caller that wants the grown store reads the raw builder
+      assert(graft.engine.GraphiteTables.index(s, dir.toString) eq first)
+      assert(first.where(col("path").startsWith("events.view")).count() == 0L)
+      assert(graft.engine.GraphiteTables.indexRows(s, dir.toString)
+        .where(col("path").startsWith("events.view")).count() > 0L)
+    } finally deleteRecursively(dir)
   }
 }

@@ -714,7 +714,7 @@ class HttpApiSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(7)
       commit((1 to 600).map(i =>
         s"pad$i${rnd.alphanumeric.take(10000).mkString} 1.0 $rnow"))
-      val padMb = (graft.engine.StoreSnapshot.open(spark, store).totals._1 >> 20).toInt
+      val padMb = (graft.engine.StoreSnapshot.open(spark, store).bytes >> 20).toInt
       assert(padMb > cpus + 8, s"$padMb MB")
       // the first request after the commit sees the new snapshot
       // version and raises the ceiling without a server restart
@@ -726,15 +726,15 @@ class HttpApiSpec extends AnyFunSuite {
       spark.conf.set(key, "777")
       assert(g("/alive").statusCode() == 200)
       assert(spark.conf.get(key) == "777")
-      // ... and a commit whose derived count is unchanged
-      val app = spark.sparkContext.applicationId
-      val e0 = graft.StoreEpochs.current(app, store)
+      // ... and a commit whose derived count is unchanged, seen by the
+      // next request (it renders the commit's point)
       commit(Seq(s"test.retune 2.0 ${rnow + 10}"))
-      val bytes = graft.engine.StoreSnapshot.open(spark, store).totals._1
+      val bytes = graft.engine.StoreSnapshot.open(spark, store).bytes
       assert(graft.Tuning.initialShufflePartitions(bytes, cpus) == padMb)
-      assert(g("/alive").statusCode() == 200)
-      assert(graft.StoreEpochs.current(app, store) == e0 + 1,
-        "the request observed the commit")
+      val r = g(s"/render/?format=json&target=test.retune&from=$rnow&until=${rnow + 10}")
+      assert(r.statusCode() == 200)
+      assert(new String(r.body()) == JsonSink.render(Seq(Series("test.retune", "test.retune",
+        "avg", rnow, rnow + 20, 10, Array(1.0, 2.0))), rnow, rnow + 10))
       assert(spark.conf.get(key) == "777")
     } finally {
       srv.stop()

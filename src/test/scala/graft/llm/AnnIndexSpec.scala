@@ -8,13 +8,13 @@ import graft.SparkTestBase
 /** The ingest-owned ANN index memo contract: one materialized
   * relation per (session, dir, kind) — repeated references hit the
   * same LogicalRDD (exchange reuse), distinct key components get
-  * distinct entries, the escape hatch bypasses, and the memoized
-  * relation is row-identical to the raw assignment plan.
+  * distinct entries, and the memoized relation is row-identical to
+  * the raw assignment plan and to its kernel.
   */
 class AnnIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  test("memo identity, key separation, disable hatch, row equivalence") {
+  test("memo identity, key separation, row equivalence to raw plan and kernel") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-annmemo")
       .toFile.getAbsolutePath
@@ -40,12 +40,11 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(a.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == raw)
     assert(raw == Set(1L -> 0L, 3L -> 0L, 2L -> 1L))
 
-    // census observability: the disable hatch returns the raw plan
-    spark.conf.set(graft.engine.GraphiteTables.DisableMemoKey, "true")
-    try {
-      val e = AnnIndex.ivfCells(spark, dir, vecs, cents, nlist = 2)
-      assert(!(e eq a))
-    } finally spark.conf.unset(graft.engine.GraphiteTables.DisableMemoKey)
+    // and exactly the rows of the kernel the memo materializes,
+    // similarity included
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows(a) == rows(Similarity.ivfAssignKernel(vecs, cents)))
   }
 
   test("plan fingerprint: different derivations never share an entry; " +

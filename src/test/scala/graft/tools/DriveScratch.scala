@@ -19,19 +19,9 @@ object DriveScratch {
     val spark = SparkTestBase.spark
     val sfDir = "/root/testdata/sf0.001"
 
-    // memoized-table derivation census first: per-query rows below
-    // stop at the memoized LogicalRDD, so the cost of deriving each
-    // graphite side table is reported here ONCE (it is paid once per
-    // session) instead of being invisible.
-    spark.conf.set(graft.engine.GraphiteTables.DisableMemoKey, "true")
-    val memoTables = Seq(
-      "memo:index" -> (() => graft.engine.GraphiteTables.index(spark, sfDir)),
-      "memo:tags" -> (() => graft.engine.GraphiteTables.tags(spark, sfDir)),
-      "memo:points" -> (() => graft.engine.GraphiteTables.points(spark, sfDir)),
-      "memo:pointsTagged" -> (() => graft.engine.GraphiteTables.pointsTagged(spark, sfDir)))
-    for ((name, build) <- memoTables) {
+    def census(name: String)(build: => org.apache.spark.sql.DataFrame): Unit =
       try {
-        val df = build()
+        val df = build
         df.write.mode("overwrite").format("noop").save()
         val p = df.queryExecution.executedPlan.toString
         def n(pat: String) = pat.r.findAllIn(p).length
@@ -42,33 +32,36 @@ object DriveScratch {
         case e: Throwable =>
           println(s"CENSUS-ERR $name ${Option(e.getMessage).getOrElse("?").take(120)}")
       }
-    }
-    spark.conf.unset(graft.engine.GraphiteTables.DisableMemoKey)
+
+    // memoized-table derivation census first: per-query rows below
+    // stop at the memoized LogicalRDD, so the cost of deriving each
+    // graphite side table is reported here ONCE (it is paid once per
+    // session, by the raw builders the memo wraps) instead of being
+    // invisible.
+    import graft.engine.{Finder, GraphiteTables, Render}
+    census("memo:index")(GraphiteTables.indexRows(spark, sfDir))
+    census("memo:tags")(GraphiteTables.tagRows(spark, sfDir))
+    census("memo:points")(GraphiteTables.points(spark, sfDir))
+    census("memo:pointsTagged")(GraphiteTables.pointsTagged(spark, sfDir))
+
+    // the g_render_* rows census only their driver-assembled local
+    // relation; the render's Spark half is one plan per (step,
+    // function) group, censused here as PlanAuditSpec audits it
+    for (mode <- Seq(Render.VersionMode.DedupExact, Render.VersionMode.MergedCells))
+      census(s"render:group($mode)") {
+        val found = Finder.find(GraphiteTables.index(spark, sfDir), "events.*.*")
+          .select("path").collect().map(_.getString(0)).toSeq
+        Render.fetchGroup(GraphiteTables.points(spark, sfDir),
+          Render.FuncGroup(60L, graft.rollup.AggFunc.Avg, found),
+          graft.model.TimeFrame(1704067200L, 1704070799L), mode)
+      }
 
     // optional arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       args.headOption.map(_.split(',').toSet)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    for (name <- names) {
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        df.write.mode("overwrite").format("noop").save()
-        val p = df.queryExecution.executedPlan.toString
-        def n(pat: String) = pat.r.findAllIn(p).length
-        val scans = n("FileScan parquet")
-        val ex = n("Exchange")
-        val smj = n("SortMergeJoin") + n("ShuffledHashJoin")
-        val bhj = n("BroadcastHashJoin")
-        val bnlj = n("BroadcastNestedLoopJoin")
-        val win = n("Window")
-        val cart = n("CartesianProduct")
-        println(s"CENSUS | $name | $scans | $ex | $smj | $bhj | $bnlj | $win | $cart |")
-      } catch {
-        case e: Throwable =>
-          println(s"CENSUS-ERR $name ${Option(e.getMessage).getOrElse("?").take(120)}")
-      }
-    }
+    for (name <- names) census(name)(graft.SparkEntry.queries(name)(spark, sfDir))
     spark.stop()
   }
 
