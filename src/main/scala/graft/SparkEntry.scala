@@ -1884,7 +1884,7 @@ object SparkEntry {
       val vecs = s.read.parquet(s"$dir/embeddings.parquet")
       val centroids = vecs.where(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-      Similarity.kmeansStep(vecs, centroids, exact = true)
+      Similarity.kmeansStep(vecs, centroids)
         .select(col("centroid_id"), col("pos").cast("long").as("pos"),
           round(col("m"), 4).as("m"))
     }),
@@ -2037,7 +2037,7 @@ object SparkEntry {
       val centroids = seeds
         .join(vecs, Seq("vec_id"))
         .select((col("rank") - 1).as("centroid_id"), col("embedding").as("centroid"))
-      Similarity.kmeansStep(vecs, centroids, exact = true)
+      Similarity.kmeansStep(vecs, centroids)
         .select(col("centroid_id"), col("pos").cast("long").as("pos"),
           round(col("m"), 4).as("m"))
     }),
@@ -2224,8 +2224,7 @@ object SparkEntry {
       // round-15: the curve measures the rule where it OPERATES —
       // corpus-sized nlist (ivfPlan's √n rule, like every serve
       // query) instead of the old fixed-8 fixture, with the
-      // assignment served from the ingest-owned AnnIndex kernel memo
-      // (the join+window form is n·nlist — fatal at x1000). The
+      // assignment served from the ingest-owned AnnIndex memo. The
       // ScaleProbe leg re-measures this query at x10/x100 (nlist
       // 64/512+), validating the √(nprobe/nlist) floor as nlist grows.
       val nlist = Similarity.ivfPlan(vecs.count())
@@ -2250,10 +2249,9 @@ object SparkEntry {
     // the drift gauge StreamAnnIndex.maxCellShare serves on, as a
     // first-class query (a cell share drifting toward 1 is the signal
     // that triggers an epoch'd re-index). The assignment comes from
-    // AnnIndex.ivfCells — the argmax KERNEL (never the join+window
-    // n·nlist materialization, fatal at ×1000 with the corpus-scaled
-    // nlist this query uses; IvfKernelSpec pins bit-parity so the
-    // join-shaped DuckDB twin still matches) — memoized as ingest-
+    // AnnIndex.ivfCells — the argmax kernel (emits n rows, never
+    // n·nlist, with the corpus-scaled nlist this query uses; its
+    // DuckDB twin ranks a join to the same argmax) — memoized as ingest-
     // owned state, so the gauge rides the same index the serve
     // queries read instead of re-deriving per call. The share window
     // runs over the ALREADY-AGGREGATED nlist-row relation —

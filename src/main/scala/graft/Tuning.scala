@@ -141,6 +141,24 @@ object Tuning {
       MinPartitionBytes.toString)
   }
 
+  /** Construction-scoped opt-out, THREAD-local rather than
+    * session-conf-mutating: `SparkEntry.noSpread` previously scoped
+    * the opt-out by set → body → restore on the shared session conf,
+    * which silently disabled the spread for any UNRELATED query
+    * constructed concurrently on the same session (round-16 ADVICE).
+    * Entry construction is single-threaded per query, so a
+    * ThreadLocal depth counter gives exactly the intended scope with
+    * no cross-thread visibility.
+    */
+  private val noSpreadDepth: ThreadLocal[Integer] =
+    ThreadLocal.withInitial(() => Integer.valueOf(0))
+
+  /** Run `body` with [[spreadTinyInput]] disabled on THIS thread. */
+  def withSpreadDisabled[T](body: => T): T = {
+    noSpreadDepth.set(noSpreadDepth.get + 1)
+    try body finally noSpreadDepth.set(noSpreadDepth.get - 1)
+  }
+
   /** Adaptive tiny-input spread (optimization guide §2: partitioning
     * must be scale-adaptive, never a constant tuned for one scale).
     *
@@ -173,36 +191,9 @@ object Tuning {
     * pure barrier (`d_ppl_buckets` regressed 2.09 → 2.66 s in the
     * same A/B, so the blanket form is wrong by measurement).
     */
-  /** Session-conf kill switch for [[spreadTinyInput]] (`"false"` to
-    * disable); also the A/B handle `graft.tools.ConfAbProbe` flips to
-    * measure both paths inside one session (its scaladoc lists the
-    * spread-instrumented queries). */
-  val SpreadEnabledKey = "graft.spread.enabled"
-
-  /** Construction-scoped opt-out, THREAD-local rather than
-    * session-conf-mutating: `SparkEntry.noSpread` previously scoped
-    * the opt-out by set → body → restore on the shared session conf,
-    * which silently disabled the spread for any UNRELATED query
-    * constructed concurrently on the same session (round-16 ADVICE).
-    * Entry construction is single-threaded per query, so a
-    * ThreadLocal depth counter gives exactly the intended scope with
-    * no cross-thread visibility; the session conf stays the EXTERNAL
-    * kill switch (ops / A/B probes).
-    */
-  private val noSpreadDepth: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(0))
-
-  /** Run `body` with [[spreadTinyInput]] disabled on THIS thread. */
-  def withSpreadDisabled[T](body: => T): T = {
-    noSpreadDepth.set(noSpreadDepth.get + 1)
-    try body finally noSpreadDepth.set(noSpreadDepth.get - 1)
-  }
-
   def spreadTinyInput(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     if (noSpreadDepth.get > 0) return df
-    if (spark.conf.getOption(SpreadEnabledKey).exists(_.equalsIgnoreCase("false")))
-      return df
     val p = spark.sparkContext.defaultParallelism
     val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // parse through Spark's own byte-string grammar: conventional

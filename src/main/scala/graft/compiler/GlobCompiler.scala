@@ -73,10 +73,4 @@ object GlobCompiler {
     if (simplePrefix.isEmpty) native
     else field.startsWith(simplePrefix) && native
   }
-
-  /** Expanded-glob list → predicate (`finder/split.go` semantics: the
-    * union of per-element predicates on one scan instead of N scans).
-    */
-  def globList(field: Column, queries: Seq[String], optionalDotAtEnd: Boolean = false): Column =
-    queries.map(q => glob(field, q, optionalDotAtEnd)).reduceLeft(_ || _)
 }

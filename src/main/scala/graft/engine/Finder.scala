@@ -66,6 +66,51 @@ object Finder {
     else Right(())
   }
 
+  /** The `date` filter for a time range: the daily rows between the
+    * two dates when both bounds are set, `orElse` otherwise.
+    */
+  private def dailyDate(from: Long, until: Long, orElse: Column): Column =
+    if (from > 0 && until > 0)
+      col("date").between(
+        to_date(timestamp_seconds(lit(from))),
+        to_date(timestamp_seconds(lit(until))))
+    else orElse
+
+  /** The tree predicate of one find over orientation `rev`: the date
+    * filter, and for each oriented glob its level (depth plus the
+    * daily/tree offset of `finder/index.go:19-23`) and tree glob,
+    * OR'd. Daily rows (both bounds set) filter a date range; all-time
+    * rows read the constant tree date.
+    */
+  private def treePredicate(oriented: Seq[String], rev: Boolean, from: Long, until: Long): Column = {
+    val useDaily = from > 0 && until > 0
+    val levelOffset =
+      if (useDaily) { if (rev) Schemas.ReverseLevelOffset else 0 }
+      else { if (rev) Schemas.ReverseTreeLevelOffset else Schemas.TreeLevelOffset }
+    val datePred = dailyDate(from, until, col("date") === lit(Schemas.DefaultTreeDate).cast("date"))
+    def level(q: String) = col("level") === (Paths.level(q) + levelOffset)
+    oriented match {
+      case Seq(q) => level(q) && datePred && GlobCompiler.treeGlob(col("path"), q)
+      case qs     => datePred && qs.map(q => level(q) && GlobCompiler.treeGlob(col("path"), q))
+          .reduceLeft(_ || _)
+    }
+  }
+
+  /** Distinct matching paths in display (direct) orientation, with the
+    * non-leaf marker decoded from the trailing dot
+    * (`finder/finder.go:116-122`): (path, is_leaf).
+    */
+  private def matchedPaths(index: DataFrame, pred: Column, rev: Boolean): DataFrame = {
+    val raw = index.where(pred).select("path").distinct()
+    val display =
+      if (rev) raw.select(GraphiteTables.reversePath(col("path")).as("path"))
+      else raw
+    display.select(
+      when(col("path").endsWith("."), expr("substring(path, 1, length(path)-1)"))
+        .otherwise(col("path")).as("path"),
+      (!col("path").endsWith(".")).as("is_leaf"))
+  }
+
   /** Compile a find query into (filterColumn, usedReverse). Daily rows
     * (`useDaily`) add a date-range filter; all-time rows use the
     * constant tree date with the level offsets of `finder/index.go:19-23`.
@@ -79,21 +124,7 @@ object Finder {
     val query = Glob.clearGlob(query0)
     val rev = reverse.getOrElse(useReverse(query, reversePolicy))
     val q = if (rev) Paths.reverse(query) else query
-    val depth = Paths.level(q)
-    val useDaily = from > 0 && until > 0
-    val levelOffset =
-      if (useDaily) { if (rev) Schemas.ReverseLevelOffset else 0 }
-      else { if (rev) Schemas.ReverseTreeLevelOffset else Schemas.TreeLevelOffset }
-
-    val levelPred = col("level") === (depth + levelOffset)
-    val datePred =
-      if (useDaily)
-        col("date").between(
-          to_date(timestamp_seconds(lit(from))),
-          to_date(timestamp_seconds(lit(until))))
-      else col("date") === lit(Schemas.DefaultTreeDate).cast("date")
-
-    (levelPred && datePred && GlobCompiler.treeGlob(col("path"), q), rev)
+    (treePredicate(Seq(q), rev, from, until), rev)
   }
 
   /** Run a find: distinct matching paths with the non-leaf marker
@@ -112,19 +143,13 @@ object Finder {
       case Right(_) =>
     }
     val (pred, rev) = compile(query, from, until, reversePolicy = reversePolicy)
-    val raw = index.where(pred).select("path").distinct()
-    val oriented =
-      if (rev) raw.select(GraphiteTables.reversePath(col("path")).as("path"))
-      else raw
-    oriented.select(
-      when(col("path").endsWith("."), expr("substring(path, 1, length(path)-1)"))
-        .otherwise(col("path")).as("path"),
-      (!col("path").endsWith(".")).as("is_leaf"))
+    matchedPaths(index, pred, rev)
   }
 
   /** Split find (U2, `finder/split.go:72-128`): brace-split the query
     * into selective disjuncts and run ONE scan with the OR of their
-    * predicates; orientation chosen from the first wildcarded disjunct
+    * predicates (per-disjunct level: brace choices can alter depth);
+    * orientation chosen from the first wildcarded disjunct
     * (`whereFilter`, `split.go:241-259`). Falls back to the plain find
     * when the query doesn't split.
     */
@@ -142,30 +167,27 @@ object Finder {
     val rev = queries.find(Glob.hasWildcard).map(useReverse)
       .getOrElse(useReverse(queries.head))
     val oriented = queries.map(q => if (rev) Paths.reverse(q) else q)
-    val useDaily = from > 0 && until > 0
-    val levelOffset =
-      if (useDaily) { if (rev) Schemas.ReverseLevelOffset else 0 }
-      else { if (rev) Schemas.ReverseTreeLevelOffset else Schemas.TreeLevelOffset }
-    val datePred =
-      if (useDaily)
-        col("date").between(
-          to_date(timestamp_seconds(lit(from))),
-          to_date(timestamp_seconds(lit(until))))
-      else col("date") === lit(Schemas.DefaultTreeDate).cast("date")
-    // per-disjunct level (brace choices can alter depth) + glob, OR'd
-    val pred = datePred && oriented
-      .map(q => col("level") === (Paths.level(q) + levelOffset) &&
-        GlobCompiler.treeGlob(col("path"), q))
-      .reduceLeft(_ || _)
-    val raw = index.where(pred).select("path").distinct()
-    val display =
-      if (rev) raw.select(GraphiteTables.reversePath(col("path")).as("path"))
-      else raw
-    display.select(
-      when(col("path").endsWith("."), expr("substring(path, 1, length(path)-1)"))
-        .otherwise(col("path")).as("path"),
-      (!col("path").endsWith(".")).as("is_leaf"))
+    matchedPaths(index, treePredicate(oriented, rev, from, until), rev)
   }
+
+  /** Distinct storage paths of the tags rows matching parsed terms,
+    * over the daily rows of the range when both bounds are set.
+    */
+  private def taggedPaths(
+      tags: DataFrame,
+      terms: List[Tagged.Term],
+      flags: FeatureFlags,
+      from: Long,
+      until: Long): DataFrame =
+    tags.where(dailyDate(from, until, lit(true)) &&
+        Tagged.wherePredicate(col("tag1"), col("tags"), terms, flags))
+      .select("path").distinct()
+
+  private def parseTagged(expr: String, flags: FeatureFlags): List[Tagged.Term] =
+    Tagged.parseSeriesByTag(expr, flags) match {
+      case Right(t) => t
+      case Left(e)  => throw new IllegalArgumentException(e)
+    }
 
   /** Tagged find with cost-based term ordering from live cardinality
     * stats (J5, `PrepareTaggedTerms`, `finder/tagged.go:614-637`): the
@@ -181,19 +203,9 @@ object Finder {
       configuredCosts: Map[String, Tagged.Costs] = Map.empty,
       from: Long = 0,
       until: Long = 0): DataFrame = {
-    val parsed = Tagged.parseSeriesByTag(expr, flags) match {
-      case Right(t) => t
-      case Left(e)  => throw new IllegalArgumentException(e)
-    }
-    val terms = TagStats.prepareTerms(parsed, Some(countTable), configuredCosts, from, until)
-    val pred = Tagged.wherePredicate(col("tag1"), col("tags"), terms, flags)
-    val datePred =
-      if (from > 0 && until > 0)
-        col("date").between(
-          to_date(timestamp_seconds(lit(from))),
-          to_date(timestamp_seconds(lit(until))))
-      else lit(true)
-    tags.where(datePred && pred).select("path").distinct()
+    val terms = TagStats.prepareTerms(
+      parseTagged(expr, flags), Some(countTable), configuredCosts, from, until)
+    taggedPaths(tags, terms, flags, from, until)
   }
 
   /** Tagged find: seriesByTag expression → distinct storage paths
@@ -208,21 +220,11 @@ object Finder {
       from: Long = 0,
       until: Long = 0,
       tagsMinInQuery: Int = 0): DataFrame = {
-    val terms = Tagged.parseSeriesByTag(expr, flags) match {
-      case Right(t) => t
-      case Left(e)  => throw new IllegalArgumentException(e)
-    }
+    val terms = parseTagged(expr, flags)
     // admission gate (`finder/tagged.go:357-363` → HTTP 403)
     if (tagsMinInQuery > 0 && Tagged.nonWildcardEqCount(terms) < tagsMinInQuery)
       throw new IllegalArgumentException(
         "seriesByTag argument has too much wildcard and regex terms")
-    val pred = Tagged.wherePredicate(col("tag1"), col("tags"), terms, flags)
-    val datePred =
-      if (from > 0 && until > 0)
-        col("date").between(
-          to_date(timestamp_seconds(lit(from))),
-          to_date(timestamp_seconds(lit(until))))
-      else lit(true)
-    tags.where(datePred && pred).select("path").distinct()
+    taggedPaths(tags, terms, flags, from, until)
   }
 }

@@ -168,16 +168,16 @@ object SortedSetJaccard {
   * `struct(centroid_id, sim)` of the max-cosine centroid, ties to the
   * lowest id.
   *
-  * This exists because the join+window assignment shape
+  * A kernel rather than a join: the relational shape
   * (`vectors × broadcast(centroids)` → rank → keep rank 1)
   * MATERIALIZES n·nlist rows before the window prunes them — measured
   * fatal at ×1000 (20.7M vectors × 8192 sqrt-rule cells = 1.7e11
   * intermediate rows; executor death). The kernel evaluates the same
   * nlist cosines per row inside whole-stage codegen and emits exactly
   * n rows: the arithmetic is VecDot's index-ordered double
-  * accumulation with per-centroid norms precomputed once, so the
-  * (id, sim) result is bit-identical to the join+window form
-  * (`AnnIndexSpec`/`IvfKernelSpec` pin it).
+  * accumulation with per-centroid norms precomputed once, so each
+  * sim is bit-identical to `Similarity.cosine` (`IvfKernelSpec` pins
+  * the argmax against a driver-side one).
   *
   * Centroid matrix size is driver-bounded by construction: the
   * [[graft.llm.Similarity.ivfPlan]] sqrt rule caps nlist at 2^18, and
@@ -219,9 +219,9 @@ case class NearestCentroid(
     val d = a.numElements()
     // fail fast on a vector/centroid width mismatch: silently
     // truncating the dot to min(d, |c|) while the vector norm uses
-    // full d would skew every sim — diverging from the join+window
-    // cosine path this kernel claims bit-parity with (which throws
-    // size-mismatch inside VecDot)
+    // full d would skew every sim — diverging from the cosine this
+    // kernel claims bit-parity with (which throws size-mismatch
+    // inside VecDot)
     if (centroidDim >= 0 && d != centroidDim)
       throw new IllegalArgumentException(
         s"nearest_centroid: vector dim $d != centroid dim $centroidDim")
@@ -249,7 +249,7 @@ case class NearestCentroid(
       }
       val sim = dotAcc / (an * norms(j))
       // strictly-better keeps the FIRST (ids sorted ascending) on
-      // ties — the join+window form's (sim DESC, centroid_id ASC).
+      // ties — the (sim DESC, centroid_id ASC) order the twins rank by.
       // Spark's descending sort puts NaN ABOVE every real value
       // (zero vectors / zero centroids cosine to NaN), so NaN beats
       // real, real never beats NaN, NaN ties keep-first.

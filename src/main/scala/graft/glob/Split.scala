@@ -5,7 +5,7 @@ package graft.glob
   * selective disjuncts — each disjunct exposes a longer literal
   * prefix, which is what the storage index (here: parquet min/max
   * stats on the sorted path column) can actually prune on. The
-  * disjuncts are OR'd into ONE scan (`GlobCompiler.globList`), never N
+  * disjuncts are OR'd into ONE scan (`engine.Finder.findSplit`), never N
   * scans.
   */
 object Split {

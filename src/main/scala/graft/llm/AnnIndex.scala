@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * deployments set `graft.checkpoint.dir` to make the cut reliable).
   * The kinds here (`ivf-cells-…`, `maxsim-cells-…`) never collide
   * with its `index` and `tags`. The raw builders
-  * ([[Similarity.ivfAssignKernel]], [[Similarity.maxSimCellGroups]])
+  * ([[Similarity.ivfAssign]], [[Similarity.maxSimCellGroups]])
   * give the same rows without the memo.
   */
 object AnnIndex {
@@ -70,10 +70,7 @@ object AnnIndex {
       quantizerTag: String = "first-ids"): DataFrame =
     memo(spark, dir, s"ivf-cells-$nlist-$quantizerTag-$idCol-$embCol" +
         s"-v${planTag(vectors)}-c${planTag(centroids)}") {
-      // index-build path: the argmax kernel, NOT join+window — the
-      // latter materializes n·nlist rows and dies at x1000 (see
-      // Similarity.ivfAssignKernel)
-      Similarity.ivfAssignKernel(vectors, centroids, idCol, embCol)
+      Similarity.ivfAssign(vectors, centroids, idCol, embCol)
     }
 
   /** The distinct (d_group, centroid_id) inverted membership a
@@ -97,7 +94,6 @@ object AnnIndex {
       quantizerTag: String = "first-ids"): DataFrame =
     memo(spark, dir, s"maxsim-cells-$nlist-$quantizerTag-$groupCol-$idCol-$embCol" +
         s"-d${planTag(docVecs)}-c${planTag(centroids)}") {
-      Similarity.maxSimCellGroups(docVecs, centroids, groupCol, idCol, embCol,
-        kernelAssign = true)
+      Similarity.maxSimCellGroups(docVecs, centroids, groupCol, idCol, embCol)
     }
 }

@@ -36,7 +36,7 @@ object Graph {
     // lineage cut each loop pass re-derives the edge list from its
     // upstream corpus scan (textrank's doc-scan → pair explode →
     // distinct ran ~8× for 4 iterations). Truncate both ONCE before
-    // the loop — same discipline as Dedup.clusters / Similarity.kmeans.
+    // the loop — same discipline as Dedup.clusters / Similarity.kmeansTrain.
     val sym = graft.Lineage.truncateDeferred(
       edges.select(aCol.as("src"), bCol.as("dst"))
         .union(edges.select(bCol.as("src"), aCol.as("dst")))

@@ -229,86 +229,53 @@ object Similarity {
   }
 
   /** One Lloyd's iteration for IVF training: assign every vector to
-    * its nearest centroid, then recompute per-centroid dimension means
-    * — posexplode + ONE two-phase hash aggregate on
-    * (centroid, dimension); fully distributed, no driver math.
-    * Returns long-form (centroid_id, pos, m).
+    * its nearest centroid ([[ivfAssign]]), then recompute per-centroid
+    * dimension means — posexplode + ONE hash aggregate on (centroid,
+    * dimension). Returns long-form (centroid_id, pos, m).
     *
-    * With `exact = true` the mean is a sequential double fold in
-    * vector-id order (collect values, sort by id, left-fold `+`), not
-    * `avg`: parallel partial-agg summation order is nondeterministic
-    * across engines, and a float sum can land on either side of a
-    * round-half boundary. The ordered fold is the same primitive as
-    * [[dot]], which is bit-identical to DuckDB's `list_sum` over an
-    * `ORDER BY`-ed list — used by the oracle-checked `e_kmeans_step`.
-    * The default (`exact = false`) is the streaming two-phase `avg`:
-    * cheaper (no per-group list) and right for the training loop,
-    * where cross-engine bit-equality doesn't matter.
+    * The mean is a sequential double fold in vector-id order (collect
+    * values, sort by id, left-fold `+`), not `avg`: parallel
+    * partial-agg summation order is nondeterministic across engines,
+    * and a float sum can land on either side of a round-half boundary.
+    * The ordered fold is the same primitive as [[dot]], which is
+    * bit-identical to DuckDB's `list_sum` over an `ORDER BY`-ed list —
+    * what puts `e_kmeans_step` under the hash oracle. The training
+    * loop is [[kmeansTrain]].
     */
   def kmeansStep(
       vectors: DataFrame,
       centroids: DataFrame,
       idCol: String = "vec_id",
-      embCol: String = "embedding",
-      exact: Boolean = false): DataFrame = {
+      embCol: String = "embedding"): DataFrame = {
     val assigned = ivfAssign(vectors, centroids, idCol, embCol)
       .select(col(idCol).as("vid"), col("centroid_id"))
-    val exploded = vectors.select(col(idCol).as("vid"), col(embCol).as("emb"))
+    vectors.select(col(idCol).as("vid"), col(embCol).as("emb"))
       .join(assigned, Seq("vid"))
       .select(col("centroid_id"), col("vid"), posexplode(col("emb")))
       .groupBy(col("centroid_id"), col("pos"))
-    if (!exact)
-      exploded.agg(avg(col("col").cast("double")).as("m"))
-    else
-      exploded.agg(
+      .agg(
         aggregate(
           transform(
             array_sort(collect_list(struct(col("vid"), col("col").cast("double").as("v")))),
             e => e.getField("v")),
           lit(0.0), (acc, x) => acc + x).as("s"),
         count(lit(1)).as("c"))
-        .select(col("centroid_id"), col("pos"), (col("s") / col("c")).as("m"))
+      .select(col("centroid_id"), col("pos"), (col("s") / col("c")).as("m"))
   }
 
-  /** Full IVF training loop: deterministic init (lowest-id vectors),
-    * `iters` Lloyd iterations, lineage truncated per round. Returns
-    * (centroid_id, centroid: Array[Double]).
-    */
-  def kmeans(
-      vectors: DataFrame,
-      k: Int,
-      iters: Int,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    var centroids = vectors.where(col(idCol) < k)
-      .select(col(idCol).cast("long").as("centroid_id"), col(embCol).as("centroid"))
-    for (_ <- 0 until iters) {
-      centroids = kmeansStep(vectors, centroids, idCol, embCol)
-        .groupBy("centroid_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("centroid"))
-        .truncateLineageDeferred()
-    }
-    centroids
-  }
-
-  /** Full Lloyd's-loop k-means TRAINING under the hash oracle — the
-    * deterministic sibling of [[kmeans]] with the model-on-driver
-    * shape of [[graft.llm.TextStats.trainQualityClassifier]]: the
-    * MODEL (k·d doubles) lives on the driver, the data never leaves
-    * the cluster, and each iteration is exactly ONE aggregate query
-    * over the lineage-cut vector relation (AQE surfaces it as a map
-    * job plus a reduce job). Where [[kmeans]] (the IVF index
-    * builder, where approximate means are fine) joins a centroid
-    * relation and ranks per-vector over a window — a join plus a
-    * by-id shuffle per round — this trainer compiles the k current
-    * centroids into LITERAL arrays and picks the per-row argmax with
-    * a `greatest()` over (cosine, −centroid_id) structs: assignment
-    * is map-only (zero shuffle), and the only exchange per iteration
-    * is the (centroid, dim) mean hash-aggregate with map-side
-    * partials. Per-iteration driver traffic is k·d doubles —
-    * model-sized, not data-sized — so at 100 TB the loop costs
+  /** Full Lloyd's-loop k-means TRAINING under the hash oracle, with
+    * the model-on-driver shape of
+    * [[graft.llm.TextStats.trainQualityClassifier]]: the MODEL (k·d
+    * doubles) lives on the driver, the data never leaves the cluster,
+    * and each iteration is exactly ONE aggregate query over the
+    * lineage-cut vector relation (AQE surfaces it as a map job plus a
+    * reduce job). The trainer compiles the k current centroids into
+    * LITERAL arrays and picks the per-row argmax with a `greatest()`
+    * over (cosine, −centroid_id) structs: assignment is map-only
+    * (zero shuffle), and the only exchange per iteration is the
+    * (centroid, dim) mean hash-aggregate with map-side partials.
+    * Per-iteration driver traffic is k·d doubles — model-sized, not
+    * data-sized — so at 100 TB the loop costs
     * `iters` scans and nothing else.
     *
     * Determinism contract (what puts the whole trace under the
@@ -389,14 +356,14 @@ object Similarity {
     * engine-portable results): seed with the lowest-id vector, then
     * `k−1` times add the vector farthest (squared L2, lowest id on
     * ties) from its nearest chosen center. Spreads initial centroids
-    * across the data diameter — the standard fix for [[kmeans]]'
+    * across the data diameter — the standard fix for [[kmeansTrain]]'s
     * lowest-id init collapsing into one dense region.
     *
     * Scale shape per round: centers-so-far (≤ k rows) broadcast
     * against ONE corpus scan; the per-vector nearest-center distance
     * is a bounded hash aggregate and the winner a TakeOrdered(1) —
     * per-partition heaps, never a global sort. k rounds = k scans,
-    * the same job-count discipline as [[kmeans]] iterations (k is
+    * the same job-count discipline as [[kmeansTrain]] iterations (k is
     * tens; the corpus is never shuffled at all).
     */
   def kcenterInit(
@@ -691,40 +658,25 @@ object Similarity {
     math.sqrt(math.min(nprobe, nlist).toDouble / nlist)
 
   /** IVF-style coarse quantization: assign each vector to the nearest
-    * of `centroids` (a small broadcast relation of (centroid_id,
-    * centroid)); queries then probe only their cell. Returns the
-    * assignment relation (vector_id → centroid_id, distance).
+    * of `centroids` (a small relation of (centroid_id, centroid));
+    * queries then probe only their cell. Returns the assignment
+    * relation (idCol, centroid_id: Long, sim rounded to 4 places).
     * Size `centroids` with [[ivfPlan]] when building the index from
     * scratch.
+    *
+    * One [[graft.functions.VecMath.nearestCentroid]] argmax per row:
+    * the centroids are driver-collected into the plan and each row
+    * scans them, emitting exactly n rows — never the n·nlist rows a
+    * cross join ranked by a window materializes (that form was
+    * measured fatal at ×1000: 20.7M vectors × 8192 sqrt-rule cells;
+    * executor death). Cosine, ties (highest sim, lowest centroid_id)
+    * and NaN ordering are the conventions the DuckDB twins mirror
+    * (`IvfKernelSpec` pins them against a driver-side argmax); a zero
+    * vector gets sim NaN at the lowest centroid id. Centroids are
+    * bounded by the ivfPlan cap by construction; the guard rejects
+    * anything larger.
     */
   def ivfAssign(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val scored = vectors
-      .select(col(idCol).as("id"), col(embCol).as("emb"))
-      .join(broadcast(centroids.select(col("centroid_id"), col("centroid"))))
-      .withColumn("sim", cosine(col("emb"), col("centroid")))
-    val w = Window.partitionBy("id").orderBy(col("sim").desc, col("centroid_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") === 1)
-      .select(col("id").as(idCol), col("centroid_id"), round(col("sim"), 4).as("sim"))
-  }
-
-  /** [[ivfAssign]] via the [[graft.functions.VecMath.nearestCentroid]]
-    * argmax KERNEL: the join+window form materializes n·nlist rows
-    * before the rank prunes them — measured fatal at ×1000 (20.7M
-    * vectors × 8192 sqrt-rule cells; executor death) — while the
-    * kernel scans the plan-embedded centroid matrix per row and emits
-    * exactly n rows, bit-identical values (`IvfKernelSpec` pins the
-    * parity, including the NaN/tie conventions). Centroids are
-    * driver-collected — bounded by the ivfPlan cap by construction;
-    * the guard rejects anything larger. This is the INDEX-BUILD path
-    * ([[graft.llm.AnnIndex]]); the small fixture-oracle queries keep
-    * the join+window form their DuckDB twins mirror.
-    */
-  def ivfAssignKernel(
       vectors: DataFrame,
       centroids: DataFrame,
       idCol: String = "vec_id",
@@ -738,7 +690,7 @@ object Similarity {
       .limit(maxCentroids + 1)
       .collect()
     require(rows.length <= maxCentroids,
-      s"ivfAssignKernel: centroid relation exceeds the $maxCentroids guard")
+      s"ivfAssign: centroid relation exceeds the $maxCentroids guard")
     val sorted = rows.map { r =>
       val arr = r.getSeq[Any](1).map {
         case f: java.lang.Float  => f.toDouble
@@ -754,16 +706,18 @@ object Similarity {
         round(col("__nc.sim"), 4).as("sim"))
   }
 
-  /** IVF top-k search — the query path the [[ivfAssign]]/[[kmeans]]
+  /** IVF top-k search — the query path the [[ivfAssign]]/[[kmeansTrain]]
     * index exists for. Every stored vector lives in exactly one cell
     * (its nearest centroid); a query probes its `nprobe` nearest cells
     * and scores cosine against only the vectors inside them.
     *
-    * Execution shape at 100 TB: both nearest-centroid passes are
-    * broadcast joins (the centroid table is tiny by construction), the
-    * probe list is `queries × nprobe` rows, and candidate generation is
-    * ONE equi-join on `centroid_id` — the big vector relation shuffles
-    * on its cell key once and no cross-cell pair is ever materialized.
+    * Execution shape at 100 TB: the stored side's nearest centroid
+    * is the per-row argmax of [[ivfAssign]] and the query side's
+    * `nprobe` nearest cells a broadcast join (the centroid table is
+    * tiny by construction), the probe list is `queries × nprobe`
+    * rows, and candidate generation is ONE equi-join on
+    * `centroid_id` — the big vector relation shuffles on its cell key
+    * once and no cross-cell pair is ever materialized.
     * Recall is tunable with `nprobe` exactly like FAISS-style IVF-Flat;
     * the brute-force path ([[bruteKnn]]) stays the exactness baseline.
     *
@@ -1338,17 +1292,12 @@ object Similarity {
       centroids: DataFrame,
       groupCol: String = "group_id",
       idCol: String = "vec_id",
-      embCol: String = "embedding",
-      kernelAssign: Boolean = false): DataFrame = {
-    val assign =
-      if (kernelAssign) ivfAssignKernel(docVecs, centroids, idCol, embCol)
-      else ivfAssign(docVecs, centroids, idCol, embCol)
-    assign
+      embCol: String = "embedding"): DataFrame =
+    ivfAssign(docVecs, centroids, idCol, embCol)
       .select(col(idCol).as("neighbor_id"), col("centroid_id"))
       .join(docVecs.select(col(idCol).as("neighbor_id"),
         col(groupCol).as("d_group")), Seq("neighbor_id"))
       .select(col("d_group"), col("centroid_id")).distinct()
-  }
 
   /** Two-stage (shortlist-fed) MaxSim — the production shape of
     * [[maxSim]], the standard ColBERT serve path (Khattab & Zaharia
@@ -1356,8 +1305,8 @@ object Similarity {
     * document groups, and exact MaxSim runs only on the shortlist.
     *
     * Stage 1 (candidate generation) never touches pairs: stored
-    * vectors key once on their home cell ([[ivfAssign]], a broadcast
-    * join against the √n-sized centroid table), the per-cell → d_group
+    * vectors key once on their home cell ([[ivfAssign]], a per-row
+    * argmax over the √n-sized centroid table), the per-cell → d_group
     * membership collapses to a DISTINCT, query vectors probe their
     * `nprobe` nearest cells, and one equi-join on `centroid_id` yields
     * the distinct (q_group, d_group) shortlist — result-sized, ≈

@@ -74,36 +74,38 @@ object Prom {
       .select("path").distinct()
   }
 
-  /** Session-scoped find memo feeding [[PromQL.evalMatrix]]'s sample
-    * scans: the matched path set is collected ONCE per (tags table,
-    * matcher set) and replayed as a LocalRelation, so repeat selectors
-    * — the dominant dashboard workload, and the two-find shape of
-    * every binop — cost zero Spark jobs after the first evaluation.
-    *
-    * This is the reference's own architecture made explicit: find
-    * runs first (through `common.find-cache`, `render/handler.go:
-    * 41-56`), and the found metrics ship INTO the data query as the
-    * external-data table (`render/data/query.go`). The result is
-    * find-result-sized (driver-safe by the same P14 max-metrics
-    * guards), and the entry is keyed on the tags DataFrame *instance*
-    * — the engine's derived tables are themselves session-memoized
-    * snapshots, so the find over them is exactly as fresh as the
-    * table it reads. Long-running services with streaming index
-    * updates get TTL semantics one level up ([[graft.engine.FindCache]]).
-    */
   /** Outer key: the tags DataFrame INSTANCE (DataFrame has identity
     * equals, so a hit is guaranteed to be the same table — no hash
     * collision can alias two tables), held weakly so per-request
     * frames (the HTTP layer rebuilds its tags view every call) are
-    * collected instead of accumulating; the engine's session-memoized
-    * tables are strongly held by their memo and persist. The inner
-    * per-table map is bounded.
+    * collected instead of accumulating; the session-memoized
+    * `GraphiteTables` tables are strongly held by their memo and
+    * persist. The inner per-table map is bounded.
     */
   private val findMemo =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame,
         java.util.LinkedHashMap[List[(String, String, String)], Array[String]]]())
 
+  /** Find memo feeding [[PromQL.evalMatrix]]'s sample scans: the
+    * matched path set is collected ONCE per (tags DataFrame instance,
+    * matcher set) and replayed as a LocalRelation. This is the
+    * reference's own architecture made explicit: find runs first
+    * (through `common.find-cache`, `render/handler.go:41-56`), and the
+    * found metrics ship INTO the data query as the external-data
+    * table (`render/data/query.go`). The result is find-result-sized
+    * (driver-safe by the same P14 max-metrics guards).
+    *
+    * A hit needs the SAME DataFrame instance. Callers holding the
+    * session-memoized `GraphiteTables.tags` (the registry entries) hit
+    * across evaluations. The HTTP server opens a new `Store.tags`
+    * frame per call (`HttpApi.tagsTable`), so a PromQL request hits
+    * only within its own evaluation (a selector repeated in one
+    * expression, the two finds of a binop over one frame), never an
+    * earlier request's entry: across requests each selector costs its
+    * find job again. The server's TTL'd [[graft.engine.FindCache]]
+    * serves `/metrics/find` only, not PromQL.
+    */
   def findPathsCached(
       tags: DataFrame,
       matchers: Seq[(String, String, String)]): DataFrame = {

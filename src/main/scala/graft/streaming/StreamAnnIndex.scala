@@ -10,7 +10,7 @@ import graft.llm.Similarity
   * (`maxSimShortlist`, `ivfSearch(assignment = …)`) read the cell
   * assignment as ingest-owned state; this maintainer is what owns it:
   * per micro-batch, arriving vectors are assigned to their home cell
-  * against the broadcast centroid table (one `ivfAssign` over the
+  * against the centroid table (one `ivfAssign` argmax over the
   * batch — O(|batch|·nlist·d), never the corpus) and appended to the
   * persisted assignment store.
   *
@@ -37,9 +37,7 @@ object StreamAnnIndex {
       idCol: String = "vec_id",
       embCol: String = "embedding"): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
-      // argmax kernel, not join+window: a backfill batch × a large
-      // trained cell count must not materialize |batch|·nlist rows
-      Similarity.ivfAssignKernel(batch, centroids, idCol, embCol)
+      Similarity.ivfAssign(batch, centroids, idCol, embCol)
         .write.mode("overwrite")
         .parquet(s"$storeDir/batch_id=$batchId")
     }
@@ -233,7 +231,7 @@ object StreamAnnIndex {
       .sorted.lastOption.map(_ + 1L).getOrElse(0L)
     val (_, cents) = Similarity.kmeansTrain(vectors, nlist, iters, idCol, embCol)
     cents.write.mode("overwrite").parquet(s"${epochDir(base, next)}/centroids")
-    Similarity.ivfAssignKernel(vectors, cents, idCol, embCol)
+    Similarity.ivfAssign(vectors, cents, idCol, embCol)
       .write.mode("overwrite")
       .parquet(s"${epochDir(base, next)}/assignment/batch_id=-1")
     val (fs, marker) = fsOf(spark, s"${epochDir(base, next)}/_COMPLETE")
@@ -265,7 +263,7 @@ object StreamAnnIndex {
       val e = currentEpoch(spark, base).getOrElse(
         throw new IllegalStateException(s"no epoch at $base: reindex first"))
       val cents = spark.read.parquet(s"${epochDir(base, e)}/centroids")
-      Similarity.ivfAssignKernel(batch, cents, idCol, embCol)
+      Similarity.ivfAssign(batch, cents, idCol, embCol)
         .write.mode("overwrite")
         .parquet(s"${epochDir(base, e)}/assignment/batch_id=$batchId")
     }
@@ -314,7 +312,7 @@ object StreamAnnIndex {
       // ONE kernel pass per micro-batch: the cached assignment feeds
       // both the store write and the gauge histogram (recomputing the
       // kernel for the histogram paid the batch codec twice)
-      val assigned = Similarity.ivfAssignKernel(batch, cents, idCol, embCol)
+      val assigned = Similarity.ivfAssign(batch, cents, idCol, embCol)
         .persist()
       try {
         assigned.write.mode("overwrite")

@@ -46,7 +46,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "p_query_atan2", "p_query_trig", "d_mixture", "d_mixture_apply",
     "ev_funnel", "ev_retention",
     // round-8 batch 2: ratio filter, calendar fns, chunking,
-    // normalization (vocab / LM / recall / semdedup / ivfpq carry a
+    // normalization (vocab / LM / recall / ivfpq carry a
     // legitimate 1-row-or-tiny broadcast nested loop and audit in the
     // relaxed broadcast-bounded group below)
     "p_query_limit_ratio", "p_query_datefns", "p_query_date_vec",
@@ -81,7 +81,12 @@ class PlanAuditSpec extends AnyFunSuite {
     // group — it now serves from AnnIndex.ivfCells (the argmax
     // KERNEL: centroids ride a guarded model-sized literal, so the
     // plan has no join at all, let alone a nested loop)
-    "e_cell_balance")
+    "e_cell_balance",
+    // the IVF assignment is that same kernel everywhere, so the
+    // assignment and Lloyd-step queries and semantic dedup (whose
+    // only nested loop was the assignment's centroid cross) have none
+    "e_ivf_assign", "e_kmeans_step", "e_kmeans_kcenter", "e_kmeans_trained",
+    "d_semdedup")
 
   for (name <- audited) {
     test(s"$name: no cartesian or nested-loop join in the physical plan") {
@@ -103,7 +108,7 @@ class PlanAuditSpec extends AnyFunSuite {
   // their correct shape, so they audit here rather than in the strict
   // no-BNLJ list above.
   for (name <- Seq("e_knn_brute", "e_ivf_search", "d_vocab",
-      "d_unigram_ppl", "d_bigram_ppl", "e_ivf_recall", "d_semdedup",
+      "d_unigram_ppl", "d_bigram_ppl", "e_ivf_recall",
       "e_ivfpq_search", "e_knn_classify", "d_curate_decon",
       // TF-IDF's corpus N rides a 1-row broadcast scalar; the df join
       // itself is a shuffled equi-join (asserted below)

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the adaptive tiny-input spread rule
   * ([[Tuning.spreadTinyInput]]): spread fires exactly when the input
-  * under-fills the session AND is cheap to move; the kill switch and
-  * the at-scale no-op path stay no-ops.
+  * under-fills the session AND is cheap to move; the per-construction
+  * opt-out and the at-scale no-op path stay no-ops.
   */
 class TuningSpreadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,11 +34,11 @@ class TuningSpreadSpec extends AnyFunSuite {
   }
 
   test("kill switch disables the spread") {
-    spark.conf.set(Tuning.SpreadEnabledKey, "false")
-    try {
-      val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      val spread = Tuning.spreadTinyInput(df)
-      assert(spread.queryExecution.logical eq df.queryExecution.logical)
-    } finally spark.conf.unset(Tuning.SpreadEnabledKey)
+    val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // the construction-scoped opt-out (what `SparkEntry.noSpread`
+    // wraps): the identical plan back inside, the spread again after
+    val inside = Tuning.withSpreadDisabled(Tuning.spreadTinyInput(df))
+    assert(inside.queryExecution.logical eq df.queryExecution.logical)
+    assert(!(Tuning.spreadTinyInput(df).queryExecution.logical eq df.queryExecution.logical))
   }
 }

@@ -9,7 +9,7 @@ import graft.SparkTestBase
   * relation per (session, dir, kind) — repeated references hit the
   * same LogicalRDD (exchange reuse), distinct key components get
   * distinct entries, and the memoized relation is row-identical to
-  * the raw assignment plan and to its kernel.
+  * the raw assignment.
   */
 class AnnIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,17 +34,13 @@ class AnnIndexSpec extends AnyFunSuite {
       vecs.withColumn("group_id", col("vec_id")), cents, nlist = 2)
     assert(!(d eq a))
 
-    // rows are exactly the raw assignment plan's
-    val raw = Similarity.ivfAssign(vecs, cents).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == raw)
-    assert(raw == Set(1L -> 0L, 3L -> 0L, 2L -> 1L))
-
-    // and exactly the rows of the kernel the memo materializes,
-    // similarity included
+    // rows are exactly those of the raw assignment (the argmax kernel
+    // the memo materializes), similarity included
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(a) == rows(Similarity.ivfAssignKernel(vecs, cents)))
+    val raw = rows(Similarity.ivfAssign(vecs, cents))
+    assert(rows(a) == raw)
+    assert(raw.map(r => r._1 -> r._2) == Set(1L -> 0L, 3L -> 0L, 2L -> 1L))
   }
 
   test("plan fingerprint: different derivations never share an entry; " +

@@ -107,12 +107,13 @@ class ClusterSpec extends AnyFunSuite {
 
   test("kmeans: distributed Lloyd iterations converge to cluster means") {
     import spark.implicits._
-    // two obvious clusters around (1,0) and (0,1); ids 0/1 seed one each
+    // two obvious clusters around (1,0) and (0,1); the two lowest ids
+    // (0 and 1) seed one centroid each
     val vecs = Seq(
       (0L, Seq(1.0f, 0.1f)), (2L, Seq(0.9f, 0.0f)), (4L, Seq(1.1f, -0.1f)),
       (1L, Seq(0.1f, 1.0f)), (3L, Seq(0.0f, 0.9f)), (5L, Seq(-0.1f, 1.1f)))
       .toDF("vec_id", "embedding")
-    val cents = Similarity.kmeans(vecs, k = 2, iters = 3).collect()
+    val cents = Similarity.kmeansTrain(vecs, k = 2, iters = 3)._2.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(cents.keySet == Set(0L, 1L))
     assert(math.abs(cents(0L).head - 1.0) < 0.01 && math.abs(cents(0L)(1) - 0.0) < 0.01)

@@ -1,38 +1,67 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** The argmax-centroid kernel must be BIT-IDENTICAL to the
-  * join+window assignment it replaces on the index-build path — same
-  * cosine accumulation, same (sim DESC, centroid_id ASC) tie
-  * convention, same NaN-above-everything ordering for degenerate
-  * vectors. The kernel exists because the join+window form
-  * materializes n·nlist rows (fatal at ×1000: 1.7e11 intermediate
-  * rows); parity here is what lets AnnIndex swap it in under the
-  * oracle-gated serve queries.
+/** The IVF assignment ([[Similarity.ivfAssign]], the argmax-centroid
+  * kernel) against a brute argmax computed here on the driver over
+  * the collected vectors: the same index-ordered double cosine
+  * ([[Similarity.cosine]]'s dot / (norm · norm)), the highest sim
+  * wins with NaN above every real value, ties keep the lowest
+  * centroid id, and the sim is rounded HALF_UP to 4 places as
+  * Spark's `round` does. These conventions are what the DuckDB twins
+  * of the assignment queries mirror.
   */
 class IvfKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def pairs(df: org.apache.spark.sql.DataFrame) =
+  private def pairs(df: DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  test("kernel == join+window on the fixture corpus (rounded sims included)") {
+  private def doubles(xs: Seq[Any]): Array[Double] = xs.map {
+    case f: java.lang.Float  => f.toDouble
+    case d: java.lang.Double => d.doubleValue
+  }.toArray
+
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    for (i <- a.indices) s += a(i) * b(i)
+    s
+  }
+
+  /** (vec_id, centroid_id, round(sim, 4)) for every vector. */
+  private def bruteAssign(vecs: DataFrame, cents: DataFrame) = {
+    val cs = cents.select(col("centroid_id").cast("long"), col("centroid")).collect()
+      .map(r => (r.getLong(0), doubles(r.getSeq[Any](1)))).sortBy(_._1)
+    vecs.select(col("vec_id").cast("long"), col("embedding")).collect().map { r =>
+      val v = doubles(r.getSeq[Any](1))
+      val vn = math.sqrt(dot(v, v))
+      val (id, sim) = cs.map { case (cid, c) => (cid, dot(v, c) / (vn * math.sqrt(dot(c, c)))) }
+        .reduceLeft { (best, x) =>
+          val better = if (x._2.isNaN) !best._2.isNaN else x._2 > best._2
+          if (better) x else best
+        }
+      val rounded =
+        if (sim.isNaN) sim
+        else BigDecimal(sim).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (r.getLong(0), id, rounded)
+    }.toSet
+  }
+
+  test("assignment == brute argmax on the fixture corpus (rounded sims included)") {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val nlist = Similarity.ivfPlan(vecs.count())
     val cents = vecs.where(col("vec_id") < nlist)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-    val a = pairs(Similarity.ivfAssign(vecs, cents)
-      .select(col("vec_id"), col("centroid_id").cast("long"), col("sim")))
-    val b = pairs(Similarity.ivfAssignKernel(vecs, cents))
-    assert(a == b)
-    assert(a.nonEmpty)
+    val a = pairs(Similarity.ivfAssign(vecs, cents))
+    assert(a == bruteAssign(vecs, cents))
+    assert(a.size == vecs.count())
   }
 
-  test("tie convention matches the window sort; zero vectors degrade, not throw") {
+  test("ties keep the lowest centroid id; a zero vector is NaN at centroid 0") {
     import spark.implicits._
     val cents = Seq(
       (0L, Seq(1f, 0f)), (1L, Seq(1f, 0f)), // duplicate centroid → tie
@@ -40,22 +69,15 @@ class IvfKernelSpec extends AnyFunSuite {
       .toDF("centroid_id", "centroid")
     val vecs = Seq((10L, Seq(0.9f, 0.1f))) // ties centroids 0 and 1 → 0
       .toDF("vec_id", "embedding")
-    val a = pairs(Similarity.ivfAssign(vecs, cents)
-      .select(col("vec_id"), col("centroid_id").cast("long"), col("sim")))
-    val b = pairs(Similarity.ivfAssignKernel(vecs, cents))
-    assert(a == b, s"window=$a kernel=$b")
+    val b = pairs(Similarity.ivfAssign(vecs, cents))
+    assert(b == bruteAssign(vecs, cents))
     assert(b.head._2 == 0L, "tie must keep the lowest centroid id")
 
-    // a zero vector makes the join+window form THROW under ANSI
-    // (cosine divides by a zero norm); the kernel is a superset —
-    // Java double arithmetic NaNs instead, and all-NaN keeps the
-    // lowest centroid id (the order Spark's descending sort would use)
+    // a zero vector's cosine is 0/0: Java double arithmetic gives NaN
+    // for every centroid, and all-NaN keeps the lowest centroid id
     val zero = Seq((11L, Seq(0f, 0f))).toDF("vec_id", "embedding")
-    intercept[Exception] {
-      Similarity.ivfAssign(zero, cents).collect()
-    }
-    val z = Similarity.ivfAssignKernel(zero, cents).collect()
-    assert(z.length == 1 && z.head.getLong(1) == 0L)
+    val z = Similarity.ivfAssign(zero, cents).collect()
+    assert(z.length == 1 && z.head.getLong(1) == 0L && z.head.getDouble(2).isNaN)
   }
 
   test("guards: oversized centroid relation fails bounded, dim mismatch throws") {
@@ -66,7 +88,7 @@ class IvfKernelSpec extends AnyFunSuite {
     // the guard fires from the LIMITed collect — the driver never
     // materializes more than maxCentroids + 1 rows
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfAssignKernel(vecs, cents, maxCentroids = 2)
+      Similarity.ivfAssign(vecs, cents, maxCentroids = 2)
     }
     assert(e.getMessage.contains("exceeds the 2 guard"))
 
@@ -74,7 +96,7 @@ class IvfKernelSpec extends AnyFunSuite {
     // not silently score a truncated dot product
     val wide = Seq((11L, Seq(0.5f, 0.5f, 0.5f))).toDF("vec_id", "embedding")
     val e2 = intercept[Exception] {
-      Similarity.ivfAssignKernel(wide, cents).collect()
+      Similarity.ivfAssign(wide, cents).collect()
     }
     assert(e2.getMessage != null)
   }
@@ -82,9 +104,6 @@ class IvfKernelSpec extends AnyFunSuite {
   test("trained (double) centroids assign identically through the kernel") {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansTrain(vecs, k = 4, iters = 2)._2
-    val a = pairs(Similarity.ivfAssign(vecs, cents)
-      .select(col("vec_id"), col("centroid_id").cast("long"), col("sim")))
-    val b = pairs(Similarity.ivfAssignKernel(vecs, cents))
-    assert(a == b)
+    assert(pairs(Similarity.ivfAssign(vecs, cents)) == bruteAssign(vecs, cents))
   }
 }

@@ -134,7 +134,7 @@ class StreamAnnIndexSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "centroid_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(pairs(degraded) == pairs(Similarity.ivfAssignKernel(
+    assert(pairs(degraded) == pairs(Similarity.ivfAssign(
       all, StreamAnnIndex.epochCentroids(spark, base))))
 
     // re-index on the grown corpus: retrain, backfill, atomic flip
@@ -146,7 +146,7 @@ class StreamAnnIndexSpec extends AnyFunSuite {
     assert(shareAfter <= 0.65,
       s"re-index should restore balance: $shareBefore -> $shareAfter")
     // served == inline on the NEW quantizer
-    assert(pairs(restored) == pairs(Similarity.ivfAssignKernel(
+    assert(pairs(restored) == pairs(Similarity.ivfAssign(
       all, StreamAnnIndex.epochCentroids(spark, base))))
 
     // post-swap arrivals index under the new quantizer, no restart:
@@ -208,7 +208,7 @@ class StreamAnnIndexSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "centroid_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(pairs(served) == pairs(Similarity.ivfAssignKernel(
+    assert(pairs(served) == pairs(Similarity.ivfAssign(
       all, StreamAnnIndex.epochCentroids(spark, base))))
     // the re-trained quantizer restores balance below the bar
     assert(StreamAnnIndex.maxCellShare(served) <= 0.6)

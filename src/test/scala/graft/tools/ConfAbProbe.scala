@@ -10,22 +10,13 @@ import org.apache.spark.sql.SparkSession
   *
   * `Test/runMain graft.tools.ConfAbProbe <confKey> <baseVal> <optVal> q1,q2,...`
   *
-  * Example, the adaptive scan spread ([[graft.Tuning.spreadTinyInput]]):
-  * `ConfAbProbe graft.spread.enabled false true <names>`, with `<names>`
-  * the 26 queries on spread-instrumented paths, joined by commas:
-  * d_bpe_encode, d_simhash, d_simhash_pairs, d_simhash_recall,
-  * d_simhash_recall_banded, d_unigram_encode, d_wordpiece_encode, m_afp,
-  * m_afp_pairs, m_avi_frames, m_avi_motion, m_avi_motion_banded,
-  * m_dhash, m_dhash_dedup, m_dhash_pairs, m_dhash_wide,
-  * m_dhash_wide_pairs, m_features, m_frames, m_img_entropy,
-  * m_png_features, m_png_resize, m_resize, m_vad_segments,
-  * m_wav_features, q_topk.
+  * Example, whole-stage codegen on two codec queries:
+  * `ConfAbProbe spark.sql.codegen.wholeStage false true m_png_resize,m_avi_motion_banded`.
   *
-  * d_split_media, d_split_media_linear and m_afp_dedup are left out on
-  * purpose: their entries are wrapped in `SparkEntry.noSpread`, which
-  * forces the spread off during construction in BOTH arms, so their
-  * ratio reads ~1.0 whatever the spread's real effect. Measure those
-  * by editing the entry, not by this probe.
+  * The adaptive tiny-input spread ([[graft.Tuning.spreadTinyInput]])
+  * has no session conf: measure it by wrapping an entry's body in
+  * `SparkEntry.noSpread` (the construction-scoped opt-out) in one
+  * build and not in the other.
   */
 object ConfAbProbe {
   def main(args: Array[String]): Unit = {
